@@ -198,6 +198,12 @@ object ComponentMain {
 
   /** Extractor run (E1): scan with projection/limit/snapshot pin, then
     * quoted CSV + manifest, or Parquet (`ex/src/component.py:28-86`).
+    * Like PyIceberg's `scan(limit=…)`, the cap stops planning once it is
+    * covered: on a delete-free snapshot the scan plans only the manifest-
+    * order file prefix whose row counts reach `scan_limit` and enforces
+    * the limit itself, so the export is one Spark job with no shuffle and
+    * always the same rows for the same snapshot. A Parquet export then
+    * writes one part file per planned data file.
     */
   private def extract(spark: SparkSession, cat: IceCatalog,
       cfg: ComponentConfig, src: SourceConf, dataDir: String): Unit = {

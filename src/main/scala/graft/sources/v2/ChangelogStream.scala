@@ -250,7 +250,7 @@ private[v2] class IceLiteChangelogStream(
     // positions, and Spark refuses mixed row/columnar partitions
     val physical = (dataSchema.fields ++ partSchema.fields).map(_.name)
     val perm = tableSchema.fieldNames.map(physical.indexOf(_)).toSeq
-    IceLiteV2.readerFactory(dataSchema, partSchema, Array.empty, -1,
+    IceLiteV2.readerFactory(dataSchema, partSchema, Array.empty,
       if (perm == perm.indices) Nil else perm, rowMode = true)
   }
 }

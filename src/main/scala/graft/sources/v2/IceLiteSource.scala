@@ -34,7 +34,9 @@ import graft.icelite.{FilePrune, FileStat, FileStats, MetaIo, PartValues}
   * reaches the parquet page level via a requested reader schema),
   * `SupportsPushDownFilters` (predicates prune files from the plan via
   * manifest stats and partition values), and `SupportsPushDownLimit`
-  * (readers stop early). SURVEY §7 step 6.
+  * (where manifest row counts prove it, the scan plans only the file prefix
+  * covering the limit and enforces it exactly, so Spark drops its Limit and
+  * shuffle; otherwise readers stop early). SURVEY §7 step 6.
   *
   * Execution: each task hands its file to Spark's own vectorized parquet
   * reader and returns `ColumnarBatch`es (`supportColumnarReads`), so decode
@@ -228,7 +230,7 @@ private[v2] object IceLiteV2 {
     * Shared by the batch scan and the micro-batch stream.
     */
   def readerFactory(dataSchema: StructType, partSchema: StructType,
-      filters: Array[org.apache.spark.sql.sources.Filter], limit: Int,
+      filters: Array[org.apache.spark.sql.sources.Filter],
       // serving order as indices into dataSchema++partSchema; empty =
       // physical order (data columns then constant partition vectors).
       // The STREAMING path must serve the relation's declared column order
@@ -266,7 +268,7 @@ private[v2] object IceLiteV2 {
       "spark.sql.session.timeZone" -> java.util.TimeZone.getDefault.getID
     ).foreach { case (k, dflt) => c.set(k, spark.conf.get(k, dflt)) }
     new IceLiteReaderFactory(
-      new SerializableConfiguration(c), dataSchema.json, partSchema.json, limit,
+      new SerializableConfiguration(c), dataSchema.json, partSchema.json,
       outputPermutation, rowMode, posCol)
   }
 }
@@ -483,6 +485,7 @@ private[v2] class IceLiteScanBuilder(
   private var wantsPosCol = false
   private var pushed: Array[Filter] = Array.empty
   private var limit: Int = -1
+  private var exactLimit = false
   private var aggResult: Option[(StructType, Seq[InternalRow])] = None
 
   /** Identity-partition columns whose value decodes exactly from EVERY
@@ -597,7 +600,24 @@ private[v2] class IceLiteScanBuilder(
   }
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def pushLimit(n: Int): Boolean = { limit = n; false /* partial: per-partition */ }
+  /** LIMIT n is enforced EXACTLY by the scan whenever the manifest proves
+    * how many rows each planned file serves: no row-level hook, no
+    * changelog/streaming scan, no outstanding deletes, every file's row
+    * count known, and no pushed filter except partition-exact ones (file
+    * pruning then IS the filter). [[IceLiteScan]] plans only the shortest
+    * manifest-order file prefix whose row counts cover n and caps each
+    * input partition, so Spark drops the Limit and its single-partition
+    * Exchange. Otherwise the limit stays partial: each reader stops after
+    * n rows and Spark re-applies the exact limit above the scan.
+    */
+  override def pushLimit(n: Int): Boolean = {
+    limit = n
+    exactLimit = mayClaimExact && deletes.isEmpty && aggResult.isEmpty &&
+      files.forall(_.rows >= 0) && exactOf(pushed).length == pushed.length
+    exactLimit
+  }
+
+  override def isPartiallyPushed(): Boolean = !exactLimit
 
   override def build(): Scan = aggResult match {
     case Some((schema, rows)) if rowLevel.isEmpty =>
@@ -607,7 +627,7 @@ private[v2] class IceLiteScanBuilder(
         files, pushed, limit, rowLevel, wantsFileCol, wantsPosCol,
         streamMaxFiles, renames, widened, specs, deletes, sortOrder,
         changelogMode, streamFrom, streamFilters, streamMaxBytes,
-        addedColumns = addedColumns)
+        addedColumns = addedColumns, exactLimit = exactLimit)
   }
 }
 
@@ -1923,7 +1943,9 @@ private[v2] class IceLiteScan(
     // byte-based streaming admission cap (`maxBytesPerTrigger`)
     streamMaxBytes: Option[Long] = None,
     // column-addition ledger (manifest NDV column statistics)
-    addedColumns: Seq[graft.icelite.ColumnAdd] = Nil)
+    addedColumns: Seq[graft.icelite.ColumnAdd] = Nil,
+    // `limit` is enforced exactly here (see IceLiteScanBuilder.pushLimit)
+    exactLimit: Boolean = false)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning
     with SupportsReportOrdering with HasPlannedFiles {
@@ -1981,6 +2003,9 @@ private[v2] class IceLiteScan(
     // transform entries participate too: a runtime In(src, keys) prunes
     // through bucket/days/truncate via TransformPrune.
     if (rowLevel.isDefined) return Array.empty
+    // an exact LIMIT planned a fixed covering prefix: a runtime filter
+    // pruning a file out of it would leave the scan short of the limit
+    if (exactLimit) return Array.empty
     val partSrcs = PartField.sources(partitionBy).distinct
       .filter(tableSchema.fieldNames.contains)
     // advertising a bloomed column costs nothing when no filter comes;
@@ -2087,9 +2112,17 @@ private[v2] class IceLiteScan(
   }
 
   // static pruning only — description/statistics are plan-time artifacts;
-  // runtime filters re-prune in planInputPartitions
-  private lazy val planned: Seq[(FileStat, Map[String, Option[String]])] =
-    prune(filters.toSeq)
+  // runtime filters re-prune in planInputPartitions. An exact LIMIT keeps
+  // the shortest manifest-order prefix whose row counts cover it.
+  private lazy val planned: Seq[(FileStat, Map[String, Option[String]])] = {
+    val pruned = prune(filters.toSeq)
+    if (!exactLimit) pruned
+    else pruned.zip(owedAt(pruned)).takeWhile(_._2 > 0).map(_._1)
+  }
+
+  /** Rows the limit still owes when each file of `fs` starts, in order. */
+  private def owedAt(fs: Seq[(FileStat, _)]): Seq[Long] =
+    fs.scanLeft(limit.toLong)((owed, f) => owed - f._1.rows)
 
   /** Diagnostic: data-file paths surviving STATIC pruning (pushed filters
     * + partition values + manifest stats; runtime filters excluded). The
@@ -2200,7 +2233,9 @@ private[v2] class IceLiteScan(
   override def description(): String =
     s"icelite $tableName files=${files.size} planned=${planned.size} " +
       s"readSchema=${readSchema().fieldNames.mkString(",")} " +
-      s"pushedFilters=[${filters.mkString(", ")}] limit=$limit"
+      s"pushedFilters=[${filters.mkString(", ")}] " +
+      (if (limit < 0) "limit=none"
+      else s"limit=$limit ${if (exactLimit) "exact" else "partial"}")
 
   override def planInputPartitions(): Array[InputPartition] = {
     require(!changelogMode,
@@ -2208,11 +2243,14 @@ private[v2] class IceLiteScan(
         "(readStream; batch consumers use the icelite_changes TVF)")
     val budgetedRuntime = budgetRuntime(runtimeFilters)
     val effective =
-      if (budgetedRuntime.isEmpty) planned
+      if (budgetedRuntime.isEmpty || exactLimit) planned
       else prune((filters ++ budgetedRuntime).toSeq)
     // a row-level operation replaces exactly the files its scan planned
     rowLevel.foreach(_.recordPlanned(effective.map(_._1)))
-    effective.map { case (f, raw) =>
+    // exact LIMIT: the rows still owed when a planned file starts cap its
+    // partition (only the last file of the prefix serves part of itself)
+    effective.zip(owedAt(effective)).map { case ((f, raw), owed) =>
+      val rowCap = if (exactLimit) owed.toInt else limit
       val constants =
         if (wantsFileCol) raw + (IceLiteScan.FileMetaCol -> Some(f.path))
         else raw
@@ -2270,7 +2308,7 @@ private[v2] class IceLiteScan(
       if (!evolved && missingKeys.isEmpty)
         IceLiteInputPartition(f.path, f.bytes, constants,
           phys.getOrElse(Nil), deleteFiles = delFor,
-          eqDeletes = eqTasks, partKey = key): InputPartition
+          eqDeletes = eqTasks, partKey = key, rowCap = rowCap): InputPartition
       else {
         val localNames = fileData.fieldNames ++ filePart.fieldNames
         val globalNames = dataSchema.fieldNames ++ partSchema.fieldNames
@@ -2283,7 +2321,7 @@ private[v2] class IceLiteScan(
           fileDataSchemaJson = fileData.json,
           filePartSchemaJson = filePart.json,
           filePerm = perm, deleteFiles = delFor,
-          eqDeletes = eqTasks, partKey = key): InputPartition
+          eqDeletes = eqTasks, partKey = key, rowCap = rowCap): InputPartition
       }
     }.toArray
   }
@@ -2395,6 +2433,7 @@ private[v2] class IceLiteScan(
       OptionalLong.of(planned.map(_._1.bytes).sum)
     override def numRows(): OptionalLong =
       if (planned.exists(_._1.rows < 0)) OptionalLong.empty()
+      else if (exactLimit) OptionalLong.of(math.min(limit.toLong, planned.map(_._1.rows).sum))
       else OptionalLong.of(planned.map(_._1.rows).sum)
     override def columnStats()
         : java.util.Map[org.apache.spark.sql.connector.expressions.NamedReference,
@@ -2436,7 +2475,7 @@ private[v2] class IceLiteScan(
       planned.exists { case (f, _) => deletes.exists(d =>
         d.dataFiles.contains(f.path) ||
           graft.icelite.FileStats.eqAppliesTo(d, f, tableSchema)) })
-    IceLiteV2.readerFactory(dataSchema, partSchema, rgFilters, limit,
+    IceLiteV2.readerFactory(dataSchema, partSchema, rgFilters,
       rowMode = rowMode, posCol = wantsPosCol)
   }
 
@@ -2680,7 +2719,7 @@ private[v2] class IceLiteMicroBatchStream(
     // declared order, or a partition column anywhere but last misbinds.
     val physical = (dataSchema.fields ++ partSchema.fields).map(_.name)
     val perm = tableSchema.fieldNames.map(physical.indexOf(_)).toSeq
-    IceLiteV2.readerFactory(dataSchema, partSchema, Array.empty, -1,
+    IceLiteV2.readerFactory(dataSchema, partSchema, Array.empty,
       if (perm == perm.indices) Nil else perm)
   }
 }
@@ -2750,7 +2789,11 @@ private[v2] case class IceLiteInputPartition(
     // catalyst values of the file's partition key, in spec order — set only
     // when the scan reports a KeyGroupedPartitioning (storage-partitioned
     // joins); Spark groups same-key partitions into one co-located task
-    partKey: Seq[Any] = Nil)
+    partKey: Seq[Any] = Nil,
+    // rows this partition's reader may serve: what an exact LIMIT still
+    // owes at this file, or the pushed limit itself when it is partial
+    // (Spark re-applies it above the scan); -1 = no cap
+    rowCap: Int = -1)
     extends InputPartition with HasPartitionKey {
 
   override def partitionKey(): InternalRow =
@@ -2766,7 +2809,7 @@ private[v2] case class EqDeleteTask(
 
 private[v2] class IceLiteReaderFactory(
     conf: SerializableConfiguration, dataSchemaJson: String,
-    partSchemaJson: String, limit: Int,
+    partSchemaJson: String,
     outputPermutation: Seq[Int] = Nil,
     rowMode: Boolean = false,
     posCol: Boolean = false)
@@ -2795,7 +2838,7 @@ private[v2] class IceLiteReaderFactory(
     val p = partition.asInstanceOf[IceLiteInputPartition]
     val (requested, partSchema, perm) = resolve(p)
     new IceLiteRowReader(p.file, p.length, p.partValues, conf, requested,
-      partSchema, limit, p.deleteFiles, perm.toArray, p.eqDeletes, posCol,
+      partSchema, p.rowCap, p.deleteFiles, perm.toArray, p.eqDeletes, posCol,
       p.matchDeleteFiles, p.matchEqDeletes)
   }
 
@@ -2807,7 +2850,7 @@ private[v2] class IceLiteReaderFactory(
       "partitions with merge-on-read deletes must be read row-based")
     val (requested, partSchema, perm) = resolve(p)
     new IceLiteColumnarReader(
-      p.file, p.length, p.partValues, conf, requested, partSchema, limit,
+      p.file, p.length, p.partValues, conf, requested, partSchema, p.rowCap,
       perm.toArray)
   }
 }
@@ -2854,8 +2897,11 @@ private[v2] class IceLiteColumnarReader(
     if (limit >= 0 && emitted >= limit) return false
     if (!reader.nextKeyValue()) return false
     batch = reader.getCurrentValue.asInstanceOf[ColumnarBatch]
-    // over-delivery within the last batch is fine: pushLimit returned
-    // `false` (partial), so Spark re-applies the exact limit above
+    // trim the last batch to the limit: under an exact LIMIT this reader is
+    // the only enforcement (no Limit above the scan); under a partial one
+    // Spark re-applies the limit anyway
+    if (limit >= 0 && emitted + batch.numRows() > limit)
+      batch.setNumRows((limit - emitted).toInt)
     emitted += batch.numRows()
     true
   }

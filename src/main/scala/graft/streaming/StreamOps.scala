@@ -736,12 +736,22 @@ object StreamOps {
         // the guard mirrors the stream's real final watermark: min over the
         // two watermarked inputs' maxima (see the QDef comment), minus the
         // 1h delay and the 30min interval plus 1min slack
-        val cutoff = QUtil.t(s, dir, "events")
-          .agg((least(
-            max(when(col("event_type") === "click", col("ts"))),
-            max(when(col("event_type") === "view", col("ts"))))
-            - expr("interval 91 minutes")).as("c"))
-          .collect()(0).getTimestamp(0)
+        // LEAST skips NULLs, so a fixture without clicks or without views
+        // would silently take the other side's maximum: refuse it instead
+        val guard = QUtil.t(s, dir, "events")
+          .agg(
+            max(when(col("event_type") === "click", col("ts"))).as("click_max"),
+            max(when(col("event_type") === "view", col("ts"))).as("view_max"))
+          .select(
+            (col("click_max").isNotNull && col("view_max").isNotNull).as("both"),
+            (least(col("click_max"), col("view_max"))
+              - expr("interval 91 minutes")).as("c"))
+          .collect()(0)
+        if (!guard.getBoolean(0))
+          throw new IllegalStateException(
+            "st9b: events must hold both click and view events to derive " +
+              "the outer-join watermark guard")
+        val cutoff = guard.getTimestamp(1)
         out.filter(col("view_id").isNotNull || col("click_ts") <= lit(cutoff))
           .select("click_id", "view_id", "user_id")
           .orderBy("click_id", "view_id")

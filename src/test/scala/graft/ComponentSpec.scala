@@ -3,6 +3,8 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions.col
 
 import graft.icelite.IceCatalog
@@ -53,6 +55,62 @@ class ComponentSpec extends SparkSpec {
 
   private def KeboolaCsvBack(dir: String, m: KeboolaManifest) =
     graft.sources.KeboolaCsv.read(spark, dir, m)
+
+  /** The single CSV part file an extract wrote under `outDir`. */
+  private def csvPart(outDir: String): java.nio.file.Path = {
+    val parts = Files.list(Paths.get(outDir)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".csv")).toSeq
+    assert(parts.size == 1, s"expected one CSV part in $outDir, got $parts")
+    parts.head
+  }
+
+  // nation in two snapshots: keys < 12 over three files, then the rest
+  private def seedTwoSnapshots(wh: String): Long = {
+    val n = graft.queries.QUtil.t(spark, sfDir, "nation")
+    val tbl = new IceCatalog(spark, wh).createTable("lake", "nation_t", n.schema)
+    tbl.append(n.filter(col("n_nationkey") < 12).repartitionByRange(3, col("n_nationkey")))
+    tbl.append(n.filter(col("n_nationkey") >= 12))
+    tbl.snapshots.head.snapshotId
+  }
+
+  private def extractConfig(wh: String, selection: String, scanLimit: Int): String =
+    s"""{"action": "run", "parameters": {
+       |  "catalog": {"warehouse": "$wh"},
+       |  "source": {"namespace": "lake", "table_name": "nation_t"},
+       |  "data_selection": $selection,
+       |  "scan_limit": $scanLimit
+       |}}""".stripMargin
+
+  test("extractor pins data_selection.snapshot_id and serves exactly scan_limit rows of it") {
+    val d = dataDir("expin")
+    val wh = scratch("component-expin-wh")
+    val snap1 = seedTwoSnapshots(wh)
+    writeConfig(d, extractConfig(wh,
+      s"""{"mode": "all_data", "snapshot_id": $snap1}""", scanLimit = 5))
+    assert(ComponentMain.execute(spark, d) == 0)
+    val outDir = s"$d/out/tables/nation_t.csv"
+    val manifest = KeboolaManifest.fromJson(
+      Files.readString(Paths.get(s"$outDir.manifest")))
+    val keys = KeboolaCsvBack(outDir, manifest)
+      .select(col("n_nationkey").cast("long")).collect().map(_.getLong(0))
+    assert(keys.length == 5, s"scan_limit 5 served ${keys.length} rows")
+    assert(keys.forall(_ < 12), s"rows outside snapshot $snap1: ${keys.sorted.mkString(",")}")
+  }
+
+  // the exact limit plans a fixed manifest-order prefix, so the capped
+  // rows no longer depend on which rows a shuffle happened to keep
+  test("capped CSV extracts of one snapshot are byte-identical") {
+    val wh = scratch("component-exdet-wh")
+    seedTwoSnapshots(wh)
+    val csvs = Seq("exdet1", "exdet2").map { tag =>
+      val d = dataDir(tag)
+      writeConfig(d, extractConfig(wh, """{"mode": "all_data"}""", scanLimit = 15))
+      assert(ComponentMain.execute(spark, d) == 0)
+      Files.readAllBytes(csvPart(s"$d/out/tables/nation_t.csv")).toSeq
+    }
+    assert(csvs.head == csvs(1), "two extracts of one snapshot differ")
+    assert(new String(csvs.head.toArray).linesIterator.size == 16, "header + 15 rows")
+  }
 
   test("writer run appends, then upserts with manifest PK fallback") {
     val d = dataDir("wr")

@@ -136,14 +136,112 @@ class DsV2Spec extends SparkSpec {
       expected.orderBy("o_orderkey").collect().toSeq)
   }
 
+  /** Does `q`'s optimized plan still hold a Limit node? */
+  private def keepsLimit(q: org.apache.spark.sql.DataFrame): Boolean =
+    q.queryExecution.optimizedPlan.exists {
+      case _: org.apache.spark.sql.catalyst.plans.logical.GlobalLimit => true
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalLimit => true
+      case _ => false
+    }
+
+  /** Does `q`'s physical plan shuffle? Checked through AQE's wrapper. */
+  private def shuffles(q: org.apache.spark.sql.DataFrame): Boolean =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .find(q.queryExecution.executedPlan) {
+        case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => true
+        case _ => false
+      }.isDefined
+
   test("limit pushdown stops readers early") {
     val (wh, _) = mkTable("limit")
     val q = spark.read.format("icelite")
       .option("warehouse", wh).option("table", "lake.orders_t").load()
       .limit(7)
     assert(q.count() == 7)
-    val scanDesc = q.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
-    assert(scanDesc.contains("limit=7"), s"limit not pushed: $scanDesc")
+    val scanDesc = scanDescOf(q)
+    assert(scanDesc.contains("limit=7 exact"), s"limit not pushed exactly: $scanDesc")
+
+    // a four-file table in manifest order: the exact path plans only the
+    // prefix whose manifest row counts cover n, and the scan alone serves
+    // exactly min(n, rows) — no Limit node, no single-partition shuffle
+    // (checked on the coalesce(1) shape the CSV extract writes)
+    import spark.implicits._
+    val cat = new IceCatalog(spark, warehouse("limit-exact"))
+    val tbl = cat.createTable("lake", "t",
+      Seq((0L, "", 0.0)).toDF("id", "tag", "score").schema)
+    (0 until 4).foreach { i =>
+      tbl.append((1L to 10L + i).map(j => (i * 100L + j, s"t$i", j * 0.5))
+        .toDF("id", "tag", "score").coalesce(1))
+    }
+    val files = tbl.visibleFiles(tbl.meta.currentSnapshot.get)
+    assert(files.size == 4, s"fixture wants 4 files, got ${files.size}")
+    val total = files.map(_.rows).sum
+    def prefixFor(n: Long): Seq[String] = {
+      val owed = files.scanLeft(n)((o, f) => o - f.rows)
+      files.zip(owed).takeWhile(_._2 > 0).map(_._1.path)
+    }
+    val k = files.head.rows
+    val cases = Seq(
+      "crossing a file boundary" -> (tbl.toDF.limit((k + 3).toInt), k + 3),
+      "zero rows" -> (tbl.toDF.limit(0), 0L),
+      "more than the table" -> (tbl.toDF.limit((total + 5).toInt), total),
+      "over a projection" -> (tbl.toDF.select("tag", "id").limit((k + 3).toInt), k + 3))
+    cases.foreach { case (what, (lq, want)) =>
+      val rows = lq.collect()
+      assert(rows.length == want, s"$what: ${rows.length} rows, want $want")
+      assert(rows.map(_.getAs[Long]("id")).distinct.length == rows.length, s"$what: duplicates")
+      assert(!keepsLimit(lq), s"$what: Limit kept\n${lq.queryExecution.optimizedPlan}")
+      assert(!shuffles(lq.coalesce(1)),
+        s"$what: shuffle kept\n${lq.coalesce(1).queryExecution.executedPlan}")
+      assert(graft.sources.v2.HasPlannedFiles.of(lq) == prefixFor(want),
+        s"$what: planned ${graft.sources.v2.HasPlannedFiles.of(lq)}")
+    }
+    // the rows ARE the prefix: all of the first file, then 3 of the second
+    val ids = tbl.toDF.limit((k + 3).toInt).collect().map(_.getAs[Long]("id"))
+    assert(ids.count(_ < 100L) == k && ids.count(i => i > 100L && i < 200L) == 3,
+      s"not the covering prefix: ${ids.sorted.mkString(",")}")
+    val est = tbl.toDF.limit(5).queryExecution.optimizedPlan.stats.rowCount
+    assert(est.contains(BigInt(5)), s"exact scan estimates $est rows")
+  }
+
+  // where the manifest cannot prove the rows a file serves, or a filter
+  // stays residual, the limit stays partial — readers stop early and the
+  // Limit node above the scan enforces the exact count
+  test("limit falls back to partial pushdown and stays exact above the scan") {
+    import spark.implicits._
+    import org.apache.spark.sql.sources.LessThan
+    val cat = new IceCatalog(spark, warehouse("limit-fallback"))
+    val mor = cat.createTable("lake", "mor",
+      Seq((0L, "")).toDF("id", "v").schema,
+      properties = Map("write.delete.mode" -> "merge-on-read"))
+    mor.append((1L to 40L).map(i => (i, s"v$i")).toDF("id", "v")
+      .repartitionByRange(2, col("id")))
+    mor.deleteWhereMor(Seq(LessThan("id", 15L)))
+    assert(mor.deletesOf(mor.meta.currentSnapshot.get).nonEmpty,
+      "fixture wants outstanding position deletes")
+    val morQ = mor.toDF.limit(20)
+    val morRows = morQ.collect().map(_.getAs[Long]("id"))
+    assert(morRows.length == 20 && morRows.forall(_ >= 15L),
+      s"MOR limit served ${morRows.sorted.mkString(",")}")
+    assert(keepsLimit(morQ) && scanDescOf(morQ).contains("limit=20 partial"),
+      s"MOR limit must stay partial: ${scanDescOf(morQ)}")
+
+    val plain = cat.createTable("lake", "plain", Seq((0L, "")).toDF("id", "v").schema)
+    (0 until 3).foreach(i => plain.append((1L to 10L).map(j => (i * 10L + j, s"v$j"))
+      .toDF("id", "v").coalesce(1)))
+    val resid = plain.toDF.where(col("v") =!= "v1").limit(12)
+    val residRows = resid.collect()
+    assert(residRows.length == 12 && residRows.forall(_.getAs[String]("v") != "v1"))
+    assert(keepsLimit(resid), "a residual filter under the limit must keep the Limit")
+
+    // a partition-exact filter may take either path; the answer is exact
+    val parted = cat.createTable("lake", "parted",
+      Seq((0L, 0)).toDF("id", "p").schema, partitionBy = Seq("p"))
+    parted.append((1L to 60L).map(i => (i, (i % 3).toInt)).toDF("id", "p"))
+    val pq = parted.toDF.where(col("p") === 1).limit(7)
+    val pRows = pq.collect()
+    assert(pRows.length == 7 && pRows.forall(_.getAs[Int]("p") == 1),
+      s"partition-filtered limit served ${pRows.mkString(",")}")
   }
 
   test("filters on timestamp columns stay residual (not claimed) and still work") {

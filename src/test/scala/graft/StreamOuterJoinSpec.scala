@@ -87,4 +87,20 @@ class StreamOuterJoinSpec extends SparkSpec {
     spark.streams.resetTerminated()
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
   }
+
+  // LEAST skips NULLs: on a click-only fixture the guard used to come from
+  // the clicks alone and count clicks the stream never evicts
+  test("st9b refuses an events fixture without views") {
+    val dir = scratch("st9b-noviews")
+    val tmp = s"$dir/_tmp"
+    graft.queries.QUtil.t(spark, sfDir, "events")
+      .filter(col("event_type") === "click").coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(dir, "events.parquet"))
+    val e = intercept[IllegalStateException] {
+      SparkEntry.queries("st9b_stream_outer_interval_join")(spark, dir).collect()
+    }
+    assert(e.getMessage.contains("click and view"), e.getMessage)
+    spark.streams.resetTerminated()
+  }
 }
