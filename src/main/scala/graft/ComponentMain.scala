@@ -28,12 +28,9 @@ object ComponentMain {
 
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/data")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft-component")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     // stop the session BEFORE exiting — sys.exit inside a try never runs
     // the finally, leaving shutdown to hooks that may not flush cleanly

@@ -7,8 +7,9 @@ import graft.functions.GraftFunctions
 
 /** Spark extensions entry point: registers graft's native expressions and
   * plan rules at session build time. Production wiring is
-  * `spark.sql.extensions=graft.GraftExtensions` (Verify/Bench/spec sessions
-  * set it); [[GraftFunctions.register]] still covers function registration
+  * `spark.sql.extensions=graft.GraftExtensions`, which [[GraftSession]] sets
+  * for every entry point and the spec session; [[GraftFunctions.register]]
+  * still covers function registration
   * on an already-built session, but plan rules need the extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -474,26 +474,15 @@ class IceTable(
     val snapId = m0.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
     val (dir, added) =
       writeData(conformed, snapId, m0.partitionBy, uniqueDir = true)
-    var attempts = 0
-    while (true) {
-      val m = meta
-      require(m.schemaDdl == m0.schemaDdl && m.partitionBy == m0.partitionBy &&
-        m.renames == m0.renames && m.widenedColumns == m0.widenedColumns &&
-        m.partitionSpecs == m0.partitionSpecs,
+    MetaIo.retryCommit(fs, tableDir) { m =>
+      require(m.sameEvolution(m0),
         s"append to $namespace.$name raced a concurrent schema change — aborting")
       val prev = m.currentSnapshot
-      try return commitSnapshot(m, "append",
+      commitSnapshot(m, "append",
         prev.map(p => FileStats.dataDirsOf(fs, p)).getOrElse(Nil) :+ dir, added,
         carried = prev.map(visibleFiles).getOrElse(Nil),
         carriedDeletes = prev.map(p => FileStats.deletesOf(fs, p)).getOrElse(Nil))
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.startsWith("concurrent commit") =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
     }
-    this // unreachable
   }
 
   /** Commit PRE-WRITTEN files as a full-rewrite snapshot — the publish step
@@ -505,17 +494,16 @@ class IceTable(
     * statement's own — the staged writer sorted by exactly `newSortOrder`,
     * and keeping the old declaration would make scans report an ordering
     * the new files do not satisfy (downstream sorts would elide, silently
-    * wrong results). The caller retries on a version race.
+    * wrong results). The caller validates `m` and retries on a
+    * [[CommitConflict]].
     */
-  private[graft] def replaceFiles(dataDirs: Seq[String], added: Seq[FileStat],
-      newSchemaDdl: String, newSortOrder: Seq[String],
-      newProperties: Map[String, String]): IceTable = {
-    val m = meta
+  private[graft] def replaceFiles(m: TableMeta, dataDirs: Seq[String],
+      added: Seq[FileStat], newSchemaDdl: String, newSortOrder: Seq[String],
+      newProperties: Map[String, String]): IceTable =
     commitSnapshot(
       m.copy(sortOrder = newSortOrder, properties = newProperties),
       "replace", dataDirs, added, carried = Nil,
       newSchemaDdl = Some(newSchemaDdl))
-  }
 
   /** Full rewrite with the incoming schema (K6 CTAS semantics, `wr:115-124`). */
   def replace(df: DataFrame): IceTable = {
@@ -884,9 +872,7 @@ class IceTable(
     // already-written files instead of orphaning them. A concurrent schema /
     // spec change — or a ref whose era schema no longer matches what the
     // data was conformed to — aborts loudly.
-    var attempts = 0
-    while (true) {
-      val m = meta
+    MetaIo.retryCommit(fs, tableDir) { m =>
       require(m.partitionBy == m0.partitionBy && m.renames == m0.renames &&
         m.widenedColumns == m0.widenedColumns &&
         m.partitionSpecs == m0.partitionSpecs,
@@ -914,22 +900,14 @@ class IceTable(
         files = (carried ++ added).sortBy(_.path),
         deletes = FileStats.deletesOf(fs, parent),
         parentId = parent.snapshotId)
-      try {
-        MetaIo.commit(fs, tableDir, m.copy(
-          snapshots = m.snapshots :+ snap,
-          refs = m.refs + (refName -> snapId),
-          // a ref a write has advanced IS a branch, whatever created it
-          refTypes = m.refTypes + (refName -> "branch"),
-          version = m.version + 1))
-        return this
-      } catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.startsWith("concurrent commit") =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
+      MetaIo.commit(fs, tableDir, m.copy(
+        snapshots = m.snapshots :+ snap,
+        refs = m.refs + (refName -> snapId),
+        // a ref a write has advanced IS a branch, whatever created it
+        refTypes = m.refTypes + (refName -> "branch"),
+        version = m.version + 1))
+      this
     }
-    this // unreachable
   }
 
   /** Publish a branch: point the main table at the ref's head (the
@@ -965,12 +943,8 @@ class IceTable(
     val snapId0 = m0.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
     val (dir, added) =
       writeData(conformed, snapId0, m0.partitionBy, uniqueDir = true)
-    var attempts = 0
-    while (true) {
-      val m = meta
-      require(m.schemaDdl == m0.schemaDdl && m.partitionBy == m0.partitionBy &&
-        m.renames == m0.renames && m.widenedColumns == m0.widenedColumns &&
-        m.partitionSpecs == m0.partitionSpecs,
+    MetaIo.retryCommit(fs, tableDir) { m =>
+      require(m.sameEvolution(m0),
         s"stageWap('$wapId') on $namespace.$name raced a concurrent " +
           "schema change — aborting")
       // the duplicate check MUST re-run against the fresh read: two
@@ -999,19 +973,11 @@ class IceTable(
         deletes = parent.map(p => FileStats.deletesOf(fs, p)).getOrElse(Nil),
         parentId = m.currentSnapshotId,
         summary = Map("wap.id" -> wapId))
-      try {
-        MetaIo.commit(fs, tableDir, m.copy(
-          snapshots = m.snapshots :+ snap,
-          version = m.version + 1))
-        return this
-      } catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.startsWith("concurrent commit") =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
+      MetaIo.commit(fs, tableDir, m.copy(
+        snapshots = m.snapshots :+ snap,
+        version = m.version + 1))
+      this
     }
-    this // unreachable
   }
 
   /** Publish a staged WAP snapshot by its wap.id (Iceberg's
@@ -1284,12 +1250,8 @@ class IceTable(
         "files are no longer resolvable from its manifest")
     val pickedDirs = pickedStats
       .map(f => new Path(f.path).getParent.toString).distinct
-    var attempts = 0
-    while (true) {
-      val m = meta
-      require(m.schemaDdl == m0.schemaDdl && m.partitionBy == m0.partitionBy &&
-        m.renames == m0.renames && m.widenedColumns == m0.widenedColumns &&
-        m.partitionSpecs == m0.partitionSpecs,
+    MetaIo.retryCommit(fs, tableDir) { m =>
+      require(m.sameEvolution(m0),
         s"cherry-pick into $namespace.$name raced a concurrent schema change")
       val prev = m.currentSnapshot
       val visibleNow = prev.map(visibleFiles).getOrElse(Nil)
@@ -1313,18 +1275,11 @@ class IceTable(
           s"current head carries ${eraClash.length} equality delete(s) " +
           "newer than the picked files' era, which would re-apply to the " +
           "transplanted rows — fold them first (rewriteDeletes()) and retry")
-      try return commitSnapshot(m, "append",
+      commitSnapshot(m, "append",
         prev.map(p => FileStats.dataDirsOf(fs, p)).getOrElse(Nil) ++ pickedDirs,
         added = pickedStats, carried = visibleNow,
         carriedDeletes = headDeletes, summary = summary)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.startsWith("concurrent commit") =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
     }
-    this // unreachable
   }
 
   /** Candidate screen shared by the COW and MOR upserts: which of `files`
@@ -1614,12 +1569,8 @@ class IceTable(
       delDir: Option[String], operation: String): IceTable = {
     val prior0 = m0.currentSnapshot.map(p => FileStats.deletesOf(fs, p)).getOrElse(Nil)
     val addedRows = added.map(_.rows).sum
-    var attempts = 0
-    while (true) {
-      val m = meta
-      require(m.schemaDdl == m0.schemaDdl && m.partitionBy == m0.partitionBy &&
-        m.renames == m0.renames && m.widenedColumns == m0.widenedColumns &&
-        m.partitionSpecs == m0.partitionSpecs,
+    MetaIo.retryCommit(fs, tableDir) { m =>
+      require(m.sameEvolution(m0),
         s"$operation on $namespace.$name raced a concurrent schema change — aborting")
       val current = m.currentSnapshot.getOrElse(
         throw new IllegalStateException(
@@ -1644,20 +1595,12 @@ class IceTable(
         files = (files ++ added).sortBy(_.path),
         deletes = if (stat.appliesTo.isEmpty) prior else prior :+ stat,
         parentId = m.currentSnapshotId)
-      try {
-        MetaIo.commit(fs, tableDir, m.copy(
-          currentSnapshotId = snapId,
-          snapshots = m.snapshots :+ snap,
-          version = m.version + 1))
-        return this
-      } catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.startsWith("concurrent commit") =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
+      MetaIo.commit(fs, tableDir, m.copy(
+        currentSnapshotId = snapId,
+        snapshots = m.snapshots :+ snap,
+        version = m.version + 1))
+      this
     }
-    this // unreachable
   }
 
   private def trimDeletes(ds: Seq[DeleteStat], keep: Set[String]): Seq[DeleteStat] =
@@ -1854,12 +1797,8 @@ class IceTable(
         (Some(d), a)
       }
     val addedRows = added.map(_.rows).sum
-    var attempts = 0
-    while (true) {
-      val m = meta
-      require(m.schemaDdl == m0.schemaDdl && m.partitionBy == m0.partitionBy &&
-        m.renames == m0.renames && m.widenedColumns == m0.widenedColumns &&
-        m.partitionSpecs == m0.partitionSpecs,
+    MetaIo.retryCommit(fs, tableDir) { m =>
+      require(m.sameEvolution(m0),
         s"$operation on $namespace.$name raced a concurrent schema change — aborting")
       val current = m.currentSnapshot
       val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
@@ -1885,20 +1824,12 @@ class IceTable(
         files = (carried ++ added).sortBy(_.path),
         deletes = prior :+ stat,
         parentId = m.currentSnapshotId)
-      try {
-        MetaIo.commit(fs, tableDir, m.copy(
-          currentSnapshotId = snapId,
-          snapshots = m.snapshots :+ snap,
-          version = m.version + 1))
-        return this
-      } catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.startsWith("concurrent commit") =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
+      MetaIo.commit(fs, tableDir, m.copy(
+        currentSnapshotId = snapId,
+        snapshots = m.snapshots :+ snap,
+        version = m.version + 1))
+      this
     }
-    this // unreachable
   }
 
   /** Read an explicit file subset with the declared schema. Two mappings
@@ -2352,9 +2283,7 @@ class IceTable(
     // A concurrent schema change aborts loudly (the schema gate above
     // validated against m0).
     val importSet = paths.map(FileStats.normPath).toSet
-    var attempts = 0
-    while (true) {
-      val m = meta
+    MetaIo.retryCommit(fs, tableDir) { m =>
       require(m.schemaDdl == m0.schemaDdl && m.partitionBy == m0.partitionBy &&
         m.sortOrder == m0.sortOrder,
         s"add_files to $namespace.$name raced a concurrent schema change — aborting")
@@ -2373,19 +2302,12 @@ class IceTable(
       val importEra = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
       val stamped = added.map(f => f.copy(era = importEra,
         partVals = PartValues.toRecorded(rawByPath(FileStats.normPath(f.path)))))
-      try return commitSnapshot(m, "add_files",
+      commitSnapshot(m, "add_files",
         prev.map(s => FileStats.dataDirsOf(fs, s)).getOrElse(Nil),
         stamped, carried = cur,
         carriedDeletes =
           prev.map(s => FileStats.deletesOf(fs, s)).getOrElse(Nil))
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.startsWith("concurrent commit") =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
     }
-    this // unreachable
   }
 
   /** Collapse the current snapshot's manifest delta chain into one full

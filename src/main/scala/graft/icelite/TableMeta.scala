@@ -483,6 +483,16 @@ final case class TableMeta(
   def everPartitionCols: Set[String] =
     partitionBy.toSet ++ partitionSpecs.flatMap(_.cols)
 
+  /** True when `other` has the same schema and evolution state: schema,
+    * partition layout, rename/widen ledgers and spec history. A retried
+    * commit whose baseline fails this raced a concurrent DDL and must
+    * abort rather than re-attach files written against the old shape.
+    */
+  def sameEvolution(other: TableMeta): Boolean =
+    schemaDdl == other.schemaDdl && partitionBy == other.partitionBy &&
+      renames == other.renames && widenedColumns == other.widenedColumns &&
+      partitionSpecs == other.partitionSpecs
+
   /** Ref target as a real Long. Jackson round-trips `Map[String, Long]`
     * values as Integer when they fit (the FileStat trap), so direct
     * `refs(name)` unboxing would ClassCastException on metadata read from
@@ -537,11 +547,17 @@ final case class TableMeta(
   def currentAncestors: Seq[SnapshotMeta] = ancestorsOf(currentSnapshotId)
 }
 
+/** A commit lost the version CAS to a concurrent committer: the only
+  * failure [[MetaIo.retryCommit]] retries. Every other commit failure
+  * (rename failure, conflict validation, crash) stays a plain exception.
+  */
+final class CommitConflict(msg: String) extends IllegalStateException(msg)
+
 /** Metadata persistence + commit protocol.
   *
   * Commit = exclusively create a `.v{N}.json.claim` marker (the version CAS
   * — two writers racing on the same version: exactly one claims, the other
-  * gets "concurrent commit" and may retry at N+1), then write `v{N}.json`
+  * gets a [[CommitConflict]] and may retry at N+1), then write `v{N}.json`
   * via tmp+rename (readers never observe a partial file), then swap the
   * `version-hint.text` pointer. Same-JVM committers additionally serialize
   * on a per-table lock, making the CAS exact under local[N] concurrency;
@@ -989,6 +1005,22 @@ object MetaIo {
   private val commitLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  private val MaxCommitAttempts = 6
+
+  /** The optimistic commit retry every commit mode runs through (Iceberg's
+    * `SnapshotProducer.commit` shape): re-read the metadata, run `attempt`
+    * against it (validate, build the snapshot, [[commit]]) and, on a
+    * [[CommitConflict]] only, start again from a fresh read. Any other
+    * exception propagates at once; after [[MaxCommitAttempts]] lost races
+    * the last conflict is rethrown.
+    */
+  def retryCommit[A](fs: FileSystem, tableDir: Path)(attempt: TableMeta => A): A = {
+    def run(n: Int): A =
+      try attempt(read(fs, tableDir))
+      catch { case _: CommitConflict if n < MaxCommitAttempts => run(n + 1) }
+    run(1)
+  }
+
   def commit(fs: FileSystem, tableDir: Path, meta0: TableMeta): Unit = {
     val lock = commitLocks.computeIfAbsent(tableDir.toString, _ => new Object)
     lock.synchronized {
@@ -1031,7 +1063,7 @@ object MetaIo {
         if (!abandoned) {
           // this attempt lost the race — its manifest files are unreferenced
           newManifests.foreach(m => fs.delete(m, false))
-          throw new IllegalStateException(
+          throw new CommitConflict(
             s"concurrent commit detected for ${meta.namespace}.${meta.name} v${meta.version}")
         }
       }

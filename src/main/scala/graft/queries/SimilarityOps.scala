@@ -607,23 +607,17 @@ object SimilarityOps {
     // commit already records, per snapshot and O(1)-inline: the operation,
     // the added-file row sum (addedRows — from the write's own per-file
     // stats, R10), and the visible-file/row totals. A snapshot is a pure
-    // append iff op == "append" AND it kept every parent file
-    // (totalFileCount == parent.totalFileCount + addedFileCount — carried
-    // sets are subsets of the parent's, so equal counts mean equal sets:
-    // the TableMeta non-rewriting rule) AND the row total grew by exactly
-    // the added files' rows. The `>= 0` guards keep the proof LOUD on
-    // pre-upgrade metadata (inline counts -1) instead of vacuous.
+    // append iff op == "append" AND it kept every parent file (the
+    // changelog's own rule, FileStats.isNonRewriting) AND the row total
+    // grew by exactly the added files' rows.
     def assertPureAppend(tbl: graft.icelite.IceTable, who: String): Unit = {
       val m = tbl.meta
       val snap = m.currentSnapshot.get
       val parent = m.snapshots.find(_.snapshotId == snap.parentId)
-      require(snap.totalFileCount >= 0 && snap.addedFileCount >= 0 &&
-        parent.forall(_.totalFileCount >= 0),
-        s"$who: inline commit stats missing — pre-upgrade metadata cannot " +
-          "carry the metadata-only pure-append proof; compact/rewrite first")
+      val fs = cat.tablePath(tbl.namespace, tbl.name)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       require(snap.operation == "append" &&
-        snap.totalFileCount ==
-          parent.map(_.totalFileCount).getOrElse(0L) + snap.addedFileCount &&
+        graft.icelite.FileStats.isNonRewriting(fs, parent, snap) &&
         snap.totalRows ==
           parent.map(_.totalRows).getOrElse(0L) + snap.addedRows,
         s"$who epoch maintenance must be a pure append of its own rows " +

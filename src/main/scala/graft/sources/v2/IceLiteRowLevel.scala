@@ -160,9 +160,7 @@ private[v2] class IceLiteReplaceGroupsBatchWrite(
     // change, or a MOR row-level delete committed since load, would be
     // silently dropped for the replaced files (their rewrite predates it):
     // abort loudly instead, mirroring IceLiteDeltaBatchWrite's guards.
-    require(m.schemaDdl == m0.schemaDdl && m.partitionBy == m0.partitionBy &&
-      m.renames == m0.renames && m.widenedColumns == m0.widenedColumns &&
-      m.partitionSpecs == m0.partitionSpecs,
+    require(m.sameEvolution(m0),
       s"$operation on $ns.$tbl raced a concurrent schema change — aborting")
     require(m.currentSnapshot.map(s => FileStats.deletesOf(fs, s))
         .getOrElse(Nil) == op.plannedDeletes,
@@ -439,12 +437,8 @@ private[v2] class IceLiteDeltaBatchWrite(
     // concurrent APPEND keeps them valid (re-attach); a rewrite of an
     // affected file, another row-level delete, or any schema/spec change
     // aborts loudly.
-    var attempts = 0
-    while (true) {
-      val m = MetaIo.read(fs, tableDir)
-      require(m.schemaDdl == m0.schemaDdl && m.partitionBy == m0.partitionBy &&
-        m.renames == m0.renames && m.widenedColumns == m0.widenedColumns &&
-        m.partitionSpecs == m0.partitionSpecs,
+    MetaIo.retryCommit(fs, tableDir) { m =>
+      require(m.sameEvolution(m0),
         s"$operation on $ns.$tbl raced a concurrent schema change — aborting")
       val current = m.currentSnapshot.getOrElse(
         throw new IllegalStateException(
@@ -469,18 +463,10 @@ private[v2] class IceLiteDeltaBatchWrite(
         files = (visible ++ added).sortBy(_.path),
         deletes = prior ++ newStats,
         parentId = m.currentSnapshotId)
-      try {
-        MetaIo.commit(fs, tableDir, m.copy(
-          currentSnapshotId = snapId,
-          snapshots = m.snapshots :+ snap,
-          version = m.version + 1))
-        return
-      } catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.startsWith("concurrent commit") =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
+      MetaIo.commit(fs, tableDir, m.copy(
+        currentSnapshotId = snapId,
+        snapshots = m.snapshots :+ snap,
+        version = m.version + 1))
     }
   }
 

@@ -437,12 +437,8 @@ private[v2] class IceLiteBatchWrite(
       .map(p => FileStats.visible(fs, p)
         .map(f => fs.makeQualified(new Path(f.path)).toString).toSet)
       .getOrElse(Set.empty[String])
-    var attempts = 0
-    while (true) {
-      val m = MetaIo.read(fs, tableDir)
-      require(m.schemaDdl == m0.schemaDdl && m.partitionBy == m0.partitionBy &&
-        m.renames == m0.renames && m.widenedColumns == m0.widenedColumns &&
-        m.partitionSpecs == m0.partitionSpecs,
+    MetaIo.retryCommit(fs, tableDir) { m =>
+      require(m.sameEvolution(m0),
         s"INSERT into $ns.$table raced a concurrent schema change — aborting")
       val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
       val prev = m.currentSnapshot
@@ -504,8 +500,8 @@ private[v2] class IceLiteBatchWrite(
       // (visible now, not carried) that was not visible at the planning
       // baseline belongs to a concurrent writer — replacing it would be a
       // silent lost update, so abort instead of last-writer-winning. The
-      // throw is not the retryable "concurrent commit" shape, so it
-      // surfaces to the caller as a conflict error.
+      // throw is a plain IllegalStateException, not a retryable
+      // CommitConflict, so it surfaces to the caller as a conflict error.
       if (validateNoConflicts && isOverwrite) {
         val carriedSet = carried.map(f => qualify(f.path)).toSet
         val clobbered = visibleNow
@@ -546,18 +542,10 @@ private[v2] class IceLiteBatchWrite(
         // surviving carried files above)
         deletes = deletes,
         parentId = m.currentSnapshotId)
-      try {
-        MetaIo.commit(fs, tableDir, m.copy(
-          currentSnapshotId = snapId,
-          snapshots = m.snapshots :+ snap,
-          version = m.version + 1))
-        return
-      } catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.startsWith("concurrent commit") =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
+      MetaIo.commit(fs, tableDir, m.copy(
+        currentSnapshotId = snapId,
+        snapshots = m.snapshots :+ snap,
+        version = m.version + 1))
     }
   }
 
@@ -650,12 +638,8 @@ private[v2] class IceLiteStreamingWrite(
           .parquet(added.map(_.path): _*)
           .select(upsertKeys.map(org.apache.spark.sql.functions.col): _*),
         upsertKeys)
-    var attempts = 0
-    while (true) {
-      val m = MetaIo.read(fs, tableDir)
-      require(m.schemaDdl == m0.schemaDdl && m.partitionBy == m0.partitionBy &&
-        m.renames == m0.renames && m.widenedColumns == m0.widenedColumns &&
-        m.partitionSpecs == m0.partitionSpecs,
+    MetaIo.retryCommit(fs, tableDir) { m =>
+      require(m.sameEvolution(m0),
         s"streaming write into $ns.$table raced a concurrent schema change — aborting")
       val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
       val prev = m.currentSnapshot
@@ -687,18 +671,10 @@ private[v2] class IceLiteStreamingWrite(
           eqStat.toSeq,
         streamCommit = sc,
         parentId = m.currentSnapshotId)
-      try {
-        MetaIo.commit(fs, tableDir, m.copy(
-          currentSnapshotId = snapId,
-          snapshots = m.snapshots :+ snap,
-          version = m.version + 1))
-        return
-      } catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.startsWith("concurrent commit") =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
+      MetaIo.commit(fs, tableDir, m.copy(
+        currentSnapshotId = snapId,
+        snapshots = m.snapshots :+ snap,
+        version = m.version + 1))
     }
   }
 
@@ -1545,25 +1521,14 @@ private[v2] class IceLiteStagedTable(
             s"RTAS into $ns.$tbl raced a concurrent table creation — aborting")
         } else t.meta // no data staged: nothing written against a stale schema
       }
-      var attempts = 0
-      var done = false
-      while (!done) {
-        val cur = t.meta
+      MetaIo.retryCommit(fs, tableDir) { cur =>
         require(cur.renames == b.renames &&
           cur.widenedColumns == b.widenedColumns &&
           cur.partitionSpecs == b.partitionSpecs,
           s"RTAS into $ns.$tbl raced a concurrent schema change — aborting")
-        try {
-          t.replaceFiles(dataDirs, added, schema0.toDDL, sortedBy, properties)
-          done = true
-        } catch {
-          case e: IllegalStateException
-              if e.getMessage != null &&
-                e.getMessage.startsWith("concurrent commit") =>
-            attempts += 1
-            if (attempts > 5) throw e
-        }
+        t.replaceFiles(cur, dataDirs, added, schema0.toDDL, sortedBy, properties)
       }
+      ()
     }
   }
 

@@ -210,6 +210,29 @@ class ComponentSpec extends SparkSpec {
       "refused preview DML must not mutate the table")
   }
 
+  test("query_preview runs the icelite_changes table function") {
+    val d = dataDir("preview-tvf")
+    val wh = scratch("component-preview-tvf-wh")
+    val first = seedTwoSnapshots(wh)
+    writeConfig(d,
+      s"""{"action": "query_preview", "parameters": {
+         |  "catalog": {"warehouse": "$wh"},
+         |  "source": {"namespace": "lake", "table_name": "nation_t"},
+         |  "data_selection": {"mode": "custom_query",
+         |    "query": "SELECT * FROM icelite_changes('$wh', 'lake.nation_t', $first)"}
+         |}}""".stripMargin)
+    val buf = new ByteArrayOutputStream()
+    val code = Console.withOut(new PrintStream(buf)) {
+      ComponentMain.execute(spark, d)
+    }
+    assert(code == 0)
+    val rows = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(buf.toString.trim).elements().asScala.toSeq
+    // the second snapshot appended nation keys 12..24, nothing else changed
+    assert(rows.map(_.get("n_nationkey").asInt).sorted == (12 to 24), rows)
+    assert(rows.forall(_.get("_change_type").asText == "insert"), rows)
+  }
+
   test("writer accepts a parquet input table") {
     val d = dataDir("wrpq")
     val wh = scratch("component-wrpq-wh")

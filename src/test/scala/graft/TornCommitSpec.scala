@@ -2,7 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import graft.icelite.{IceCatalog, MetaIo}
+import graft.icelite.{CommitConflict, IceCatalog, IceTable, MetaIo}
 
 /** Torn-commit crash properties: a commit killed at EACH protocol step
   * (manifest write -> version CAS -> version-file rename -> hint swap;
@@ -42,8 +42,8 @@ class TornCommitSpec extends SparkSpec {
       tbl.append(df1.repartition(1))
 
       // kill the next commit at `step` (the failpoint throws where a
-      // process crash would stop; the exception must NOT be the retryable
-      // concurrent-commit shape, or append would paper over it)
+      // process crash would stop; the exception must NOT be a retryable
+      // CommitConflict, or append would paper over it)
       MetaIo.commitFailpoint = step
       try intercept[MetaIo.InjectedCommitCrash] {
         cat.loadTable("lake", "t").append(df2.repartition(1))
@@ -193,21 +193,41 @@ class TornCommitSpec extends SparkSpec {
 
   test("an in-grace claim is NOT taken over (a slow committer keeps exclusivity)") {
     import spark.implicits._
-    val wh = scratch("torn-grace")
-    val cat = new IceCatalog(spark, wh)
     val df = (1L to 5L).map(i => (i, s"v$i")).toDF("id", "v")
-    // default grace (10 min): a fresh claim with no version file reads as
-    // in-flight, so the next writer loses the CAS loudly instead of
-    // racing the claimer's imminent version-file rename
-    val tbl = cat.createTable("lake", "t", df.schema)
-    tbl.append(df.repartition(1))
-    MetaIo.commitFailpoint = "claimed"
-    try intercept[MetaIo.InjectedCommitCrash] {
-      cat.loadTable("lake", "t").append(df.repartition(1))
-    } finally MetaIo.commitFailpoint = ""
-    val e = intercept[IllegalStateException] {
-      cat.loadTable("lake", "t").append(df.repartition(1))
+    val ext = scratch("torn-grace-ext")
+    df.repartition(1).write.parquet(ext)
+    // every retrying IceTable entry point: its set-up runs before the
+    // claim is taken and returns the commit to attempt after it
+    val entryPoints: Seq[(String, IceTable => IceTable => Any)] = Seq(
+      ("append", (_: IceTable) => (t: IceTable) => t.append(df.repartition(1))),
+      ("appendToRef", { (t: IceTable) =>
+        t.branch("audit", t.meta.currentSnapshotId)
+        (u: IceTable) => u.appendToRef("audit", df.repartition(1))
+      }),
+      ("stageWap", (_: IceTable) => (t: IceTable) => t.stageWap("w1", df.repartition(1))),
+      ("cherryPick", { (t: IceTable) =>
+        t.stageWap("w0", df.repartition(1))
+        val staged = t.snapshots.last.snapshotId
+        (u: IceTable) => u.cherryPick(staged)
+      }),
+      ("addFiles", (_: IceTable) => (t: IceTable) => t.addFiles(ext)))
+    entryPoints.foreach { case (name, setUp) =>
+      val cat = new IceCatalog(spark, scratch(s"torn-grace-$name"))
+      val tbl = cat.createTable("lake", "t", df.schema)
+      tbl.append(df.repartition(1))
+      val op = setUp(tbl)
+      val before = tbl.snapshots.map(_.snapshotId)
+      // default grace (10 min): a fresh claim with no version file reads
+      // as in-flight, so the next writer loses the CAS on every retry and
+      // surfaces the typed conflict instead of racing the claimer's
+      // imminent version-file rename
+      MetaIo.commitFailpoint = "claimed"
+      try intercept[MetaIo.InjectedCommitCrash] {
+        cat.loadTable("lake", "t").append(df.repartition(1))
+      } finally MetaIo.commitFailpoint = ""
+      intercept[CommitConflict](op(cat.loadTable("lake", "t")))
+      assert(cat.loadTable("lake", "t").snapshots.map(_.snapshotId) == before,
+        s"[$name] a lost commit must leave the snapshot list unchanged")
     }
-    assert(e.getMessage.contains("concurrent commit"), e.getMessage)
   }
 }
