@@ -277,6 +277,14 @@ object ComponentMain {
         if (keys.isEmpty)
           throw new UserException(
             "upsert requires a primary key (config destination.primary_key or input manifest)")
+        // resolved like Spark resolves them (spark.sql.caseSensitive)
+        val caseSensitive = spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+        val missing = keys.filterNot(k => df.columns.exists(c =>
+          if (caseSensitive) c == k else c.equalsIgnoreCase(k)))
+        if (missing.nonEmpty)
+          throw new UserException(
+            s"primary key column(s) ${missing.mkString(", ")} not in the input table " +
+              s"(columns: ${df.columns.mkString(", ")})")
         val tbl =
           if (exists) cat.loadTable(dst.namespace, dst.tableName)
           else cat.createTable(dst.namespace, dst.tableName, df.schema, p.partitionBy)

@@ -2,7 +2,7 @@ package graft.icelite
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{approx_count_distinct, col, count, lit, max, min, struct, when}
+import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
 import org.apache.spark.sql.sources.{And => SAnd, Filter => SFilter, GreaterThanOrEqual => SGte, In => SIn, IsNull => SIsNull, LessThanOrEqual => SLte, Or => SOr}
 import org.apache.spark.sql.types.StructType
 
@@ -1286,7 +1286,9 @@ class IceTable(
     * could hold a row matching SOME source key tuple (necessary-condition
     * pruning — a file screened out provably contains no match and is
     * carried/skipped; a false positive only costs an unnecessary rewrite
-    * or read). Two layers, both one tiny driver-side source aggregate:
+    * or read). Both layers come from ONE Spark job over `src.select(keys)`
+    * ([[KeySummary]]): each task summarizes its partition, the Spark driver
+    * merges the summaries as tasks finish.
     *
     * 1. RANGE: per-key [min, max] (+ null presence) of the source against
     *    each file's footer stats / directory values.
@@ -1300,12 +1302,15 @@ class IceTable(
     *    untouched. Per-key INs AND'd stay a sound necessary condition for
     *    multi-key upserts (a matching row needs every key column to hit
     *    SOME source value under `<=>`; null-extended when the source has
-    *    null keys). Caps keep the peek driver-safe:
-    *    `graft.upsert.keyPeekCap` distinct tuples (default 10k; 0
-    *    disables) and a probe budget so a million-file table never pays
-    *    keys x files point probes.
+    *    null keys). The same pass counts the source's distinct key tuples
+    *    EXACTLY, and two caps bound what it holds:
+    *    `graft.upsert.keyPeekCap` exact distinct tuples (default 10k; 0
+    *    disables — past the cap a task drops its tuple set and the screen
+    *    stays on ranges), and a probe budget
+    *    (`graft.prune.probeBudget`, files x tuples) so a million-file
+    *    table never pays keys x files point probes.
     *
-    * DETERMINISM CONTRACT: both layers evaluate `src` in Spark jobs
+    * DETERMINISM CONTRACT: both layers evaluate `src` in a Spark job
     * separate from the join/anti-join that later performs the upsert, so
     * the screen is sound only for a deterministic source — the same
     * contract the range layer has always carried implicitly (and MERGE
@@ -1322,51 +1327,27 @@ class IceTable(
       files: Seq[FileStat], m: TableMeta, tableSchema: StructType)
       : (Seq[FileStat], Seq[FileStat]) = {
     if (files.isEmpty) return (files, Nil)
-    // one driver-side job: per-key min/max + null presence + approx
-    // distinct tuple count (gates the exact-key peek)
-    // single-key sources (the common case) skip the per-row struct
-    // allocation the tuple-NDV estimate would pay
-    val ndvExpr =
-      if (keys.lengthCompare(1) == 0) approx_count_distinct(col(keys.head))
-      else approx_count_distinct(struct(keys.map(col): _*))
-    val aggs = keys.flatMap(k => Seq(
-      min(col(k)).as(s"__min_$k"), max(col(k)).as(s"__max_$k"),
-      count(when(col(k).isNull, lit(1))).as(s"__nulls_$k"))) :+
-      ndvExpr.as("__ndv")
-    val r = src.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val keyNulls = keys.map(k => k -> (r.getAs[Long](s"__nulls_$k") > 0)).toMap
-    val srcNdv = r.getAs[Long]("__ndv")
-    val keyBounds: SFilter = keys.map { k =>
-      val lo = r.getAs[Any](s"__min_$k")
-      val hi = r.getAs[Any](s"__max_$k")
+    val cap = scala.util.Try(
+      spark.conf.get("graft.upsert.keyPeekCap", "10000").toInt).getOrElse(10000)
+    // shared with the DSv2 runtime re-prune (IceLiteScan.budgetRuntime)
+    val probeBudget = scala.util.Try(
+      spark.conf.get("graft.prune.probeBudget", "50000000").toLong)
+      .getOrElse(50L * 1000 * 1000)
+    val ks = KeySummary.of(src, keys, cap)
+    val keyBounds: SFilter = keys.indices.map { i =>
+      val (k, lo, hi) = (keys(i), ks.mins(i), ks.maxs(i))
       val range: SFilter =
         if (lo == null) SIsNull(k) // all-null source key column
         else SAnd(SGte(k, lo), SLte(k, hi))
-      if (keyNulls(k) && lo != null) SOr(range, SIsNull(k)) else range
+      if (ks.hasNull(i) && lo != null) SOr(range, SIsNull(k)) else range
     }.reduce(SAnd(_, _): SFilter)
-    val keyIn: Option[SFilter] = {
-      val cap = scala.util.Try(
-        spark.conf.get("graft.upsert.keyPeekCap", "10000").toInt).getOrElse(10000)
-      // shared with the DSv2 runtime re-prune (IceLiteScan.budgetRuntime)
-      val probeBudget = scala.util.Try(
-        spark.conf.get("graft.prune.probeBudget", "50000000").toLong)
-        .getOrElse(50L * 1000 * 1000)
-      if (cap <= 0 || srcNdv > cap ||
-          files.size.toLong * math.max(srcNdv, 1L) > probeBudget) None
-      else {
-        val perKey = keys.map { k =>
-          val vs = src.select(col(k)).where(col(k).isNotNull)
-            .distinct().limit(cap + 1).collect().map(_.get(0))
-          if (vs.length > cap) None // approx NDV undercounted; stay on ranges
-          else Some {
-            val in: SFilter = SIn(k, vs)
-            if (keyNulls(k)) SOr(in, SIsNull(k)) else in
-          }
-        }
-        if (perKey.contains(None)) None
-        else Some(perKey.flatten.reduce(SAnd(_, _): SFilter))
-      }
-    }
+    val keyIn: Option[SFilter] =
+      for (n <- ks.tupleCount; perKey <- ks.values
+           if files.size.toLong * math.max(n, 1L) <= probeBudget)
+      yield keys.indices.map { i =>
+        val in: SFilter = SIn(keys(i), perKey(i).toArray)
+        if (ks.hasNull(i)) SOr(in, SIsNull(keys(i))) else in
+      }.reduce(SAnd(_, _): SFilter)
     files.partition { f =>
       // partition values make pruning work when the key IS (or includes)
       // an identity partition column — those carry no file stats.
@@ -1384,14 +1365,16 @@ class IceTable(
     * source's values, unmatched source rows are inserted, unmatched target
     * rows survive. Null-safe key equality.
     *
-    * Physically file-granular copy-on-write: one small aggregation computes
-    * the source's per-key-column [min, max] (+ null presence), the manifest
+    * Physically file-granular copy-on-write: one Spark job over the
+    * source's key columns computes their per-key [min, max] (+ null
+    * presence) and counts the distinct key tuples exactly; the manifest
     * stats prove which target files cannot contain a matching key — and
-    * when the source key set is small, a per-key IN over manifest blooms
-    * proves even scattered keys absent (see [[keyCandidates]]) — so only
-    * the intersecting files are rewritten (anti-join + union). Every other
-    * file is carried into the new snapshot untouched. Files without stats
-    * are conservatively rewritten.
+    * when the source has at most `graft.upsert.keyPeekCap` distinct key
+    * tuples, a per-key IN of the values that same job collected proves
+    * even scattered keys absent through min/max and blooms (see
+    * [[keyCandidates]]) — so only the intersecting files are rewritten
+    * (anti-join + union). Every other file is carried into the new
+    * snapshot untouched. Files without stats are conservatively rewritten.
     */
   def upsert(df: DataFrame, keys: Seq[String]): IceTable = {
     require(keys.nonEmpty,

@@ -258,6 +258,38 @@ class ComponentSpec extends SparkSpec {
     writeConfig(d2,
       s"""{"action": "nope", "parameters": {"catalog": {"warehouse": "${scratch("w")}"}}}""")
     assert(ComponentMain.execute(spark, d2) == 1)
+
+    // an upsert primary key naming a column the input lacks, from the
+    // config and from the manifest: a user error naming the column
+    val d3 = dataDir("err3")
+    val wh = scratch("component-err3-wh")
+    val r = graft.queries.QUtil.t(spark, sfDir, "region")
+    val csvDir = s"$d3/in/tables/region.csv"
+    graft.sources.KeboolaCsv.writeQuoted(r, csvDir, singleFile = true)
+    def upsertWith(configKey: String, manifestKey: String): (Int, String) = {
+      Files.writeString(Paths.get(s"$csvDir.manifest"), KeboolaManifest.toJson(
+        KeboolaManifest.forSchema(r.schema, primaryKey = Seq(manifestKey).filter(_.nonEmpty))))
+      val pk = if (configKey.isEmpty) "" else s""", "primary_key": ["$configKey"]"""
+      writeConfig(d3,
+        s"""{"action": "run", "parameters": {
+           |  "catalog": {"warehouse": "$wh"},
+           |  "wr_destination": {"namespace": "lake", "table_name": "region_t",
+           |    "mode": "upsert"$pk}
+           |}}""".stripMargin)
+      val err = new ByteArrayOutputStream()
+      val prev = System.err
+      System.setErr(new PrintStream(err, true))
+      try (ComponentMain.execute(spark, d3), err.toString)
+      finally System.setErr(prev)
+    }
+    for ((cfgKey, manKey) <- Seq(("r_nokey", ""), ("", "r_nokey"))) {
+      val (code, err) = upsertWith(cfgKey, manKey)
+      assert(code == 1, s"missing key column must be a user error: $err")
+      assert(err.contains("ERROR:") && err.contains("r_nokey"), err)
+    }
+    assert(!new IceCatalog(spark, wh).tableExists("lake", "region_t"),
+      "a rejected upsert must not create the table")
+    assert(upsertWith("r_regionkey", "")._1 == 0)
   }
 
   test("storage api client retries then succeeds") {

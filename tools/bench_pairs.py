@@ -1,0 +1,101 @@
+#!/usr/bin/env python3
+"""Alternated parent/change benchmark pairs, summarized per metric.
+
+Runs `perfbench/run.py` untraced in two checkouts, one pair per seed, the
+same seed on both sides, alternating which side goes first (even pairs:
+parent first). For every end-to-end metric of BENCHMARK.json it prints the
+parent and change medians, the parent's spread (IQR / median), the change
+in % and how many pairs the change wins, plus failed/attempted ops per side.
+
+Usage:
+  python3 tools/bench_pairs.py <parent-checkout> <change-checkout> \\
+      --workload component_jobs --seeds 501-510 [--seconds 20] [--log runs.jsonl]
+
+Each checkout builds what it runs from its own sources (the first run of a
+checkout compiles). `--log` appends one JSON line per run (side, seed and the
+run's result line) so a summary can be checked later.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+
+def quartiles(xs):
+    """Q1 and Q3 by linear interpolation between order statistics."""
+    s = sorted(xs)
+
+    def q(p):
+        pos = p * (len(s) - 1)
+        lo = int(pos)
+        hi = min(lo + 1, len(s) - 1)
+        return s[lo] + (s[hi] - s[lo]) * (pos - lo)
+    return q(0.25), q(0.75)
+
+
+def run(checkout, workload, seed, seconds):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
+    if p.returncode != 0 or not lines:
+        tail = "\n".join((p.stdout + p.stderr).splitlines()[-20:])
+        sys.exit(f"run failed in {checkout} (seed {seed}, exit {p.returncode}):\n{tail}")
+    return json.loads(lines[-1])
+
+
+def parse_seeds(text):
+    a, _, b = text.partition("-")
+    return list(range(int(a), int(b or a) + 1))
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("parent")
+    ap.add_argument("change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True, help="inclusive range, e.g. 501-510")
+    ap.add_argument("--seconds", type=float, default=20)
+    ap.add_argument("--log")
+    a = ap.parse_args()
+
+    with open(os.path.join(a.change, "BENCHMARK.json")) as f:
+        metrics = json.load(f)["end_to_end"]
+    sides = {"parent": a.parent, "change": a.change}
+    results = {"parent": [], "change": []}
+    for i, seed in enumerate(parse_seeds(a.seeds)):
+        order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+        for side in order:
+            r = run(sides[side], a.workload, seed, a.seconds)
+            results[side].append(r)
+            if a.log:
+                with open(a.log, "a") as f:
+                    f.write(json.dumps({"side": side, "seed": seed,
+                                        "workload": a.workload, "result": r}) + "\n")
+            print(f"[pairs] seed {seed} {side}: " + " ".join(
+                f"{m['name']}={r['metrics'][m['name']]['value']:.4g}" for m in metrics),
+                file=sys.stderr, flush=True)
+
+    n = len(results["parent"])
+    print(f"{a.workload}: {n} alternated pairs, seeds {a.seeds}")
+    print(f"{'metric':<16}{'parent':>12}{'change':>12}{'delta':>9}"
+          f"{'parent IQR/med':>16}{'wins':>8}")
+    for m in metrics:
+        name, higher = m["name"], m["better"] == "higher"
+        pv = [r["metrics"][name]["value"] for r in results["parent"]]
+        cv = [r["metrics"][name]["value"] for r in results["change"]]
+        pm, cm = statistics.median(pv), statistics.median(cv)
+        q1, q3 = quartiles(pv)
+        wins = sum((c > p) if higher else (c < p) for p, c in zip(pv, cv))
+        print(f"{name:<16}{pm:>12.4g}{cm:>12.4g}{100 * (cm / pm - 1):>+8.1f}%"
+              f"{(q3 - q1) / pm:>16.3f}{wins:>5}/{n}")
+    for side in ("parent", "change"):
+        att = sum(r["attempted"] for r in results[side])
+        fail = sum(r["failed"] for r in results[side])
+        print(f"{side}: {fail} of {att} ops failed")
+
+
+if __name__ == "__main__":
+    main()
