@@ -108,49 +108,6 @@ class IceTable(
 
   def toDF: DataFrame = scan()
 
-  /** The snapshot log as a DataFrame (the `.snapshots` metadata table —
-    * also addressable in SQL as `<cat>.<ns>.<tbl>.snapshots`). Metadata
-    * only: O(snapshots) rows built from the version log, zero file IO.
-    */
-  def snapshotsDF: DataFrame = {
-    import spark.implicits._
-    val m = meta
-    m.snapshots.map(s => (s.snapshotId, s.timestampMs, s.operation,
-      FileStats.addedCount(s), s.addedRows, s.totalRows,
-      s.snapshotId == m.currentSnapshotId))
-      .toDF("snapshot_id", "timestamp_ms", "operation", "added_files",
-        "added_rows", "total_rows", "is_current")
-  }
-
-  /** The current snapshot's data-file manifest as a DataFrame (the
-    * `.files` metadata table / SQL `<tbl>.files`): per-file row counts and
-    * sizes straight from the committed manifest — the operational view a
-    * compaction policy reads ("how many small files?") without touching
-    * data. The driver ships only the manifest PATH; each task parses its
-    * manifest document executor-side, so the view stays O(1) driver memory
-    * at any file count. In-memory / pre-upgrade snapshots (no external
-    * manifest) fall back to inline rows.
-    */
-  def filesDF: DataFrame = {
-    import spark.implicits._
-    meta.currentSnapshot match {
-      case Some(s) if s.manifestFile.nonEmpty =>
-        val conf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration)
-        spark.createDataset(Seq(s.manifestFile)).mapPartitions { it =>
-          it.flatMap { p =>
-            val hp = new Path(p)
-            MetaIo.readManifestDoc(hp.getFileSystem(conf.value), p)
-              .files.iterator.map(f => (f.path, f.rows, f.bytes))
-          }
-        }.toDF("path", "rows", "bytes")
-      case other =>
-        other.map(visibleFiles).getOrElse(Nil)
-          .map(f => (f.path, f.rows, f.bytes))
-          .toDF("path", "rows", "bytes")
-    }
-  }
-
   /** Incremental append scan (the Iceberg `incremental read` analog, and
     * the batch form of CDC tailing): rows added by snapshots AFTER
     * `fromSnapshotId` (exclusive) up to `toSnapshotId` (inclusive, default
@@ -351,14 +308,7 @@ class IceTable(
         else df.sortWithinPartitions(inFileOrder.map(col): _*)
       else withDirs.repartition(dirCols.map(col): _*)
         .sortWithinPartitions((dirCols ++ inFileOrder).map(col): _*)
-    // `graft.write.rowLoop=false` is the operational kill-switch back to
-    // Spark's native parquet writer (plus the NDV read-back pass) — same
-    // committed results, minus the in-line sums, at one extra read of the
-    // write's own output.
-    val rowLoop = scala.util.Try(
-      spark.conf.get("graft.write.rowLoop", "true")).getOrElse("true") != "false"
-    if (rowLoop &&
-        graft.sources.v2.IceLiteRowWrite.supports(df.schema, partitionBy)) {
+    if (graft.sources.v2.IceLiteRowWrite.supports(df.schema, partitionBy)) {
       // Fast path: the DSv2 row-loop writer, driven from an RDD job. Exact
       // per-file sums and version-"3" NDV sketches accumulate IN-LINE, so
       // the table-API funnel — every maintenance rewrite (compact,
@@ -1404,7 +1354,7 @@ class IceTable(
       .filter(d => untouched.exists(f => qualify(f.path).startsWith(qualify(d) + "/")))
     // rewritten candidates had their deletes applied; untouched files keep
     // theirs. The delete dirs of surviving entries must stay referenced.
-    val carriedDeletes = trimDeletes(curDeletes,
+    val carriedDeletes = FileStats.trimDeletes(curDeletes,
       untouched.map(f => qualify(f.path)).toSet)
     val delDirs = carriedDeletes.map(d => new Path(d.path).getParent.toString).distinct
     commitSnapshot(m, "upsert", untouchedDirs ++ delDirs :+ dir, added,
@@ -1585,9 +1535,6 @@ class IceTable(
       this
     }
   }
-
-  private def trimDeletes(ds: Seq[DeleteStat], keep: Set[String]): Seq[DeleteStat] =
-    FileStats.trimDeletes(ds, keep)
 
   /** Merge-on-read primary-key upsert: same semantics as [[upsert]]
     * (matched target rows take the source's values, unmatched source rows
@@ -2034,7 +1981,7 @@ class IceTable(
       }
     val untouchedDirs = currentDirs
       .filter(d => untouched.exists(f => qualify(f.path).startsWith(qualify(d) + "/")))
-    val carriedDeletes = trimDeletes(curDeletes,
+    val carriedDeletes = FileStats.trimDeletes(curDeletes,
       untouched.map(f => qualify(f.path)).toSet)
     val delDirs = carriedDeletes.map(d => new Path(d.path).getParent.toString).distinct
     commitSnapshot(m, "delete", untouchedDirs ++ delDirs ++ addedDirs, added,

@@ -2121,14 +2121,15 @@ object IceliteOps {
         // the table history is FIXTURE (the operator under test is the
         // metadata-view READ): built once per JVM per scale factor
         val wh = d2Fixture(s, dir)
-        val tbl = new IceCatalog(s, wh).loadTable("lake", "ev_meta")
-        // .files view: exactly the compacted manifest
-        val files = tbl.filesDF
+        s.conf.set("spark.sql.catalog.icelite_d2", "graft.sources.v2.IceLiteCatalog")
+        s.conf.set("spark.sql.catalog.icelite_d2.warehouse", wh)
+        // .files view: exactly the compacted manifest, parsed by the task
+        val files = s.sql("SELECT path, rows FROM icelite_d2.lake.ev_meta.files")
+        require(files.queryExecution.executedPlan.toString.contains("manifest-parallel"),
+          "files view must be served from the manifest document")
         require(files.count() == 2, "files view must list the 2 compacted files")
         require(files.agg(sum(col("rows"))).collect()(0).getLong(0) == total,
           "files view row counts must sum to the table total")
-        s.conf.set("spark.sql.catalog.icelite_d2", "graft.sources.v2.IceLiteCatalog")
-        s.conf.set("spark.sql.catalog.icelite_d2.warehouse", wh)
         s.sql("""SELECT snapshot_id, operation, added_files, added_rows,
                 |  total_rows, is_current
                 |FROM icelite_d2.lake.ev_meta.snapshots ORDER BY snapshot_id""".stripMargin)

@@ -3,6 +3,7 @@ package graft.sources.v2
 import java.util
 import java.util.OptionalLong
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
@@ -621,7 +622,9 @@ private[v2] class IceLiteScanBuilder(
 
   override def build(): Scan = aggResult match {
     case Some((schema, rows)) if rowLevel.isEmpty =>
-      new IceLiteAggScan(s"$ns.$tbl", schema, rows)
+      new IceLiteMetaScan(
+        s"icelite $ns.$tbl aggPushed=[${schema.fieldNames.mkString(",")}] (manifest-only)",
+        schema, Seq(InlineRows(rows)))
     case _ =>
       new IceLiteScan(warehouse, ns, tbl, tableSchema, partitionBy, required,
         files, pushed, limit, rowLevel, wantsFileCol, wantsPosCol,
@@ -1039,8 +1042,12 @@ private[v2] object ManifestAgg {
         if (cmpCatalyst(dt, a, b) <= 0 == isMin) a else b)))
     }
 
-  /** Parse a manifest stat string into the catalyst-internal value. */
-  private def parseTyped(dt: DataType, s: String): Option[Any] = dt match {
+  /** Parse a manifest stat string into the catalyst-internal value — the
+    * one stat decoder, shared by MIN/MAX pushdown and the scan's CBO column
+    * bounds. Stat encoding per [[graft.icelite.FileStats]]: dates as epoch
+    * days, timestamps as micros, floats widened exactly to double strings.
+    */
+  private[v2] def parseTyped(dt: DataType, s: String): Option[Any] = dt match {
     case LongType => s.toLongOption
     case IntegerType | DateType => s.toIntOption
     case ShortType => s.toShortOption
@@ -1067,7 +1074,7 @@ private[v2] object ManifestAgg {
     case _ => None
   }
 
-  private def cmpCatalyst(dt: DataType, a: Any, b: Any): Int = (a, b) match {
+  private[v2] def cmpCatalyst(dt: DataType, a: Any, b: Any): Int = (a, b) match {
     case (x: Long, y: Long) => java.lang.Long.compare(x, y)
     case (x: Int, y: Int) => Integer.compare(x, y)
     case (x: Short, y: Short) => java.lang.Short.compare(x, y)
@@ -1082,55 +1089,10 @@ private[v2] object ManifestAgg {
   }
 }
 
-/** A scan whose entire result was computed from the manifest at plan time:
-  * one partition, one row, zero parquet IO.
-  */
-private[v2] class IceLiteAggScan(
-    tableName: String, aggSchema: StructType, rows: Seq[InternalRow])
-    extends Scan with Batch {
-
-  override def readSchema(): StructType = aggSchema
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"icelite $tableName aggPushed=[${aggSchema.fieldNames.mkString(",")}] (manifest-only)"
-
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(IceLiteAggPartition(aggSchema.json,
-      rows.map(row =>
-        aggSchema.fields.indices.map(i =>
-          if (row.isNullAt(i)) null
-          else row.get(i, aggSchema.fields(i).dataType) match {
-            case u: UTF8String => u.toString // serializable surrogate
-            case v => v
-          }).toArray).toArray))
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-        val ap = p.asInstanceOf[IceLiteAggPartition]
-        val schema = DataType.fromJson(ap.schemaJson).asInstanceOf[StructType]
-        val decoded = ap.rows.map(_.zipWithIndex.map {
-          case (s: String, i) if schema.fields(i).dataType == StringType =>
-            UTF8String.fromString(s)
-          case (v, _) => v
-        })
-        new PartitionReader[InternalRow] {
-          private var i = -1
-          override def next(): Boolean = { i += 1; i < decoded.length }
-          override def get(): InternalRow = new GenericInternalRow(decoded(i))
-          override def close(): Unit = ()
-        }
-      }
-    }
-}
-
-private[v2] case class IceLiteAggPartition(schemaJson: String, rows: Array[Array[Any]])
-    extends InputPartition
-
-/** Read-only in-memory DSv2 table serving a metadata listing — the engine
-  * behind SQL `<cat>.<ns>.<tbl>.snapshots` / `.files` (Iceberg's metadata
-  * tables). Rows are built driver-side from the version log / manifest
-  * (metadata-sized by construction) and shipped as one input partition.
+/** The metadata views of a table (Iceberg's metadata tables): each view
+  * picks its partitions — rows built driver-side from the version log /
+  * manifest when metadata-sized, or manifest / delete-file paths that the
+  * tasks parse — and serves them through one [[IceLiteMetaScan]].
   */
 private[v2] object IceLiteMeta {
 
@@ -1147,7 +1109,23 @@ private[v2] object IceLiteMeta {
 
   def table(meta: graft.icelite.TableMeta,
       fs: org.apache.hadoop.fs.FileSystem, kind: String,
-      tableDir: Path = null): Table = kind match {
+      tableDir: Path = null): Table = {
+    val tblName = s"${meta.namespace}.${meta.name}.$kind"
+    val (schema, parts, mode) = view(meta, fs, kind, tableDir)
+    new IceLiteMetaTable(tblName, new IceLiteMetaScan(
+      s"icelite metadata $tblName" + mode.fold("")(m => s" ($m)"), schema, parts))
+  }
+
+  /** A view's schema, its partitions, and its parallel serving mode
+    * (None: driver-built inline rows).
+    */
+  private type View = (StructType, Seq[MetaPart], Option[String])
+
+  private def inline(schema: StructType, rows: Seq[Array[Any]]): View =
+    (schema, Seq(InlineRows.of(rows)), None)
+
+  private def view(meta: graft.icelite.TableMeta,
+      fs: org.apache.hadoop.fs.FileSystem, kind: String, tableDir: Path): View = kind match {
     case "entries" =>
       // manifest entries of the CURRENT snapshot (Iceberg's .entries):
       // status 1 = added by the current snapshot, 0 = existing (carried);
@@ -1188,7 +1166,7 @@ private[v2] object IceLiteMeta {
               UTF8String.fromString(f.path), Long.box(f.rows),
               Long.box(f.bytes))))
         }
-      new IceLiteMetaTable(s"${meta.namespace}.${meta.name}.entries", schema, rows)
+      inline(schema, rows)
     case "all_entries" =>
       // manifest entries of EVERY snapshot (Iceberg's .all_entries):
       // (snapshot, status, data_file) where status is relative to that
@@ -1200,11 +1178,10 @@ private[v2] object IceLiteMeta {
       val schema = StructType.fromDDL(
         "snapshot_id BIGINT, status INT, " +
           "data_file STRUCT<path: STRING, rows: BIGINT, bytes: BIGINT>")
-      val tblName = s"${meta.namespace}.${meta.name}.all_entries"
       if (meta.snapshots.nonEmpty && meta.snapshots.forall(s =>
           s.manifestFile.nonEmpty && s.addedFiles.isEmpty))
-        new IceLiteAllEntriesTable(tblName, schema,
-          meta.snapshots.map(s => (s.snapshotId, s.manifestFile)))
+        (schema, meta.snapshots.map(s => SnapshotEntries(s.snapshotId, s.manifestFile)),
+          Some("manifest-parallel"))
       else {
         // pre-manifest (in-memory/legacy) snapshots are metadata-sized
         // by construction: inline rows
@@ -1212,9 +1189,9 @@ private[v2] object IceLiteMeta {
           val added = graft.icelite.FileStats.addedPathsOf(fs, s)
             .map(graft.icelite.FileStats.normPath).toSet
           graft.icelite.FileStats.visible(fs, s).map(f =>
-            IceLiteAllEntries.row(s.snapshotId, added, f))
+            SnapshotEntries.row(s.snapshotId, added, f))
         }
-        new IceLiteMetaTable(tblName, schema, rows)
+        (schema, Seq(InlineRows(rows)), None)
       }
     case "all_manifests" =>
       // every manifest DOCUMENT reachable from any snapshot, with the
@@ -1245,8 +1222,7 @@ private[v2] object IceLiteMeta {
         }
         b.result()
       }
-      new IceLiteMetaTable(
-        s"${meta.namespace}.${meta.name}.all_manifests", schema, rows)
+      inline(schema, rows)
     case "position_deletes" =>
       // the outstanding position-delete ROWS of the current snapshot
       // (Iceberg's .position_deletes): one row per deleted (file, pos) —
@@ -1258,8 +1234,7 @@ private[v2] object IceLiteMeta {
       val files = meta.currentSnapshot
         .map(s => graft.icelite.FileStats.deletesOf(fs, s)).getOrElse(Nil)
         .filterNot(_.isEquality).map(_.path)
-      new IceLitePosDeletesTable(
-        s"${meta.namespace}.${meta.name}.position_deletes", schema, files)
+      (schema, files.map(PositionDeleteFile), Some("delete-file-parallel"))
     case "metadata_log_entries" =>
       // the version log itself (Iceberg's .metadata_log_entries): one row
       // per durable metadata version — the ops view of the COMMIT history,
@@ -1276,8 +1251,7 @@ private[v2] object IceLiteMeta {
         .map { case (v, m, path) => Array[Any](v, path,
           if (m.currentSnapshotId > 0) m.currentSnapshotId else null,
           m.snapshots.size) }
-      new IceLiteMetaTable(
-        s"${meta.namespace}.${meta.name}.metadata_log_entries", schema, rows)
+      inline(schema, rows)
     case "refs" =>
       // named refs with their recorded KIND (Iceberg's .refs): 'tag' pins
       // a snapshot forever, 'branch' is a ref a write has advanced
@@ -1288,7 +1262,7 @@ private[v2] object IceLiteMeta {
       val rows = meta.refs.keys.toSeq.sorted
         .map(n => Array[Any](n, meta.refTypes.getOrElse(n, null),
           meta.refSnapshot(n).get))
-      new IceLiteMetaTable(s"${meta.namespace}.${meta.name}.refs", schema, rows)
+      inline(schema, rows)
     case "deletes" =>
       // outstanding merge-on-read delete files of the CURRENT snapshot:
       // the operational view a compaction policy reads ("how much delete
@@ -1309,7 +1283,7 @@ private[v2] object IceLiteMeta {
           else d.appliesTo.map(e =>
             Array[Any](d.path, "position", e.path, e.rows, null))
         }
-      new IceLiteMetaTable(s"${meta.namespace}.${meta.name}.deletes", schema, rows)
+      inline(schema, rows)
     case "history" =>
       // table lineage (Iceberg's .history): rollbackTo moves the current
       // POINTER without a snapshot, so later writes branch — the recorded
@@ -1325,7 +1299,7 @@ private[v2] object IceLiteMeta {
       val rows = meta.snapshots.map(s => Array[Any](
         s.timestampMs, s.snapshotId, meta.parentOf(s),
         ancestors(s.snapshotId)))
-      new IceLiteMetaTable(s"${meta.namespace}.${meta.name}.history", schema, rows)
+      inline(schema, rows)
     case "manifests" =>
       // one external manifest document per snapshot (the O(snapshots)
       // metadata the version log points at)
@@ -1342,7 +1316,7 @@ private[v2] object IceLiteMeta {
         Array[Any](s.snapshotId, s.manifestFile, len,
           graft.icelite.FileStats.addedCount(s), chain)
       }
-      new IceLiteMetaTable(s"${meta.namespace}.${meta.name}.manifests", schema, rows)
+      inline(schema, rows)
     case "partitions" =>
       // per-partition file/row/byte totals of the CURRENT snapshot — the
       // layout-health view (skew, small-file pressure) a maintenance
@@ -1352,14 +1326,10 @@ private[v2] object IceLiteMeta {
         "partition STRING, file_count BIGINT, row_count BIGINT, bytes BIGINT")
       meta.currentSnapshot match {
         case Some(s) if s.manifestFile.nonEmpty =>
-          new IceLitePartitionsTable(
-            s"${meta.namespace}.${meta.name}.partitions", schema, Seq(s.manifestFile))
-        case Some(s) =>
-          new IceLiteMetaTable(s"${meta.namespace}.${meta.name}.partitions",
-            schema, IceLitePartitions.rows(graft.icelite.FileStats.visible(fs, s)))
-        case None =>
-          new IceLiteMetaTable(
-            s"${meta.namespace}.${meta.name}.partitions", schema, Nil)
+          (schema, Seq(PartitionsManifest(s.manifestFile)), Some("manifest-parallel"))
+        case other =>
+          (schema, Seq(InlineRows(PartitionsManifest.rows(
+            other.map(s => graft.icelite.FileStats.visible(fs, s)).getOrElse(Nil)))), None)
       }
     case "stats" =>
       // per-column table statistics from the CURRENT snapshot's manifest —
@@ -1404,7 +1374,7 @@ private[v2] object IceLiteMeta {
           ndv.map(Long.box).orNull, nulls.map(Long.box).orNull,
           Boolean.box(fileNdv.isDefined), Boolean.box(bloomed))
       }
-      new IceLiteMetaTable(s"${meta.namespace}.${meta.name}.stats", schema, rows)
+      inline(schema, rows)
     case "snapshots" =>
       val schema = StructType.fromDDL(
         "snapshot_id BIGINT, timestamp_ms BIGINT, operation STRING, " +
@@ -1414,7 +1384,7 @@ private[v2] object IceLiteMeta {
         s.snapshotId, s.timestampMs, s.operation,
         graft.icelite.FileStats.addedCount(s),
         s.addedRows, s.totalRows, s.snapshotId == meta.currentSnapshotId))
-      new IceLiteMetaTable(s"${meta.namespace}.${meta.name}.snapshots", schema, rows)
+      inline(schema, rows)
     // `data_files` is Iceberg's name-split spelling of the same rows:
     // icelite's visible-file listing IS the data-file listing (delete
     // files live in the snapshot's delete ledger, served below).
@@ -1425,13 +1395,12 @@ private[v2] object IceLiteMeta {
         // and parse there — the driver never materializes O(files) rows
         // (both manifest formats parse executor-side)
         case Some(s) if s.manifestFile.nonEmpty =>
-          new IceLiteManifestFilesTable(
-            s"${meta.namespace}.${meta.name}.$kind", schema, Seq(s.manifestFile))
+          (schema, Seq(FilesManifest(s.manifestFile)), Some("manifest-parallel"))
         // in-memory / pre-upgrade metadata: inline rows (metadata-sized)
         case other =>
           val rows = other.map(s => graft.icelite.FileStats.visible(fs, s))
             .getOrElse(Nil).map(f => Array[Any](f.path, f.rows, f.bytes))
-          new IceLiteMetaTable(s"${meta.namespace}.${meta.name}.$kind", schema, rows)
+          inline(schema, rows)
       }
     case "delete_files" =>
       // the outstanding delete FILES of the current snapshot — Iceberg's
@@ -1450,8 +1419,7 @@ private[v2] object IceLiteMeta {
             Array[Any](d.path, "equality", d.eqRows, d.eqCols.mkString(","))
           else Array[Any](d.path, "position", d.rows, null)
         }
-      new IceLiteMetaTable(
-        s"${meta.namespace}.${meta.name}.delete_files", schema, rows)
+      inline(schema, rows)
     case "all_delete_files" =>
       // every delete file reachable from ANY snapshot, keyed by the FIRST
       // snapshot that carries it (delete files join a table at the MOR
@@ -1484,8 +1452,7 @@ private[v2] object IceLiteMeta {
           }
         }
       }
-      new IceLiteMetaTable(
-        s"${meta.namespace}.${meta.name}.all_delete_files", schema, rows)
+      inline(schema, rows)
     case "all_files" | "all_data_files" =>
       // every data file EVER ADDED, with its committing snapshot — the
       // lineage/debug view (the Iceberg all_files analog, keyed by the
@@ -1497,56 +1464,120 @@ private[v2] object IceLiteMeta {
       // those snapshots are metadata-sized by construction.
       val schema = StructType.fromDDL(
         "snapshot_id BIGINT, path STRING, rows BIGINT, bytes BIGINT")
-      val tblName = s"${meta.namespace}.${meta.name}.$kind"
       // parallel only when every snapshot is fully externalized (legacy
       // bare-array manifests keep addedFiles INLINE on the snapshot — the
       // executor-parsed document would not see them)
       if (meta.snapshots.nonEmpty && meta.snapshots.forall(s =>
           s.manifestFile.nonEmpty && s.addedFiles.isEmpty))
-        new IceLiteAllFilesTable(tblName, schema,
-          meta.snapshots.map(s => (s.snapshotId, s.manifestFile)))
+        (schema, meta.snapshots.map(s => SnapshotAddedFiles(s.snapshotId, s.manifestFile)),
+          Some("manifest-parallel"))
       else {
         val rows = meta.snapshots.flatMap(s =>
-          IceLiteAllFiles.rows(s.snapshotId,
+          SnapshotAddedFiles.rows(s.snapshotId,
             graft.icelite.FileStats.addedPathsOf(fs, s),
             graft.icelite.FileStats.visible(fs, s)))
-        new IceLiteMetaTable(tblName, schema, rows)
+        (schema, Seq(InlineRows(rows)), None)
       }
     case other => throw new IllegalArgumentException(
       s"unknown icelite metadata table '$other' (have: ${names.mkString(", ")})")
   }
 }
 
-/** The `.files` metadata table served FROM the external manifest documents:
-  * input partitions carry manifest paths only, and each reader parses its
-  * manifest on the executor — planning stays O(1) driver-side however many
-  * files the snapshot holds (the round-4 shape shipped O(files) driver rows
-  * as one partition).
+/** The one DSv2 scan behind every metadata view and the manifest-only
+  * aggregate: a fixed result schema, a description, and self-contained
+  * input partitions that each produce their own rows on the executor.
   */
-private[v2] case class IceLiteManifestPartition(manifestPath: String)
-    extends InputPartition
+private[v2] class IceLiteMetaScan(
+    desc: String, schema0: StructType, parts: Seq[MetaPart])
+    extends Scan with Batch {
 
-private[v2] class IceLiteManifestFilesTable(
-    tblName: String, schema0: StructType, manifestPaths: Seq[String])
+  override def readSchema(): StructType = schema0
+  override def toBatch: Batch = this
+  override def description(): String = desc
+  override def planInputPartitions(): Array[InputPartition] = parts.toArray
+  // inline rows open no file, so an all-inline scan ships no Hadoop conf
+  override def createReaderFactory(): PartitionReaderFactory = new MetaReaderFactory(
+    if (parts.forall(_.isInstanceOf[InlineRows])) null
+    else new SerializableConfiguration(SparkSession.active.sparkContext.hadoopConfiguration))
+}
+
+/** Read-only DSv2 table serving one metadata view — the engine behind SQL
+  * `<cat>.<ns>.<tbl>.<view>` (Iceberg's metadata tables).
+  */
+private[v2] class IceLiteMetaTable(tblName: String, scan: IceLiteMetaScan)
     extends Table with SupportsRead {
 
   override def name(): String = tblName
-  override def schema(): StructType = schema0
+  override def schema(): StructType = scan.readSchema()
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = () => scan
+}
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new Scan with Batch {
-      override def readSchema(): StructType = schema0
-      override def toBatch: Batch = this
-      override def description(): String =
-        s"icelite metadata $tblName (manifest-parallel)"
-      override def planInputPartitions(): Array[InputPartition] =
-        manifestPaths.map(IceLiteManifestPartition(_): InputPartition).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new IceLiteManifestReaderFactory(new SerializableConfiguration(
-          SparkSession.active.sparkContext.hadoopConfiguration))
+private[v2] class MetaReaderFactory(conf: SerializableConfiguration)
+    extends PartitionReaderFactory {
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val (rows, release) = p.asInstanceOf[MetaPart].open(Option(conf).map(_.value).orNull)
+    new PartitionReader[InternalRow] {
+      private var cur: InternalRow = _
+      override def next(): Boolean = rows.hasNext && { cur = rows.next(); true }
+      override def get(): InternalRow = cur
+      override def close(): Unit = release()
     }
+  }
+}
+
+/** One input partition of an [[IceLiteMetaScan]]: one data source of
+  * result rows, opened on the executor together with the action that
+  * releases it.
+  */
+private[v2] sealed trait MetaPart extends InputPartition {
+  def open(conf: Configuration): (Iterator[InternalRow], () => Unit)
+}
+
+private[v2] object MetaPart {
+  val noRelease: () => Unit = () => ()
+
+  def manifest(conf: Configuration, path: String): graft.icelite.ManifestDoc = {
+    val p = new Path(path)
+    MetaIo.readManifestDoc(p.getFileSystem(conf), path)
+  }
+}
+
+/** Rows computed on the driver (metadata-sized by construction). */
+private[v2] case class InlineRows(rows: Seq[InternalRow]) extends MetaPart {
+  def open(conf: Configuration): (Iterator[InternalRow], () => Unit) =
+    (rows.iterator, MetaPart.noRelease)
+}
+
+private[v2] object InlineRows {
+  /** Driver-built rows; top-level strings become Catalyst strings. */
+  def of(rows: Seq[Array[Any]]): InlineRows = InlineRows(rows.map(r =>
+    new GenericInternalRow(r.map {
+      case s: String => UTF8String.fromString(s)
+      case v => v
+    })))
+}
+
+/** `.files` over a committed snapshot: the driver ships the manifest PATH
+  * and the task parses it, so planning stays O(1) driver-side however many
+  * files the snapshot holds.
+  */
+private[v2] case class FilesManifest(manifestPath: String) extends MetaPart {
+  def open(conf: Configuration): (Iterator[InternalRow], () => Unit) =
+    (MetaPart.manifest(conf, manifestPath).files.iterator.map(f =>
+      InternalRow(UTF8String.fromString(f.path), f.rows, f.bytes)), MetaPart.noRelease)
+}
+
+/** `.partitions` over a committed snapshot: the task parses the manifest
+  * and aggregates (a snapshot has a single manifest document, so the
+  * task-local aggregation is exact).
+  */
+private[v2] case class PartitionsManifest(manifestPath: String) extends MetaPart {
+  def open(conf: Configuration): (Iterator[InternalRow], () => Unit) =
+    (PartitionsManifest.rows(MetaPart.manifest(conf, manifestPath).files).iterator,
+      MetaPart.noRelease)
 }
 
 /** Partition aggregation over a manifest's file list — pure path algebra:
@@ -1554,7 +1585,7 @@ private[v2] class IceLiteManifestFilesTable(
   * partitioning's `__p_` alias stripped), so no schema or spec resolution
   * is needed and mixed-era layouts each report their own era's rendering.
   */
-private[v2] object IceLitePartitions {
+private[v2] object PartitionsManifest {
 
   def key(path: String): String =
     path.split('/').dropRight(1).filter(_.contains('='))
@@ -1564,318 +1595,80 @@ private[v2] object IceLitePartitions {
         else seg)
       .mkString("/")
 
-  def rows(files: Seq[graft.icelite.FileStat]): Seq[Array[Any]] =
+  def rows(files: Seq[graft.icelite.FileStat]): Seq[InternalRow] =
     files.groupBy(f => key(f.path)).toSeq.sortBy(_._1).map { case (k, fs) =>
-      Array[Any](k, fs.length.toLong, fs.map(_.rows).sum, fs.map(_.bytes).sum)
+      InternalRow(UTF8String.fromString(k), fs.length.toLong, fs.map(_.rows).sum,
+        fs.map(_.bytes).sum)
     }
 }
 
-/** `.partitions` over a committed snapshot: the driver ships the manifest
-  * PATH; the one task parses it and emits the aggregated per-partition
-  * rows (a snapshot has a single manifest document, so the task-local
-  * aggregation is exact).
+/** `.all_files`, one partition per snapshot: the task resolves that
+  * snapshot's manifest and emits its added entries.
   */
-private[v2] class IceLitePartitionsTable(
-    tblName: String, schema0: StructType, manifestPaths: Seq[String])
-    extends Table with SupportsRead {
-
-  override def name(): String = tblName
-  override def schema(): StructType = schema0
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new Scan with Batch {
-      override def readSchema(): StructType = schema0
-      override def toBatch: Batch = this
-      override def description(): String =
-        s"icelite metadata $tblName (manifest-parallel)"
-      override def planInputPartitions(): Array[InputPartition] =
-        manifestPaths.map(IceLiteManifestPartition(_): InputPartition).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new PartitionReaderFactory {
-          private val conf = new SerializableConfiguration(
-            SparkSession.active.sparkContext.hadoopConfiguration)
-          override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-            val mp = p.asInstanceOf[IceLiteManifestPartition]
-            val path = new Path(mp.manifestPath)
-            val pfs = path.getFileSystem(conf.value)
-            val it = IceLitePartitions
-              .rows(MetaIo.readManifestDoc(pfs, mp.manifestPath).files).iterator
-            new PartitionReader[InternalRow] {
-              private var cur: InternalRow = _
-              override def next(): Boolean =
-                it.hasNext && {
-                  val r = it.next()
-                  cur = new GenericInternalRow(Array[Any](
-                    UTF8String.fromString(r(0).asInstanceOf[String]),
-                    r(1), r(2), r(3)))
-                  true
-                }
-              override def get(): InternalRow = cur
-              override def close(): Unit = ()
-            }
-          }
-        }
-    }
+private[v2] case class SnapshotAddedFiles(snapshotId: Long, manifestPath: String)
+    extends MetaPart {
+  def open(conf: Configuration): (Iterator[InternalRow], () => Unit) = {
+    val doc = MetaPart.manifest(conf, manifestPath)
+    (SnapshotAddedFiles.rows(snapshotId, doc.addedPaths, doc.files).iterator,
+      MetaPart.noRelease)
+  }
 }
 
 /** Row algebra of `.all_files`: a snapshot's ADDED entries with stats from
   * its visible manifest; legacy snapshots whose manifest predates per-file
   * stats degrade to unknown rows (-1) rather than vanishing.
   */
-private[v2] object IceLiteAllFiles {
+private[v2] object SnapshotAddedFiles {
   def rows(snapshotId: Long, addedPaths: Seq[String],
-      visible: Seq[graft.icelite.FileStat]): Seq[Array[Any]] = {
+      visible: Seq[graft.icelite.FileStat]): Seq[InternalRow] = {
     val added = addedPaths.map(graft.icelite.FileStats.normPath).toSet
     val entries = visible.filter(f =>
       added(graft.icelite.FileStats.normPath(f.path)))
     if (entries.nonEmpty || addedPaths.isEmpty)
-      entries.map(f => Array[Any](snapshotId, f.path, f.rows, f.bytes))
-    else addedPaths.map(p => Array[Any](snapshotId, p, -1L, 0L))
+      entries.map(f => InternalRow(snapshotId, UTF8String.fromString(f.path), f.rows, f.bytes))
+    else addedPaths.map(p => InternalRow(snapshotId, UTF8String.fromString(p), -1L, 0L))
   }
 }
 
-/** `.all_files` served manifest-parallel: one partition per snapshot, the
-  * task resolves that snapshot's manifest and emits its added entries.
+/** `.all_entries`, one partition per snapshot: the task resolves that
+  * snapshot's manifest (delta chains included) and emits every visible
+  * entry with its status.
   */
-private[v2] case class IceLiteSnapManifestPartition(
-    snapshotId: Long, manifestPath: String) extends InputPartition
-
-private[v2] class IceLiteAllFilesTable(
-    tblName: String, schema0: StructType, snaps: Seq[(Long, String)])
-    extends Table with SupportsRead {
-
-  override def name(): String = tblName
-  override def schema(): StructType = schema0
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new Scan with Batch {
-      override def readSchema(): StructType = schema0
-      override def toBatch: Batch = this
-      override def description(): String =
-        s"icelite metadata $tblName (manifest-parallel)"
-      override def planInputPartitions(): Array[InputPartition] =
-        snaps.map { case (id, mp) =>
-          IceLiteSnapManifestPartition(id, mp): InputPartition }.toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new PartitionReaderFactory {
-          private val conf = new SerializableConfiguration(
-            SparkSession.active.sparkContext.hadoopConfiguration)
-          override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-            val mp = p.asInstanceOf[IceLiteSnapManifestPartition]
-            val path = new Path(mp.manifestPath)
-            val pfs = path.getFileSystem(conf.value)
-            val doc = MetaIo.readManifestDoc(pfs, mp.manifestPath)
-            val it = IceLiteAllFiles
-              .rows(mp.snapshotId, doc.addedPaths, doc.files).iterator
-            new PartitionReader[InternalRow] {
-              private var cur: InternalRow = _
-              override def next(): Boolean =
-                it.hasNext && {
-                  val r = it.next()
-                  cur = new GenericInternalRow(Array[Any](
-                    r(0), UTF8String.fromString(r(1).asInstanceOf[String]),
-                    r(2), r(3)))
-                  true
-                }
-              override def get(): InternalRow = cur
-              override def close(): Unit = ()
-            }
-          }
-        }
-    }
+private[v2] case class SnapshotEntries(snapshotId: Long, manifestPath: String)
+    extends MetaPart {
+  def open(conf: Configuration): (Iterator[InternalRow], () => Unit) = {
+    val doc = MetaPart.manifest(conf, manifestPath)
+    val added = doc.addedPaths.map(graft.icelite.FileStats.normPath).toSet
+    (doc.files.iterator.map(SnapshotEntries.row(snapshotId, added, _)), MetaPart.noRelease)
+  }
 }
 
-/** Row algebra of `.all_entries`: one internal row per (snapshot, visible
-  * file), status from the snapshot's own add list — shared by the
-  * snapshot-parallel reader and the legacy inline path.
+/** Row algebra of `.all_entries`: one row per (snapshot, visible file),
+  * status from the snapshot's own add list — shared by the snapshot-
+  * parallel partition and the legacy inline path.
   */
-private[v2] object IceLiteAllEntries {
+private[v2] object SnapshotEntries {
   def row(snapshotId: Long, addedNorm: Set[String],
-      f: graft.icelite.FileStat): Array[Any] = Array[Any](
-    Long.box(snapshotId),
-    Int.box(if (addedNorm(graft.icelite.FileStats.normPath(f.path))) 1 else 0),
-    new GenericInternalRow(Array[Any](
-      UTF8String.fromString(f.path), Long.box(f.rows), Long.box(f.bytes))))
+      f: graft.icelite.FileStat): InternalRow = InternalRow(
+    snapshotId,
+    if (addedNorm(graft.icelite.FileStats.normPath(f.path))) 1 else 0,
+    InternalRow(UTF8String.fromString(f.path), f.rows, f.bytes))
 }
 
-/** `.all_entries` served snapshot-parallel: one partition per snapshot,
-  * the task resolves that snapshot's manifest (delta chains included) and
-  * emits every visible entry with its status.
+/** `.position_deletes`, one partition per outstanding position-delete
+  * file: the task reads its parquet `(file_path, pos)` rows with the same
+  * stripped-predicate GroupReader the scan's delete application uses.
   */
-private[v2] class IceLiteAllEntriesTable(
-    tblName: String, schema0: StructType, snaps: Seq[(Long, String)])
-    extends Table with SupportsRead {
-
-  override def name(): String = tblName
-  override def schema(): StructType = schema0
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new Scan with Batch {
-      override def readSchema(): StructType = schema0
-      override def toBatch: Batch = this
-      override def description(): String =
-        s"icelite metadata $tblName (manifest-parallel)"
-      override def planInputPartitions(): Array[InputPartition] =
-        snaps.map { case (id, mp) =>
-          IceLiteSnapManifestPartition(id, mp): InputPartition }.toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new PartitionReaderFactory {
-          private val conf = new SerializableConfiguration(
-            SparkSession.active.sparkContext.hadoopConfiguration)
-          override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-            val mp = p.asInstanceOf[IceLiteSnapManifestPartition]
-            val path = new Path(mp.manifestPath)
-            val pfs = path.getFileSystem(conf.value)
-            val doc = MetaIo.readManifestDoc(pfs, mp.manifestPath)
-            val added = doc.addedPaths
-              .map(graft.icelite.FileStats.normPath).toSet
-            val it = doc.files.iterator
-            new PartitionReader[InternalRow] {
-              private var cur: InternalRow = _
-              override def next(): Boolean =
-                it.hasNext && {
-                  cur = new GenericInternalRow(
-                    IceLiteAllEntries.row(mp.snapshotId, added, it.next()))
-                  true
-                }
-              override def get(): InternalRow = cur
-              override def close(): Unit = ()
-            }
-          }
-        }
-    }
-}
-
-/** `.position_deletes` served delete-file-parallel: one input partition
-  * per outstanding position-delete file; the task reads its parquet
-  * `(file_path, pos)` rows with the same stripped-predicate GroupReader
-  * the scan's delete application uses.
-  */
-private[v2] case class IceLitePosDeletePartition(deleteFile: String)
-    extends InputPartition
-
-private[v2] class IceLitePosDeletesTable(
-    tblName: String, schema0: StructType, deleteFiles: Seq[String])
-    extends Table with SupportsRead {
-
-  override def name(): String = tblName
-  override def schema(): StructType = schema0
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new Scan with Batch {
-      override def readSchema(): StructType = schema0
-      override def toBatch: Batch = this
-      override def description(): String =
-        s"icelite metadata $tblName (delete-file-parallel)"
-      override def planInputPartitions(): Array[InputPartition] =
-        deleteFiles.map(IceLitePosDeletePartition(_): InputPartition).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new PartitionReaderFactory {
-          private val conf = new SerializableConfiguration(
-            SparkSession.active.sparkContext.hadoopConfiguration)
-          override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-            val df = p.asInstanceOf[IceLitePosDeletePartition].deleteFile
-            val rd = org.apache.parquet.hadoop.ParquetReader.builder(
-              new org.apache.parquet.hadoop.example.GroupReadSupport(),
-              new Path(df)).withConf(conf.value).build()
-            new PartitionReader[InternalRow] {
-              private var cur: InternalRow = _
-              override def next(): Boolean = {
-                val g = rd.read()
-                if (g == null) false
-                else {
-                  cur = new GenericInternalRow(Array[Any](
-                    UTF8String.fromString(
-                      g.getBinary("file_path", 0).toStringUsingUTF8),
-                    g.getLong("pos", 0),
-                    UTF8String.fromString(df)))
-                  true
-                }
-              }
-              override def get(): InternalRow = cur
-              override def close(): Unit = rd.close()
-            }
-          }
-        }
-    }
-}
-
-private[v2] class IceLiteManifestReaderFactory(conf: SerializableConfiguration)
-    extends PartitionReaderFactory {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val mp = p.asInstanceOf[IceLiteManifestPartition]
-    val path = new Path(mp.manifestPath)
-    val pfs = path.getFileSystem(conf.value)
-    val it = MetaIo.readManifestDoc(pfs, mp.manifestPath).files.iterator
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        it.hasNext && {
-          val f = it.next()
-          cur = new GenericInternalRow(
-            Array[Any](UTF8String.fromString(f.path), f.rows, f.bytes))
-          true
-        }
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
+private[v2] case class PositionDeleteFile(deleteFile: String) extends MetaPart {
+  def open(conf: Configuration): (Iterator[InternalRow], () => Unit) = {
+    val rd = org.apache.parquet.hadoop.ParquetReader.builder(
+      new org.apache.parquet.hadoop.example.GroupReadSupport(),
+      new Path(deleteFile)).withConf(conf).build()
+    val file = UTF8String.fromString(deleteFile)
+    (Iterator.continually(rd.read()).takeWhile(_ != null).map(g => InternalRow(
+      UTF8String.fromString(g.getBinary("file_path", 0).toStringUsingUTF8),
+      g.getLong("pos", 0), file)), () => rd.close())
   }
-}
-
-private[v2] case class IceLiteMetaPartition(
-    schemaJson: String, rows: Seq[Array[Any]]) extends InputPartition
-
-private[v2] class IceLiteMetaTable(
-    tblName: String, schema0: StructType, rows: Seq[Array[Any]])
-    extends Table with SupportsRead {
-
-  override def name(): String = tblName
-  override def schema(): StructType = schema0
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new Scan with Batch {
-      override def readSchema(): StructType = schema0
-      override def toBatch: Batch = this
-      override def description(): String = s"icelite metadata $tblName"
-      override def planInputPartitions(): Array[InputPartition] =
-        Array(IceLiteMetaPartition(schema0.json, rows))
-      override def createReaderFactory(): PartitionReaderFactory =
-        new PartitionReaderFactory {
-          override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-            val mp = p.asInstanceOf[IceLiteMetaPartition]
-            val schema = DataType.fromJson(mp.schemaJson).asInstanceOf[StructType]
-            val it = mp.rows.iterator
-            new PartitionReader[InternalRow] {
-              private var cur: InternalRow = _
-              override def next(): Boolean =
-                if (!it.hasNext) false
-                else {
-                  val vals: Array[Any] = it.next().zipWithIndex.map {
-                    case (s: String, i)
-                        if schema.fields(i).dataType == StringType =>
-                      UTF8String.fromString(s)
-                    case (v, _) => v
-                  }
-                  cur = new GenericInternalRow(vals)
-                  true
-                }
-              override def get(): InternalRow = cur
-              override def close(): Unit = ()
-            }
-          }
-        }
-    }
 }
 
 private[v2] object IceLiteScan {
@@ -2326,30 +2119,6 @@ private[v2] class IceLiteScan(
     }.toArray
   }
 
-  /** Decode one manifest min/max stat string to the column's CATALYST
-    * value (what `ColumnStat.min/max` carries — FilterEstimation compares
-    * these against literal bounds). Strings/booleans are skipped: CBO's
-    * range estimation is numeric, and a mistyped object would poison it.
-    * Stat encoding per [[graft.icelite.FileStats]]: dates as epoch days,
-    * timestamps as micros, floats widened exactly to double strings.
-    */
-  private def decodeStat(dt: DataType, s: String): Option[Any] = dt match {
-    case LongType => s.toLongOption
-    case IntegerType => s.toLongOption.map(_.toInt)
-    case DateType => s.toLongOption.map(_.toInt)
-    case TimestampType | TimestampNTZType => s.toLongOption
-    case DoubleType => s.toDoubleOption
-    case FloatType => s.toDoubleOption.map(_.toFloat)
-    // dot-less under scale>0 = legacy UNSCALED stat (pre-scaled-encoder
-    // manifests; see FilePrune.parseStat) — refuse rather than feed CBO a
-    // bound inflated by 10^scale
-    case d: DecimalType =>
-      if (d.scale > 0 && !s.contains('.')) None
-      else scala.util.Try(org.apache.spark.sql.types.Decimal(
-        BigDecimal(new java.math.BigDecimal(s)), d.precision, d.scale)).toOption
-    case _ => None
-  }
-
   /** CBO column statistics, manifest-only (zero data IO): distinct counts
     * union the per-file HLL NDV sketches, null counts sum the footer
     * stats, min/max fold the per-file bounds — each independently absent
@@ -2372,6 +2141,11 @@ private[v2] class IceLiteScan(
       val ndvEst = graft.icelite.Ndv.estimate(
         renames, addedColumns, tableSchema, pfiles, f.name)
       val nulls = graft.icelite.Ndv.nullCount(renames, addedColumns, pfiles, f.name)
+      // bounds are CATALYST values (what `ColumnStat.min/max` carries —
+      // FilterEstimation compares them against literal bounds); strings and
+      // booleans are skipped: CBO's range estimation is numeric, and a
+      // mistyped object would poison it
+      val ranged = f.dataType != StringType && f.dataType != BooleanType
       val bounds: Option[(Any, Any)] = {
         val perFile = pfiles.map { df =>
           val era = df.eraOrPath
@@ -2379,9 +2153,10 @@ private[v2] class IceLiteScan(
           val preAdd = addedColumns.exists(a =>
             a.cutoffSnapshotId >= era && (a.name == phys || a.name == f.name))
           if (preAdd) Some(None) // no values: contributes no bounds
+          else if (!ranged) None
           else for {
-            lo <- df.min.get(phys).flatMap(decodeStat(f.dataType, _))
-            hi <- df.max.get(phys).flatMap(decodeStat(f.dataType, _))
+            lo <- df.min.get(phys).flatMap(ManifestAgg.parseTyped(f.dataType, _))
+            hi <- df.max.get(phys).flatMap(ManifestAgg.parseTyped(f.dataType, _))
           } yield Some((lo, hi))
         }
         if (perFile.exists(_.isEmpty)) None // some file lacks the stat
@@ -2391,19 +2166,7 @@ private[v2] class IceLiteScan(
           else {
             // per-TYPE ordering: a lossy doubleValue fold would collapse
             // longs beyond 2^53 to equal doubles and report a wrong bound
-            implicit val ord: Ordering[Any] = (a: Any, b: Any) => f.dataType match {
-              case LongType | TimestampType | TimestampNTZType =>
-                java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
-              case IntegerType | DateType =>
-                Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
-              case FloatType =>
-                java.lang.Float.compare(a.asInstanceOf[Float], b.asInstanceOf[Float])
-              case _: DecimalType =>
-                a.asInstanceOf[org.apache.spark.sql.types.Decimal]
-                  .compare(b.asInstanceOf[org.apache.spark.sql.types.Decimal])
-              case _ =>
-                java.lang.Double.compare(a.asInstanceOf[Double], b.asInstanceOf[Double])
-            }
+            implicit val ord: Ordering[Any] = ManifestAgg.cmpCatalyst(f.dataType, _, _)
             Some((vs.map(_._1).min, vs.map(_._2).max))
           }
         }

@@ -277,6 +277,30 @@ class NdvSpec extends SparkSpec {
       assert(userStat.distinctCount.exists(d => math.abs(d.toDouble - 41.0) <= 3.0))
       assert(userStat.nullCount.contains(BigInt(100)),
         s"user nullCount ${userStat.nullCount} should sum the footer stats (100)")
+      // every ranged type's bounds equal Spark's own min/max over the same
+      // rows, as Catalyst values (epoch days, micros, Decimal)
+      val typed = spark.range(1, 301).selectExpr(
+        "CAST(id * 7 % 251 - 100 AS INT) AS i",
+        "id * 1000003 - 5 AS l",
+        "CAST(id AS DOUBLE) / 8 - 3 AS d",
+        "CAST(id * 1.25 - 7 AS DECIMAL(12,2)) AS dec",
+        "date_from_unix_date(CAST(18000 + id % 40 AS INT)) AS dt",
+        "timestamp_micros(1600000000000000 + id * 123457) AS ts")
+      cat.createTable("lake", "typed", typed.schema)
+      typed.writeTo("ice_cbo.lake.typed").append()
+      val typedRel = spark.table("ice_cbo.lake.typed").queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
+      }.head
+      val exact = typed.select(typed.columns.toSeq.flatMap(c => Seq(min(c), max(c))): _*)
+        .queryExecution.executedPlan.executeCollect().head
+      typed.schema.fields.zipWithIndex.foreach { case (f, i) =>
+        val st = typedRel.stats.attributeStats.toSeq.collectFirst {
+          case (a, s) if a.name == f.name => s
+        }.getOrElse(fail(s"no column stat for ${f.name}"))
+        val (lo, hi) = (exact.get(2 * i, f.dataType), exact.get(2 * i + 1, f.dataType))
+        assert(st.min.contains(lo) && st.max.contains(hi),
+          s"${f.name} bounds ${st.min}/${st.max} should equal Spark's min/max $lo/$hi")
+      }
       // CBO off: the per-column walk is skipped entirely (planning cost
       // gate) — attribute stats stay empty
       spark.conf.set("spark.sql.cbo.enabled", "false")

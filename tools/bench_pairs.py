@@ -5,7 +5,19 @@ Runs `perfbench/run.py` untraced in two checkouts, one pair per seed, the
 same seed on both sides, alternating which side goes first (even pairs:
 parent first). For every end-to-end metric of BENCHMARK.json it prints the
 parent and change medians, the parent's spread (IQR / median), the change
-in % and how many pairs the change wins, plus failed/attempted ops per side.
+in %, how many pairs the change wins and a verdict, plus failed/attempted
+ops per side. Verdicts, first match wins:
+
+  worse       the change median is worse than the parent median by more
+              than the metric's `bound` in BENCHMARK.json;
+  unresolved  the parent's IQR / median exceeds the bound, and not every
+              change run beats every parent run;
+  gain        the change wins at least 90% of the pairs and the median gap
+              exceeds the parent's IQR;
+  flat        none of the above.
+
+Exits 1 if any metric is `worse` or the change failed more ops than the
+parent.
 
 Usage:
   python3 tools/bench_pairs.py <parent-checkout> <change-checkout> \\
@@ -33,6 +45,22 @@ def quartiles(xs):
         hi = min(lo + 1, len(s) - 1)
         return s[lo] + (s[hi] - s[lo]) * (pos - lo)
     return q(0.25), q(0.75)
+
+
+def verdict(pv, cv, higher, bound):
+    """The verdict of one metric from its paired parent/change values."""
+    pm, cm = statistics.median(pv), statistics.median(cv)
+    q1, q3 = quartiles(pv)
+    loss = (pm - cm) if higher else (cm - pm)  # > 0: the change is worse
+    if loss > bound * abs(pm):
+        return "worse"
+    beats_all = min(cv) > max(pv) if higher else max(cv) < min(pv)
+    if (q3 - q1) > bound * abs(pm) and not beats_all:
+        return "unresolved"
+    wins = sum((c > p) if higher else (c < p) for p, c in zip(pv, cv))
+    if wins >= 0.9 * len(pv) and -loss > q3 - q1:
+        return "gain"
+    return "flat"
 
 
 def run(checkout, workload, seed, seconds):
@@ -81,7 +109,8 @@ def main():
     n = len(results["parent"])
     print(f"{a.workload}: {n} alternated pairs, seeds {a.seeds}")
     print(f"{'metric':<16}{'parent':>12}{'change':>12}{'delta':>9}"
-          f"{'parent IQR/med':>16}{'wins':>8}")
+          f"{'parent IQR/med':>16}{'wins':>8}  verdict")
+    worse = False
     for m in metrics:
         name, higher = m["name"], m["better"] == "higher"
         pv = [r["metrics"][name]["value"] for r in results["parent"]]
@@ -89,12 +118,17 @@ def main():
         pm, cm = statistics.median(pv), statistics.median(cv)
         q1, q3 = quartiles(pv)
         wins = sum((c > p) if higher else (c < p) for p, c in zip(pv, cv))
+        v = verdict(pv, cv, higher, m["bound"])
+        worse |= v == "worse"
         print(f"{name:<16}{pm:>12.4g}{cm:>12.4g}{100 * (cm / pm - 1):>+8.1f}%"
-              f"{(q3 - q1) / pm:>16.3f}{wins:>5}/{n}")
+              f"{(q3 - q1) / pm:>16.3f}{wins:>5}/{n}  {v}")
+    failed = {}
     for side in ("parent", "change"):
         att = sum(r["attempted"] for r in results[side])
-        fail = sum(r["failed"] for r in results[side])
-        print(f"{side}: {fail} of {att} ops failed")
+        failed[side] = sum(r["failed"] for r in results[side])
+        print(f"{side}: {failed[side]} of {att} ops failed")
+    if worse or failed["change"] > failed["parent"]:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
