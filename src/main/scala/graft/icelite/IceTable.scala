@@ -2,7 +2,7 @@ package graft.icelite
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
+import org.apache.spark.sql.functions.{col, lit, max, min, when}
 import org.apache.spark.sql.sources.{And => SAnd, Filter => SFilter, GreaterThanOrEqual => SGte, In => SIn, IsNull => SIsNull, LessThanOrEqual => SLte, Or => SOr}
 import org.apache.spark.sql.types.StructType
 
@@ -1363,7 +1363,7 @@ class IceTable(
 
   /** Merge-on-read row-level DELETE (Iceberg v2 position deletes): instead
     * of rewriting every candidate file (copy-on-write, [[deleteWhere]]),
-    * write one small parquet file of `(file_path, pos)` rows naming the
+    * write small parquet files of `(file_path, pos)` rows naming the
     * deleted positions and commit a metadata-only snapshot whose data-file
     * set is UNCHANGED. Scans subtract the positions at read time;
     * [[compact]] / [[replace]] fold the deletes away. This is the shape
@@ -1371,17 +1371,27 @@ class IceTable(
     * million-file table writes one tiny delete file instead of rewriting a
     * data file, at the cost of a per-read filter until the next compaction.
     *
-    * Falls back to copy-on-write when the table has rename history (the
-    * position scan reads files by the current schema) or a legacy manifest.
+    * ONE Spark job, no shuffle: the table's own scan, pinned to the
+    * snapshot the commit validates against, serves `_file`/`_pos` of the
+    * matching rows (its pushed condition prunes files by manifest stats),
+    * and each task writes its own delete file and reports per-data-file
+    * counts ([[MorDelta.writePositions]]: one task per
+    * `spark.sql.files.maxPartitionBytes` of planned files, at most
+    * `defaultParallelism`, so a selective delete writes one file). The
+    * scan's reader already subtracts outstanding position and equality
+    * deletes, era-scoped, so a row deleted before is never tombstoned or
+    * counted twice and the new total stays exact. A condition that matches
+    * nothing commits nothing.
+    *
+    * Falls back to copy-on-write when the table has rename history, a
+    * legacy manifest, or a condition on an identity partition column.
     */
   def deleteWhereMor(filters: Seq[org.apache.spark.sql.sources.Filter]): IceTable = {
-    import org.apache.spark.sql.functions.{coalesce => fCoalesce, lit => fLit}
     val m = meta
     val current = m.currentSnapshot.getOrElse(return this)
     val files = visibleFiles(current)
     if (m.renames.nonEmpty || files.exists(_.rows < 0))
       return deleteWhere(filters)
-    // the position scan reads candidate files WITHOUT directory binding;
     // identity partition columns are stored in data by every current
     // writer, but a condition on one stays conservative: copy-on-write
     // reads them era-correctly via readFiles
@@ -1389,65 +1399,33 @@ class IceTable(
       m.partitionSpecs.flatMap(sp => PartField.identityCols(sp.cols))).toSet
     if (filters.exists(_.references.exists(idCols.contains)))
       return deleteWhere(filters)
-    val tableSchema = StructType.fromDDL(m.schemaDdl)
     val cond = filters.flatMap(FilterCol.toColumn) match {
       case cols if cols.length == filters.length && cols.nonEmpty =>
         cols.reduce(_ && _)
       case _ => throw new IllegalArgumentException(
         s"delete condition not translatable: ${filters.mkString(", ")}")
     }
-    val (candidates, _) = files.partition { f =>
-      val spec = PartField.identityCols(m.specFor(f.eraOrPath))
-      val raw = f.partRaw(spec)
-      val pv = PartValues.decodeExternal(tableSchema, spec, raw)
-      filters.forall(FilePrune.canMatch(_, tableSchema, f, pv))
-    }
-    if (candidates.isEmpty) return this
-    // matching positions, ABSOLUTE per file: the native reader's
-    // _metadata.row_index stays absolute under row-group skipping.
-    // Rows already claimed by an outstanding EQUALITY delete are excluded
-    // first, so stacked deletes never double-count.
-    val prior = FileStats.deletesOf(fs, current)
-    val matches0 = minusEqDeleted(
-      spark.read.schema(tableSchema)
-        .parquet(candidates.map(_.path): _*)
-        .filter(fCoalesce(cond, fLit(false)))
-        .withColumn("__mfp", col("_metadata.file_path"))
-        .withColumn("__mpos", col("_metadata.row_index")), prior, candidates)
-      .select(col("__mfp").as("file_path"), col("__mpos").as("pos"))
-    // rows already position-deleted must not be deleted (and counted) twice
-    val candSet = candidates.map(f => qualify(f.path)).toSet
-    val priorApplicable = prior.filter(_.dataFiles.exists(candSet))
-    val matches =
-      if (priorApplicable.isEmpty) matches0
-      else matches0.join(
-        spark.read.parquet(priorApplicable.map(_.path): _*)
-          .select(col("file_path"), col("pos")),
-        Seq("file_path", "pos"), "left_anti")
-    val perFile = matches.groupBy("file_path").agg(count(lit(1)).as("n"))
-      .collect().map(r => (qualify(r.getString(0)), r.getLong(1))).sortBy(_._1)
-    if (perFile.isEmpty) return this // condition matched nothing: no-op
+    val matches = scan(snapshotId = Some(current.snapshotId)).where(cond)
+      .select(col("_file").as("file_path"), col("_pos").as("pos"))
+    // the files the scan planned for the condition size the write job
+    val planned = graft.sources.v2.HasPlannedFiles.of(matches).toSet
+    val delDir = newDeleteDir(m)
+    val deletes = MorDelta.writePositions(matches, delDir, fs,
+      files.filter(f => planned(f.path)).map(_.bytes).sum)
+    if (deletes.isEmpty) return this // condition matched nothing: no-op
+    commitMorDelta(m, deletes, added = Nil, dirs = Seq(delDir.toString), "delete")
+  }
+
+  /** A fresh directory for the position deletes of the snapshot after `m`. */
+  private def newDeleteDir(m: TableMeta): Path = {
     val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val delDir = new Path(tableDir,
+    new Path(tableDir,
       f"data/deletes-snap-$snapId%05d-${java.util.UUID.randomUUID().toString.take(8)}")
-    // one sorted delete file: MOR is for SELECTIVE deletes by design, and
-    // sorted (file_path, pos) keeps the reader's position probe sequential
-    matches.repartition(1).sortWithinPartitions("file_path", "pos")
-      .write.mode("errorifexists").parquet(delDir.toString)
-    val it = fs.listFiles(delDir, true)
-    val delFiles = Iterator.continually(it).takeWhile(_.hasNext)
-      .map(_.next().getPath).filter(_.getName.endsWith(".parquet"))
-      .map(_.toString).toSeq.sorted
-    require(delFiles.nonEmpty, "position-delete write produced no file")
-    val stat = DeleteStat(delFiles.head,
-      perFile.map { case (p, n) => DeleteFileEntry(p, n) }.toSeq)
-    commitMorDelta(m, stat, added = Nil, newDataDir = None,
-      delDir = Some(delDir.toString), operation = "delete")
   }
 
   /** Filter out rows already claimed by outstanding EQUALITY deletes from
     * a candidate-file frame that still exposes `_metadata` — used by the
-    * position-delete paths so stacked deletes never double-count a row in
+    * position-delete upsert so stacked deletes never double-count a row in
     * the totals. Era scope, key null-safety, and own-dir exemption mirror
     * the scan's application exactly.
     */
@@ -1489,51 +1467,15 @@ class IceTable(
     }
   }
 
-  /** Commit a merge-on-read delta (a new position-delete file and/or newly
-    * appended data files) with optimistic retry: the positions were
-    * computed against immutable files, so they stay valid against any
-    * newer snapshot that (a) still carries every affected file, (b) has
-    * the same outstanding delete set the positions were diffed against,
-    * and (c) saw no schema/spec change. A concurrent APPEND satisfies all
-    * three and the commit re-attaches; anything else aborts loudly.
+  /** Commit a merge-on-read delta through [[MorDelta.commit]], validated
+    * against the outstanding deletes of `m0`'s current snapshot.
     */
-  private def commitMorDelta(m0: TableMeta, stat: DeleteStat,
-      added: Seq[FileStat], newDataDir: Option[String],
-      delDir: Option[String], operation: String): IceTable = {
-    val prior0 = m0.currentSnapshot.map(p => FileStats.deletesOf(fs, p)).getOrElse(Nil)
-    val addedRows = added.map(_.rows).sum
-    MetaIo.retryCommit(fs, tableDir) { m =>
-      require(m.sameEvolution(m0),
-        s"$operation on $namespace.$name raced a concurrent schema change — aborting")
-      val current = m.currentSnapshot.getOrElse(
-        throw new IllegalStateException(
-          s"$operation on $namespace.$name: table became empty mid-commit"))
-      val files = visibleFiles(current)
-      val prior = FileStats.deletesOf(fs, current)
-      val paths = files.map(f => qualify(f.path)).toSet
-      require(stat.appliesTo.forall(e => paths(e.path)),
-        s"$operation on $namespace.$name raced a rewrite of an affected file — aborting")
-      require(prior == prior0,
-        s"$operation on $namespace.$name raced a concurrent row-level delete — aborting")
-      val deletedRows = stat.rows
-      val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-      val snap = SnapshotMeta(
-        snapshotId = snapId, timestampMs = System.currentTimeMillis(),
-        operation = operation,
-        dataDirs = FileStats.dataDirsOf(fs, current) ++ delDir.toSeq ++ newDataDir.toSeq,
-        addedFiles = added.map(_.path), addedRows = addedRows,
-        totalRows = current.totalRows - deletedRows + addedRows,
-        addedFileCount = added.length.toLong,
-        schemaDdl = m.schemaDdl,
-        files = (files ++ added).sortBy(_.path),
-        deletes = if (stat.appliesTo.isEmpty) prior else prior :+ stat,
-        parentId = m.currentSnapshotId)
-      MetaIo.commit(fs, tableDir, m.copy(
-        currentSnapshotId = snapId,
-        snapshots = m.snapshots :+ snap,
-        version = m.version + 1))
-      this
-    }
+  private def commitMorDelta(m0: TableMeta, deletes: Seq[DeleteStat],
+      added: Seq[FileStat], dirs: Seq[String], operation: String): IceTable = {
+    val prior = m0.currentSnapshot.map(p => FileStats.deletesOf(fs, p)).getOrElse(Nil)
+    MorDelta.commit(fs, tableDir, s"$namespace.$name", m0, prior, deletes, added,
+      dirs, operation)
+    this
   }
 
   /** Merge-on-read primary-key upsert: same semantics as [[upsert]]
@@ -1544,8 +1486,14 @@ class IceTable(
     * the new delete file and the new data files. A 100-row upsert against
     * a million-file table writes ~1 data file + 1 tiny delete file where
     * copy-on-write rewrites every intersecting file; the read tax is the
-    * MOR position filter until [[compact]] folds it away. Falls back to
-    * copy-on-write on rename history / legacy manifests.
+    * MOR position filter until [[compact]] folds it away. The matched
+    * positions are written by the same one-job writer as
+    * [[deleteWhereMor]] ([[MorDelta.writePositions]]): each task writes its
+    * own delete file and returns its counts, so the match plan runs once.
+    * Unlike the delete, the match plan reads only the key screen's
+    * candidate files directly, so outstanding deletes are subtracted here
+    * (equality deletes by key and era, position deletes by anti-join).
+    * Falls back to copy-on-write on rename history / legacy manifests.
     */
   def upsertMor(df: DataFrame, keys: Seq[String]): IceTable = {
     require(keys.nonEmpty,
@@ -1574,11 +1522,12 @@ class IceTable(
 
     // positions of matched target rows: semi-join candidate rows (read with
     // absolute row positions) against the distinct source keys (broadcast —
-    // upsert sources are small relative to the table by definition)
+    // upsert sources are small relative to the table by definition), then
+    // write them in one job (see deleteWhereMor)
     val prior = FileStats.deletesOf(fs, current)
-    val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val (perFile, delDirOpt): (Array[(String, Long)], Option[String]) =
-      if (candidates.isEmpty) (Array.empty, None)
+    val delDir = newDeleteDir(m)
+    val deletes: Seq[DeleteStat] =
+      if (candidates.isEmpty) Nil
       else {
         val sk = src.select(keys.map(k => col(k).as(s"__k_$k")): _*).distinct()
         val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
@@ -1590,6 +1539,7 @@ class IceTable(
             .withColumn("__mpos", col("_metadata.row_index")),
           prior, candidates)
           .select(col("__mfp").as("file_path"), col("__mpos").as("pos"))
+        // rows already position-deleted must not be deleted (and counted) twice
         val candSet = candidates.map(f => qualify(f.path)).toSet
         val priorApplicable = prior.filter(_.dataFiles.exists(candSet))
         val matches =
@@ -1598,30 +1548,15 @@ class IceTable(
             spark.read.parquet(priorApplicable.map(_.path): _*)
               .select(col("file_path"), col("pos")),
             Seq("file_path", "pos"), "left_anti")
-        val collected = matches.groupBy("file_path").agg(count(lit(1)).as("n"))
-          .collect().map(r => (qualify(r.getString(0)), r.getLong(1))).sortBy(_._1)
-        if (collected.isEmpty) (collected, None)
-        else {
-          val delDir = new Path(tableDir,
-            f"data/deletes-snap-$snapId%05d-${java.util.UUID.randomUUID().toString.take(8)}")
-          matches.repartition(1).sortWithinPartitions("file_path", "pos")
-            .write.mode("errorifexists").parquet(delDir.toString)
-          (collected, Some(delDir.toString))
-        }
+        MorDelta.writePositions(matches, delDir, fs, candidates.map(_.bytes).sum)
       }
 
     // write the source into a writer-unique dir (like append): a lost
     // commit race re-attaches the same files on retry
+    val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
     val (dir, added) = writeData(src, snapId, m.partitionBy, uniqueDir = true)
-    val newStat: DeleteStat = delDirOpt.map { dd =>
-      val it = fs.listFiles(new Path(dd), true)
-      val delFiles = Iterator.continually(it).takeWhile(_.hasNext)
-        .map(_.next().getPath).filter(_.getName.endsWith(".parquet"))
-        .map(_.toString).toSeq.sorted
-      DeleteStat(delFiles.head,
-        perFile.map { case (p, n) => DeleteFileEntry(p, n) }.toSeq)
-    }.getOrElse(DeleteStat("", Nil))
-    commitMorDelta(m, newStat, added, Some(dir), delDirOpt, "upsert")
+    commitMorDelta(m, deletes, added,
+      (if (deletes.isEmpty) Nil else Seq(delDir.toString)) :+ dir, "upsert")
   }
 
   /** Key type gate for the equality-delete ops (see [[EqDeleteIo.keyType]]). */

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.icelite.{DeleteFileEntry, DeleteStat, FileStat, FileStats, MetaIo, SnapshotMeta}
+import graft.icelite.{DeleteStat, FileStat, FileStats, MetaIo, MorDelta, PosDeleteWriter, SnapshotMeta}
 
 /** What a row-level operation's scan reports back to its operation: the
   * files it planned. Group-based ops replace exactly those files at commit;
@@ -240,6 +240,13 @@ private[v2] class IceLiteReplaceGroupsBatchWrite(
   * columns, `_pos` forcing the position-counting row reader whose positions
   * stay ABSOLUTE (no row-group skipping). Updates are represented as
   * delete + reinsert, so one writer shape covers all three commands.
+  *
+  * The API's merge-on-read paths (`IceTable.deleteWhereMor` — also SQL
+  * `DELETE` on such a table, which Spark routes through `deleteWhere` —
+  * and `IceTable.upsertMor`) share the two halves that matter with this
+  * path: the task-side position-delete file writer
+  * ([[graft.icelite.PosDeleteWriter]]) and the validated snapshot build
+  * ([[graft.icelite.MorDelta.commit]]).
   */
 private[v2] class IceLiteDeltaOperation(
     warehouse: String, ns: String, tbl: String,
@@ -359,8 +366,7 @@ private[v2] class IceLiteDeltaWrite(
   * one position-delete file with its per-data-file position counts.
   */
 private[v2] case class IceLiteDeltaCommitMessage(
-    dataStats: Seq[FileStat], deleteFile: String,
-    deleted: Seq[DeleteFileEntry]) extends WriterCommitMessage
+    dataStats: Seq[FileStat], deletes: Option[DeleteStat]) extends WriterCommitMessage
 
 private[v2] class IceLiteDeltaBatchWrite(
     warehouse: String, ns: String, tbl: String, partitionBy: Seq[String],
@@ -391,7 +397,7 @@ private[v2] class IceLiteDeltaBatchWrite(
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.collect { case m: IceLiteDeltaCommitMessage => m }.toSeq
     val added0 = msgs.flatMap(_.dataStats)
-    val delMsgs = msgs.filter(_.deleteFile.nonEmpty)
+    val delMsgs = msgs.flatMap(_.deletes)
     if (added0.isEmpty && delMsgs.isEmpty) { abort(messages); return }
 
     // publish both staging dirs under writer-unique names BEFORE the commit
@@ -422,52 +428,13 @@ private[v2] class IceLiteDeltaBatchWrite(
       .map(st => st.copy(path = qualify(
         st.path.replace(dataStaging.toString, dataDir.toString))))
       .sortBy(_.path)
-    val newStats = delMsgs.map { m =>
-      DeleteStat(
-        qualify(m.deleteFile.replace(delStaging.toString, delDir.toString)),
-        m.deleted.map(e => DeleteFileEntry(qualify(e.path), e.rows))
-          .sortBy(_.path))
-    }.sortBy(_.path)
-    val addedRows = added.map(_.rows).sum
-    val deletedRows = newStats.map(_.rows).sum
-    val operation = op.command().toString.toLowerCase
-
-    // optimistic commit, same contract as the API-side MOR paths: positions
-    // were computed against immutable files under a known delete set — a
-    // concurrent APPEND keeps them valid (re-attach); a rewrite of an
-    // affected file, another row-level delete, or any schema/spec change
-    // aborts loudly.
-    MetaIo.retryCommit(fs, tableDir) { m =>
-      require(m.sameEvolution(m0),
-        s"$operation on $ns.$tbl raced a concurrent schema change — aborting")
-      val current = m.currentSnapshot.getOrElse(
-        throw new IllegalStateException(
-          s"$operation on $ns.$tbl: table became empty mid-commit"))
-      val visible = FileStats.visible(fs, current)
-      val prior = FileStats.deletesOf(fs, current)
-      val paths = visible.map(f => qualify(f.path)).toSet
-      require(newStats.forall(_.appliesTo.forall(e => paths(e.path))),
-        s"$operation on $ns.$tbl raced a rewrite of an affected file — aborting")
-      require(prior == priorDeletes,
-        s"$operation on $ns.$tbl raced a concurrent row-level delete — aborting")
-      val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-      val snap = SnapshotMeta(
-        snapshotId = snapId, timestampMs = System.currentTimeMillis(),
-        operation = operation,
-        dataDirs = FileStats.dataDirsOf(fs, current) ++
-          newDelDir.toSeq ++ newDataDir.toSeq,
-        addedFiles = added.map(_.path), addedRows = addedRows,
-        totalRows = current.totalRows - deletedRows + addedRows,
-        addedFileCount = added.length.toLong,
-        schemaDdl = m.schemaDdl,
-        files = (visible ++ added).sortBy(_.path),
-        deletes = prior ++ newStats,
-        parentId = m.currentSnapshotId)
-      MetaIo.commit(fs, tableDir, m.copy(
-        currentSnapshotId = snapId,
-        snapshots = m.snapshots :+ snap,
-        version = m.version + 1))
-    }
+    val newStats = delMsgs.map(d => MorDelta.qualified(fs,
+      d.copy(path = d.path.replace(delStaging.toString, delDir.toString)))).sortBy(_.path)
+    // positions were computed against immutable files under the delete set
+    // this operation's scan applied: a concurrent APPEND keeps them valid
+    // (re-attach); anything else aborts loudly (see MorDelta.commit)
+    MorDelta.commit(fs, tableDir, s"$ns.$tbl", m0, priorDeletes, newStats, added,
+      newDelDir.toSeq ++ newDataDir.toSeq, op.command().toString.toLowerCase)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -482,8 +449,9 @@ private[v2] class IceLiteDeltaBatchWrite(
 
 /** Task-side delta writer: inserts stream through the ordinary partitioned
   * data writer (same staging/footer-stats mechanics as appends); deletes
-  * append `(file_path, pos)` rows to one per-task position-delete parquet
-  * file, counting positions per data file for exact row accounting.
+  * go to one per-task position-delete file through the shared
+  * [[graft.icelite.PosDeleteWriter]], which counts positions per data file
+  * for exact row accounting.
   */
 private[v2] class IceLiteDeltaWriter(
     dataStaging: String, delStaging: String, schemaDdl: String,
@@ -502,42 +470,13 @@ private[v2] class IceLiteDeltaWriter(
     dataWriter
   }
 
-  // deletes: one parquet file of (file_path, pos), opened on first delete
-  private val delType: org.apache.parquet.schema.MessageType =
-    org.apache.parquet.schema.Types.buildMessage()
-      .addField(org.apache.parquet.schema.Types
-        .optional(org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY)
-        .as(org.apache.parquet.schema.LogicalTypeAnnotation.stringType())
-        .named("file_path"))
-      .addField(org.apache.parquet.schema.Types
-        .optional(org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
-        .named("pos"))
-      .named("icelite_deletes")
-  private var delWriter: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = null
-  private var delFile: String = ""
-  private val delCounts = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-
-  // the row-id projection IS the delete-file row ((_file, _pos) -> 
-  // (file_path, pos)), so the id InternalRow streams through the same
-  // RecordConsumer write support as data rows — no Group per deleted row
-  private def delW: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = {
-    if (delWriter == null) {
-      delFile = f"$delStaging/del-$partitionId%05d-$taskId.parquet"
-      delWriter = new InternalRowWriterBuilder(new Path(delFile),
-        new InternalRowWriteSupport(
-          StructType.fromDDL("file_path STRING, pos BIGINT"), delType, lead = 0))
-        .withConf(conf.value).build()
-    }
-    delWriter
-  }
+  // deletes: one position-delete file, opened on the first delete
+  private val delW = new PosDeleteWriter(delStaging, partitionId, taskId, conf.value)
 
   override def insert(row: InternalRow): Unit = dataW.write(row)
 
-  override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-    val file = id.getUTF8String(0).toString
-    delW.write(id)
-    delCounts.update(file, delCounts.getOrElse(file, 0L) + 1L)
-  }
+  // the row id ((_file, _pos)) is the delete-file row
+  override def delete(metadata: InternalRow, id: InternalRow): Unit = delW.write(id)
 
   // unreachable under representUpdateAsDeleteAndInsert = true, but keep the
   // semantics correct should the planner shape ever change
@@ -553,21 +492,12 @@ private[v2] class IceLiteDeltaWriter(
         case IceLiteCommitMessage(stats) => stats
         case other => throw new IllegalStateException(s"unexpected $other")
       }
-    if (delWriter != null) delWriter.close()
-    IceLiteDeltaCommitMessage(dataStats, delFile,
-      delCounts.map { case (p, n) => DeleteFileEntry(p, n) }.toSeq)
+    IceLiteDeltaCommitMessage(dataStats, delW.commit())
   }
 
   override def abort(): Unit = {
     if (dataWriter != null) dataWriter.abort()
-    if (delWriter != null) {
-      try delWriter.close() catch { case _: Exception => () }
-      try {
-        val p = new Path(delFile)
-        val pfs = p.getFileSystem(conf.value)
-        if (pfs.exists(p)) pfs.delete(p, false)
-      } catch { case _: Exception => () }
-    }
+    delW.abort()
   }
 
   override def close(): Unit = ()

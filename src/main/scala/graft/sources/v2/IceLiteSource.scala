@@ -1124,6 +1124,17 @@ private[v2] object IceLiteMeta {
   private def inline(schema: StructType, rows: Seq[Array[Any]]): View =
     (schema, Seq(InlineRows.of(rows)), None)
 
+  /** The snapshots that can contribute rows to `.all_files`/`.all_entries`.
+    * A snapshot without a manifest whose inline (or, on legacy metadata,
+    * listed) file set is empty holds no file — an empty `replace` writes no
+    * manifest and keeps only its empty data directory — so it neither
+    * serves a row nor forces the whole history inline.
+    */
+  private def withFiles(meta: graft.icelite.TableMeta,
+      fs: org.apache.hadoop.fs.FileSystem): Seq[graft.icelite.SnapshotMeta] =
+    meta.snapshots.filterNot(s =>
+      s.manifestFile.isEmpty && graft.icelite.FileStats.visible(fs, s).isEmpty)
+
   private def view(meta: graft.icelite.TableMeta,
       fs: org.apache.hadoop.fs.FileSystem, kind: String, tableDir: Path): View = kind match {
     case "entries" =>
@@ -1178,9 +1189,10 @@ private[v2] object IceLiteMeta {
       val schema = StructType.fromDDL(
         "snapshot_id BIGINT, status INT, " +
           "data_file STRUCT<path: STRING, rows: BIGINT, bytes: BIGINT>")
-      if (meta.snapshots.nonEmpty && meta.snapshots.forall(s =>
+      val live = withFiles(meta, fs)
+      if (live.nonEmpty && live.forall(s =>
           s.manifestFile.nonEmpty && s.addedFiles.isEmpty))
-        (schema, meta.snapshots.map(s => SnapshotEntries(s.snapshotId, s.manifestFile)),
+        (schema, live.map(s => SnapshotEntries(s.snapshotId, s.manifestFile)),
           Some("manifest-parallel"))
       else {
         // pre-manifest (in-memory/legacy) snapshots are metadata-sized
@@ -1464,12 +1476,13 @@ private[v2] object IceLiteMeta {
       // those snapshots are metadata-sized by construction.
       val schema = StructType.fromDDL(
         "snapshot_id BIGINT, path STRING, rows BIGINT, bytes BIGINT")
-      // parallel only when every snapshot is fully externalized (legacy
-      // bare-array manifests keep addedFiles INLINE on the snapshot — the
-      // executor-parsed document would not see them)
-      if (meta.snapshots.nonEmpty && meta.snapshots.forall(s =>
+      // parallel only when every snapshot holding files is fully
+      // externalized (legacy bare-array manifests keep addedFiles INLINE on
+      // the snapshot — the executor-parsed document would not see them)
+      val live = withFiles(meta, fs)
+      if (live.nonEmpty && live.forall(s =>
           s.manifestFile.nonEmpty && s.addedFiles.isEmpty))
-        (schema, meta.snapshots.map(s => SnapshotAddedFiles(s.snapshotId, s.manifestFile)),
+        (schema, live.map(s => SnapshotAddedFiles(s.snapshotId, s.manifestFile)),
           Some("manifest-parallel"))
       else {
         val rows = meta.snapshots.flatMap(s =>

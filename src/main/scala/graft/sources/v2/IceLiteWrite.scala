@@ -1160,7 +1160,7 @@ private[v2] class IceLiteDataWriter(
   * accessor. `lead` is the bookkeeping-column offset row-level rewrites
   * prepend (fixed per task before the first file opens).
   */
-private[v2] class InternalRowWriteSupport(
+private[graft] class InternalRowWriteSupport(
     schema: StructType, messageType: MessageType, lead: Int)
     extends WriteSupport[InternalRow] {
 
@@ -1264,7 +1264,7 @@ private[v2] class InternalRowWriteSupport(
 /** Minimal ParquetWriter builder carrying [[InternalRowWriteSupport]] (the
   * example-API `ExampleParquetWriter.builder` equivalent for InternalRow).
   */
-private[v2] class InternalRowWriterBuilder(
+private[graft] class InternalRowWriterBuilder(
     path: Path, support: WriteSupport[InternalRow])
     extends ParquetWriter.Builder[InternalRow, InternalRowWriterBuilder](path) {
   override def self(): InternalRowWriterBuilder = this

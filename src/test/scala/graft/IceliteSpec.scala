@@ -1170,6 +1170,87 @@ class IceliteSpec extends SparkSpec {
     assert(tbl.toDF.count() == 95)
   }
 
+  test("a MOR delete is one job and tombstones exactly the live matching positions") {
+    import org.apache.spark.sql.sources.EqualTo
+    import spark.implicits._
+    val cat = new IceCatalog(spark, scratch("mor1job"))
+    val df = (1L to 200L).map(i => (i, i % 7, s"v$i")).toDF("id", "g", "v")
+    val tbl = cat.createTable("ns", "t", df.schema)
+    tbl.append(df.repartitionByRange(4, col("id")))
+    // one outstanding position delete (id 3) and one equality delete
+    // (id 10); both rows have g = 3 and must be neither re-tombstoned nor
+    // counted again
+    tbl.deleteWhereMor(Seq(EqualTo("id", 3L)))
+    tbl.deleteKeysEq(Seq(10L).toDF("id"), Seq("id"))
+    val before = tbl.meta.currentSnapshot.get
+    val priorDeletes = tbl.deletesOf(before)
+    assert(priorDeletes.count(_.isEquality) == 1 && priorDeletes.count(!_.isEquality) == 1)
+    val files = tbl.visibleFiles(before).map(_.path)
+    assert(files.length == 4)
+    // the model: absolute positions of the live g = 3 rows
+    def q(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    val want = spark.read.parquet(files: _*).where(col("g") === 3L)
+      .select(col("id"), col("_metadata.file_path"), col("_metadata.row_index"))
+      .collect().filterNot(r => r.getLong(0) == 3L || r.getLong(0) == 10L)
+      .map(r => (q(r.getString(1)), r.getLong(2))).toSet
+    assert(want.size == (1L to 200L).count(_ % 7 == 3) - 2)
+
+    val jobs = jobsDuring(tbl.deleteWhereMor(Seq(EqualTo("g", 3L))))
+    assert(jobs == Seq(graft.icelite.MorDelta.JobDescription),
+      s"a one-key merge-on-read delete must run exactly one Spark job: $jobs")
+    val snap = tbl.meta.currentSnapshot.get
+    val added = tbl.deletesOf(snap).filterNot(priorDeletes.contains)
+    assert(added.nonEmpty && added.forall(!_.isEquality))
+    val got = spark.read.parquet(added.map(_.path): _*).collect()
+      .map(r => (q(r.getString(0)), r.getLong(1)))
+    assert(got.length == got.toSet.size, "a position may be tombstoned once")
+    assert(got.toSet == want)
+    assert(added.map(_.rows).sum == want.size)
+    assert(added.flatMap(_.dataFiles).forall(files.contains),
+      "delete entries must name manifest paths")
+    assert(snap.totalRows == before.totalRows - want.size)
+    assert(tbl.toDF.count() == 198 - want.size)
+    assert(tbl.toDF.where(col("g") === 3L).count() == 0)
+  }
+
+  test("a MOR delete over more files than cores writes at most one file per core") {
+    import org.apache.spark.sql.sources.{EqualTo, LessThan, StringEndsWith}
+    import spark.implicits._
+    val cat = new IceCatalog(spark, scratch("morcap"))
+    val cores = spark.sparkContext.defaultParallelism
+    val nFiles = cores * 3
+    val df = (1L to 30L * nFiles).map(i => (i, s"v$i")).toDF("id", "v")
+    val tbl = cat.createTable("ns", "t", df.schema)
+    tbl.append(df.repartitionByRange(nFiles, col("id")))
+    val snap0 = tbl.meta.currentSnapshot.get
+    assert(tbl.visibleFiles(snap0).length == nFiles)
+    tbl.deleteWhereMor(Seq(EqualTo("v", "nope")))
+    assert(tbl.meta.currentSnapshot.get.snapshotId == snap0.snapshotId,
+      "a delete matching nothing must not commit")
+    val dataDir = new org.apache.hadoop.fs.Path(cat.tablePath("ns", "t"), "data")
+    val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.listStatus(dataDir).exists(_.getPath.getName.startsWith("deletes-")),
+      "a delete matching nothing must leave no files behind")
+    // small files: a delete touching every one of them writes ONE file
+    tbl.deleteWhereMor(Seq(StringEndsWith("v", "0")))
+    val ds1 = tbl.deletesOf(tbl.meta.currentSnapshot.get)
+    assert(ds1.length == 1 && ds1.head.dataFiles.length == nFiles, ds1)
+    assert(ds1.head.rows == 3L * nFiles)
+    // one task per byte of input: the cap alone bounds the file count
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try tbl.deleteWhereMor(Seq(LessThan("id", 30L * nFiles + 1)))
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val ds2 = tbl.deletesOf(tbl.meta.currentSnapshot.get).filterNot(ds1.contains)
+    assert(ds2.length == cores,
+      s"${ds2.length} delete files for $nFiles data files on $cores cores")
+    assert(ds2.flatMap(_.dataFiles).distinct.length == nFiles)
+    assert(ds2.map(_.rows).sum == 27L * nFiles)
+    assert(tbl.meta.currentSnapshot.get.totalRows == 0)
+    assert(tbl.toDF.count() == 0)
+  }
+
   test("removeOrphanFiles sweeps aged unreferenced files, spares live data") {
     val cat = new IceCatalog(spark, scratch("orphan"))
     val tbl = cat.createTable("ns", "t", nation.schema)

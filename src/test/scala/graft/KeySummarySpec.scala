@@ -2,7 +2,6 @@ package graft
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, collate, count, lit, max, min, when}
 import org.apache.spark.sql.types._
@@ -123,30 +122,11 @@ class KeySummarySpec extends SparkSpec {
     assert(assertMatchesSpark(df, Seq("v"), 3).tupleCount.contains(3L))
   }
 
-  /** Spark jobs started while `f` runs whose description is the screen's,
-    * and all jobs; a sentinel job flushes the listener bus.
+  /** Jobs started while `f` runs whose description is the screen's, and
+    * all jobs.
     */
-  private def jobsDuring(f: => Unit): (Int, Int) = {
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val sentinel = "key-summary-spec sentinel"
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        descs.add(String.valueOf(Option(e.properties)
-          .map(_.getProperty("spark.job.description")).orNull))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      f
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(prev)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!descs.contains(sentinel) && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(descs.contains(sentinel), "listener bus did not drain")
-    } finally sc.removeSparkListener(l)
-    val all = descs.toArray.toSeq.map(_.toString).filterNot(_ == sentinel)
+  private def screenJobsDuring(f: => Unit): (Int, Int) = {
+    val all = jobsDuring(f)
     (all.count(_ == KeySummary.JobDescription), all.size)
   }
 
@@ -155,7 +135,7 @@ class KeySummarySpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.setJobDescription("outer")
     try {
-      val (screen, all) = jobsDuring { KeySummary.of(df, keys, 100); () }
+      val (screen, all) = screenJobsDuring { KeySummary.of(df, keys, 100); () }
       assert(screen == 1 && all == 1, s"screen jobs $screen, all jobs $all")
       assert(sc.getLocalProperty("spark.job.description") == "outer")
     } finally sc.setJobDescription(null)
@@ -238,7 +218,7 @@ class KeySummarySpec extends SparkSpec {
 
     // the upsert screens its shuffle-free source in one job
     val (tbl, model) = lineitemTable("cdc-jobs")
-    val (screen, _) = jobsDuring {
+    val (screen, _) = screenJobsDuring {
       tbl.upsert(frame(cdcSource(model), 3, liSchema), liKeys); ()
     }
     assert(screen == 1, s"screen jobs $screen")

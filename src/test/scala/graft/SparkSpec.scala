@@ -12,11 +12,41 @@ trait SparkSpec extends AnyFunSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** A fresh warehouse directory under the running checkout's `target/`
+    * (forked test JVMs run with the project base as working directory), so
+    * suites in two checkouts never touch each other's warehouses.
+    */
   def scratch(tag: String): String = {
-    val dir = s"/root/repo/target/test-scratch/$tag"
+    val dir = new java.io.File("target/test-scratch", tag).getAbsolutePath
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
     dir
+  }
+
+  /** The `spark.job.description` of every Spark job started while `f`
+    * runs; a sentinel job flushes the listener bus first.
+    */
+  def jobsDuring(f: => Unit): Seq[String] = {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinel = "spark-spec sentinel"
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descs.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.job.description")).orNull))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      f
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(prev)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!descs.contains(sentinel) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(descs.contains(sentinel), "listener bus did not drain")
+    } finally sc.removeSparkListener(l)
+    descs.toArray.toSeq.map(_.toString).filterNot(_ == sentinel)
   }
 }

@@ -15,11 +15,13 @@ import graft.icelite.IceCatalog
   *    position delete and an equality delete (manifest-parallel and
   *    delete-file-parallel serving);
   *  - `zero`: an append, then a replace with an empty frame — the current
-  *    snapshot has zero files and no manifest, so `.files`, `.partitions`,
-  *    `.all_files` and `.all_entries` serve inline rows.
+  *    snapshot has zero files and no manifest, so `.files` and
+  *    `.partitions` serve inline rows, while `.all_files` and
+  *    `.all_entries` skip the fileless snapshot and stay snapshot-parallel.
   * Volatile parts are normalized: the warehouse prefix, UUIDs in file
-  * names, the writer's task id in data-file names, commit timestamps and
-  * manifest byte lengths (those embed the volatile paths).
+  * names, the writer's task id in data-file and position-delete file
+  * names, commit timestamps and manifest byte lengths (those embed the
+  * volatile paths).
   */
 class MetaScanSpec extends SparkSpec {
   import spark.implicits._
@@ -49,11 +51,13 @@ class MetaScanSpec extends SparkSpec {
   private val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
   private val shortId = "-[0-9a-f]{8}(?=[/.,\\]|]|$)".r
   private val taskId = "part-(\\d{5})-\\d+-(\\d{3})".r
+  private val delTaskId = "del-(\\d{5})-\\d+[.]parquet".r
 
   private def norm(s: String): String = {
     val noWh = s.replace("file:" + wh, "<wh>").replace(wh, "<wh>")
-    taskId.replaceAllIn(shortId.replaceAllIn(uuid.replaceAllIn(noWh, "<uuid>"), "-<id>"),
-      "part-$1-<task>-$2")
+    val ids = shortId.replaceAllIn(uuid.replaceAllIn(noWh, "<uuid>"), "-<id>")
+    delTaskId.replaceAllIn(taskId.replaceAllIn(ids, "part-$1-<task>-$2"),
+      "del-$1-<task>.parquet")
   }
 
   private def render(r: Row): String =
@@ -178,7 +182,7 @@ class MetaScanSpec extends SparkSpec {
       """snapshot_id BIGINT,path STRING,kind STRING,rows BIGINT
         |icelite metadata lake.hist.all_delete_files
         |partitions=1
-        |4|<wh>/lake/hist/data/deletes-snap-00004-<id>/part-00000-<uuid>-c000.snappy.parquet|position|3
+        |4|<wh>/lake/hist/data/deletes-snap-00004-<id>/del-00000-<task>.parquet|position|3
         |5|<wh>/lake/hist/data/eqdeletes-snap-00005-<id>/part-00000-<task>-000.parquet|equality|2""",
     "hist.all_entries" ->
       """snapshot_id BIGINT,status INT,data_file STRUCT<path: STRING, rows: BIGINT, bytes: BIGINT>
@@ -233,14 +237,14 @@ class MetaScanSpec extends SparkSpec {
       """path STRING,kind STRING,rows BIGINT,key_columns STRING
         |icelite metadata lake.hist.delete_files
         |partitions=1
-        |<wh>/lake/hist/data/deletes-snap-00004-<id>/part-00000-<uuid>-c000.snappy.parquet|position|3|null
+        |<wh>/lake/hist/data/deletes-snap-00004-<id>/del-00000-<task>.parquet|position|3|null
         |<wh>/lake/hist/data/eqdeletes-snap-00005-<id>/part-00000-<task>-000.parquet|equality|2|id""",
     "hist.deletes" ->
       """delete_file STRING,kind STRING,data_file STRING,rows BIGINT,key_columns STRING
         |icelite metadata lake.hist.deletes
         |partitions=1
-        |<wh>/lake/hist/data/deletes-snap-00004-<id>/part-00000-<uuid>-c000.snappy.parquet|position|<wh>/lake/hist/data/snap-00001-<id>/p=a/part-00000-<task>-000.parquet|1|null
-        |<wh>/lake/hist/data/deletes-snap-00004-<id>/part-00000-<uuid>-c000.snappy.parquet|position|<wh>/lake/hist/data/snap-00001-<id>/p=b/part-00000-<task>-001.parquet|2|null
+        |<wh>/lake/hist/data/deletes-snap-00004-<id>/del-00000-<task>.parquet|position|<wh>/lake/hist/data/snap-00001-<id>/p=a/part-00000-<task>-000.parquet|1|null
+        |<wh>/lake/hist/data/deletes-snap-00004-<id>/del-00000-<task>.parquet|position|<wh>/lake/hist/data/snap-00001-<id>/p=b/part-00000-<task>-001.parquet|2|null
         |<wh>/lake/hist/data/eqdeletes-snap-00005-<id>/part-00000-<task>-000.parquet|equality|null|2|id""",
     "hist.entries" ->
       """status INT,snapshot_id BIGINT,data_file STRUCT<path: STRING, rows: BIGINT, bytes: BIGINT>
@@ -298,9 +302,9 @@ class MetaScanSpec extends SparkSpec {
       """file_path STRING,pos BIGINT,delete_file STRING
         |icelite metadata lake.hist.position_deletes (delete-file-parallel)
         |partitions=1
-        |<wh>/lake/hist/data/snap-00001-<id>/p=a/part-00000-<task>-000.parquet|0|<wh>/lake/hist/data/deletes-snap-00004-<id>/part-00000-<uuid>-c000.snappy.parquet
-        |<wh>/lake/hist/data/snap-00001-<id>/p=b/part-00000-<task>-001.parquet|0|<wh>/lake/hist/data/deletes-snap-00004-<id>/part-00000-<uuid>-c000.snappy.parquet
-        |<wh>/lake/hist/data/snap-00001-<id>/p=b/part-00000-<task>-001.parquet|1|<wh>/lake/hist/data/deletes-snap-00004-<id>/part-00000-<uuid>-c000.snappy.parquet""",
+        |<wh>/lake/hist/data/snap-00001-<id>/p=a/part-00000-<task>-000.parquet|0|<wh>/lake/hist/data/deletes-snap-00004-<id>/del-00000-<task>.parquet
+        |<wh>/lake/hist/data/snap-00001-<id>/p=b/part-00000-<task>-001.parquet|0|<wh>/lake/hist/data/deletes-snap-00004-<id>/del-00000-<task>.parquet
+        |<wh>/lake/hist/data/snap-00001-<id>/p=b/part-00000-<task>-001.parquet|1|<wh>/lake/hist/data/deletes-snap-00004-<id>/del-00000-<task>.parquet""",
     "hist.refs" ->
       """name STRING,type STRING,snapshot_id BIGINT
         |icelite metadata lake.hist.refs
@@ -324,7 +328,7 @@ class MetaScanSpec extends SparkSpec {
         |v|double|20|0|true|false""",
     "zero.all_data_files" ->
       """snapshot_id BIGINT,path STRING,rows BIGINT,bytes BIGINT
-        |icelite metadata lake.zero.all_data_files
+        |icelite metadata lake.zero.all_data_files (manifest-parallel)
         |partitions=1
         |1|<wh>/lake/zero/data/snap-00001-<id>/part-00000-<task>-000.parquet|1|635
         |1|<wh>/lake/zero/data/snap-00001-<id>/part-00001-<task>-000.parquet|1|636
@@ -336,7 +340,7 @@ class MetaScanSpec extends SparkSpec {
         |partitions=1""",
     "zero.all_entries" ->
       """snapshot_id BIGINT,status INT,data_file STRUCT<path: STRING, rows: BIGINT, bytes: BIGINT>
-        |icelite metadata lake.zero.all_entries
+        |icelite metadata lake.zero.all_entries (manifest-parallel)
         |partitions=1
         |1|1|[<wh>/lake/zero/data/snap-00001-<id>/part-00000-<task>-000.parquet,1,635]
         |1|1|[<wh>/lake/zero/data/snap-00001-<id>/part-00001-<task>-000.parquet,1,636]
@@ -344,7 +348,7 @@ class MetaScanSpec extends SparkSpec {
         |1|1|[<wh>/lake/zero/data/snap-00001-<id>/part-00003-<task>-000.parquet,2,651]""",
     "zero.all_files" ->
       """snapshot_id BIGINT,path STRING,rows BIGINT,bytes BIGINT
-        |icelite metadata lake.zero.all_files
+        |icelite metadata lake.zero.all_files (manifest-parallel)
         |partitions=1
         |1|<wh>/lake/zero/data/snap-00001-<id>/part-00000-<task>-000.parquet|1|635
         |1|<wh>/lake/zero/data/snap-00001-<id>/part-00001-<task>-000.parquet|1|636

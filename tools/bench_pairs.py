@@ -19,9 +19,16 @@ ops per side. Verdicts, first match wins:
 Exits 1 if any metric is `worse` or the change failed more ops than the
 parent.
 
+With `--kinds`, it also prints each operation kind's median time per side,
+over every timed op of that kind in all runs of the side. The times come
+from the `[perfbench] cycle <c> <kind> <ms> ms` lines of the run's
+`perfbench/work/<workload>/jvm-stderr.log`, read right after the run, so
+the table shows which kinds of operation moved.
+
 Usage:
   python3 tools/bench_pairs.py <parent-checkout> <change-checkout> \\
-      --workload component_jobs --seeds 501-510 [--seconds 20] [--log runs.jsonl]
+      --workload component_jobs --seeds 501-510 [--seconds 20] [--log runs.jsonl] \\
+      [--kinds]
 
 Each checkout builds what it runs from its own sources (the first run of a
 checkout compiles). `--log` appends one JSON line per run (side, seed and the
@@ -30,6 +37,7 @@ run's result line) so a summary can be checked later.
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -74,6 +82,21 @@ def run(checkout, workload, seed, seconds):
     return json.loads(lines[-1])
 
 
+CYCLE_LINE = re.compile(r"^\[perfbench\] cycle \d+ (\S+) ([0-9.]+) ms$")
+
+
+def kind_times(checkout, workload):
+    """Per-kind op times (ms) of the last run in `checkout`, from its log."""
+    times = {}
+    log = os.path.join(checkout, "perfbench", "work", workload, "jvm-stderr.log")
+    with open(log) as f:
+        for line in f:
+            m = CYCLE_LINE.match(line.strip())
+            if m:
+                times.setdefault(m.group(1), []).append(float(m.group(2)))
+    return times
+
+
 def parse_seeds(text):
     a, _, b = text.partition("-")
     return list(range(int(a), int(b or a) + 1))
@@ -87,21 +110,28 @@ def main():
     ap.add_argument("--seeds", required=True, help="inclusive range, e.g. 501-510")
     ap.add_argument("--seconds", type=float, default=20)
     ap.add_argument("--log")
+    ap.add_argument("--kinds", action="store_true",
+                    help="also print per-operation-kind medians per side")
     a = ap.parse_args()
 
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
         metrics = json.load(f)["end_to_end"]
     sides = {"parent": a.parent, "change": a.change}
     results = {"parent": [], "change": []}
+    kinds = {"parent": {}, "change": {}}
     for i, seed in enumerate(parse_seeds(a.seeds)):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
             r = run(sides[side], a.workload, seed, a.seconds)
             results[side].append(r)
+            rec = {"side": side, "seed": seed, "workload": a.workload, "result": r}
+            if a.kinds:
+                rec["kinds"] = kind_times(sides[side], a.workload)
+                for k, ms in rec["kinds"].items():
+                    kinds[side].setdefault(k, []).extend(ms)
             if a.log:
                 with open(a.log, "a") as f:
-                    f.write(json.dumps({"side": side, "seed": seed,
-                                        "workload": a.workload, "result": r}) + "\n")
+                    f.write(json.dumps(rec) + "\n")
             print(f"[pairs] seed {seed} {side}: " + " ".join(
                 f"{m['name']}={r['metrics'][m['name']]['value']:.4g}" for m in metrics),
                 file=sys.stderr, flush=True)
@@ -122,6 +152,14 @@ def main():
         worse |= v == "worse"
         print(f"{name:<16}{pm:>12.4g}{cm:>12.4g}{100 * (cm / pm - 1):>+8.1f}%"
               f"{(q3 - q1) / pm:>16.3f}{wins:>5}/{n}  {v}")
+    if a.kinds:
+        print(f"{'kind':<22}{'parent ms':>12}{'change ms':>12}{'delta':>9}{'n':>10}")
+        for k in sorted(set(kinds["parent"]) | set(kinds["change"])):
+            pk, ck = kinds["parent"].get(k, []), kinds["change"].get(k, [])
+            pm = statistics.median(pk) if pk else float("nan")
+            cm = statistics.median(ck) if ck else float("nan")
+            delta = f"{100 * (cm / pm - 1):>+8.1f}%" if pk and ck else f"{'':>9}"
+            print(f"{k:<22}{pm:>12.1f}{cm:>12.1f}{delta}{len(pk):>5}/{len(ck)}")
     failed = {}
     for side in ("parent", "change"):
         att = sum(r["attempted"] for r in results[side])
