@@ -150,7 +150,8 @@ object ComponentMain {
       gelf.foreach(_.info("Component finished."))
       0
     } catch {
-      case e: UserException =>
+      // a format-1 table is the user's to upgrade, not an engine fault
+      case e @ (_: UserException | _: graft.icelite.UnsupportedFormat) =>
         gelf.foreach(_.error(e.getMessage))
         System.err.println(s"ERROR: ${e.getMessage}")
         1

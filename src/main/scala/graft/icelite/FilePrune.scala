@@ -222,7 +222,7 @@ object FilePrune {
       partValues: Map[String, Any]): Boolean =
     partValues.get(c) match {
       case Some(pv) => pv != null
-      case None => stat.rows < 0 || stat.nullCount(c).forall(_ < stat.rows)
+      case None => stat.nullCount(c).forall(_ < stat.rows)
     }
 
   private def rangeMayContainPrefix(c: String, prefix: String, stat: FileStat): Boolean =

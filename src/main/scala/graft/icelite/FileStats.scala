@@ -193,48 +193,32 @@ object FileStats {
   }
 
 
-  /** The complete data-file manifest of a snapshot: loaded from the
-    * snapshot's external manifest file (one small immutable JSON, memoized),
-    * or the inline `files` list of in-memory / pre-externalization metadata.
-    * Pre-upgrade metadata with neither degrades to a recursive directory
-    * listing with unknown stats (`rows = -1`), which every planner must
-    * treat as unprunable. The single shared implementation behind IceTable
-    * scans, DSv2 table construction, and DSv2 write commits.
+  /** The complete data-file manifest of a committed snapshot, from its
+    * external manifest document (one small immutable JSON, memoized). The
+    * single shared implementation behind IceTable scans, DSv2 table
+    * construction, and DSv2 write commits.
     */
   def visible(fs: org.apache.hadoop.fs.FileSystem, snap: SnapshotMeta): Seq[FileStat] =
-    if (snap.manifestFile.nonEmpty) MetaIo.readManifest(fs, snap.manifestFile)
-    else if (snap.files.nonEmpty || snap.dataDirs.isEmpty) snap.files
-    else snap.dataDirs.flatMap { d =>
-      val it = fs.listFiles(new Path(d), true)
-      Iterator.continually(it).takeWhile(_.hasNext)
-        .map(_.next())
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(st => FileStat(st.getPath.toString, rows = -1L, bytes = st.getLen))
-        .toSeq
-    }.sortBy(_.path)
+    MetaIo.readManifest(fs, snap.manifestFile)
 
-  /** The data directories visible at a snapshot. Inline on in-memory /
-    * pre-upgrade metadata; in the external manifest document otherwise
-    * (the cumulative dir list grows with append history, so it cannot live
-    * in the version log — see SnapshotMeta.dataDirs).
+  /** The data directories visible at a committed snapshot, from its
+    * manifest document (the cumulative dir list grows with append history,
+    * so it cannot live in the version log — see SnapshotMeta.dataDirs).
     */
   def dataDirsOf(fs: org.apache.hadoop.fs.FileSystem, snap: SnapshotMeta): Seq[String] =
-    if (snap.dataDirs.nonEmpty || snap.manifestFile.isEmpty) snap.dataDirs
-    else MetaIo.readManifestDocShallow(fs, snap.manifestFile).dataDirs
+    MetaIo.readManifestDocShallow(fs, snap.manifestFile).dataDirs
 
-  /** Paths of the files ADDED by a snapshot (inline or from the manifest
-    * document — same externalization story as [[dataDirsOf]]).
+  /** Paths of the files ADDED by a committed snapshot (same
+    * externalization story as [[dataDirsOf]]).
     */
   def addedPathsOf(fs: org.apache.hadoop.fs.FileSystem, snap: SnapshotMeta): Seq[String] =
-    if (snap.addedFiles.nonEmpty || snap.manifestFile.isEmpty) snap.addedFiles
-    else MetaIo.readManifestDocShallow(fs, snap.manifestFile).addedPaths
+    MetaIo.readManifestDocShallow(fs, snap.manifestFile).addedPaths
 
-  /** Outstanding position-delete files of a snapshot (merge-on-read).
-    * Inline on in-memory metadata, in the manifest document on committed.
+  /** Outstanding position-delete files of a committed snapshot
+    * (merge-on-read), from its manifest document.
     */
   def deletesOf(fs: org.apache.hadoop.fs.FileSystem, snap: SnapshotMeta): Seq[DeleteStat] =
-    if (snap.deletes.nonEmpty || snap.manifestFile.isEmpty) snap.deletes
-    else MetaIo.readManifestDocShallow(fs, snap.manifestFile).deletes
+    MetaIo.readManifestDocShallow(fs, snap.manifestFile).deletes
 
   /** Carry deletes forward across a copy-on-write rewrite of some files.
     * Position entries are trimmed to data files that survive untouched (the
@@ -297,47 +281,14 @@ object FileStats {
     }
   }
 
-  /** Count of files added by a snapshot WITHOUT touching any manifest:
-    * the inline O(1) count on current metadata, the inline path list on
-    * pre-upgrade metadata. Keeps the `.snapshots` view and streaming
-    * admission control metadata-only at any file count.
-    */
-  def addedCount(snap: SnapshotMeta): Long =
-    if (snap.addedFileCount >= 0) snap.addedFileCount else snap.addedFiles.length.toLong
-
-  /** Bytes of the files ADDED by a snapshot — streaming byte-based
-    * admission control. O(1) from the inline commit-time count on current
-    * metadata; pre-upgrade snapshots fall back to one pass over the
-    * snapshot's (cached) manifest.
-    */
-  def addedBytes(fs: org.apache.hadoop.fs.FileSystem, s: SnapshotMeta): Long = {
-    if (s.addedByteCount >= 0) return s.addedByteCount
-    // normalized membership (normPath): a spelling mismatch would silently
-    // sum 0 bytes and disable the byte cap (first batch plans the history)
-    val addedPaths = addedPathsOf(fs, s).map(normPath).toSet
-    visible(fs, s).filter(f => addedPaths(normPath(f.path))).map(_.bytes).sum
-  }
-
   /** Did snapshot `s` keep every file visible at `parent`? Carried files
     * are always a subset of the parent's visible set, so equal counts mean
-    * equal sets — O(1) on current metadata via the inline counts; the
-    * manifest subset proof runs only for pre-upgrade snapshots. The
-    * foundation of the changelog contract (batch and streaming): a
-    * non-rewriting snapshot's row-level delta is exactly its added files
-    * plus its new delete files.
+    * equal sets — O(1) from the inline counts. The foundation of the
+    * changelog contract (batch and streaming): a non-rewriting snapshot's
+    * row-level delta is exactly its added files plus its new delete files.
     */
-  def isNonRewriting(fs: org.apache.hadoop.fs.FileSystem,
-      parent: Option[SnapshotMeta], s: SnapshotMeta): Boolean = {
-    val countsKnown = s.totalFileCount >= 0 && s.addedFileCount >= 0 &&
-      parent.forall(_.totalFileCount >= 0)
-    if (countsKnown)
-      s.totalFileCount == parent.map(_.totalFileCount).getOrElse(0L) + s.addedFileCount
-    else {
-      def q(p: String) = new Path(p).toString
-      val sPaths = visible(fs, s).map(f => q(f.path)).toSet
-      parent.map(visible(fs, _)).getOrElse(Nil).forall(f => sPaths(q(f.path)))
-    }
-  }
+  def isNonRewriting(parent: Option[SnapshotMeta], s: SnapshotMeta): Boolean =
+    s.totalFileCount == parent.map(_.totalFileCount).getOrElse(0L) + s.addedFileCount
 
   /** New delete files committed BY `s` (absent at `parent`). Once `s` is
     * known non-rewriting, deletes only accumulate — an unchanged inline
@@ -345,15 +296,12 @@ object FileStats {
     * append-only fast path.
     */
   def newDeletesOf(fs: org.apache.hadoop.fs.FileSystem,
-      parent: Option[SnapshotMeta], s: SnapshotMeta): Seq[DeleteStat] = {
-    val none = s.deleteFileCount >= 0 && parent.forall(_.deleteFileCount >= 0) &&
-      s.deleteFileCount == parent.map(_.deleteFileCount).getOrElse(0L)
-    if (none) Nil
+      parent: Option[SnapshotMeta], s: SnapshotMeta): Seq[DeleteStat] =
+    if (s.deleteFileCount == parent.map(_.deleteFileCount).getOrElse(0L)) Nil
     else {
       val pDeletes = parent.map(deletesOf(fs, _)).getOrElse(Nil)
       deletesOf(fs, s).filterNot(d => pDeletes.exists(_.path == d.path))
     }
-  }
 
   /** Files ADDED by the append snapshots in `(from, to]` — the shared
     * range extraction behind the batch incremental scan, the DSv2
@@ -378,32 +326,13 @@ object FileStats {
       s"$context hit non-append snapshots " +
         s"${nonAppend.map(s => s"#${s.snapshotId}(${s.operation})").mkString(", ")}")
     range.flatMap { s =>
-      val addedPaths = addedPathsOf(fs, s)
       // normalized set membership (normPath): a spelling mismatch would
       // silently return an EMPTY delta for the snapshot — vanished rows,
       // not an error. Set, not Seq.contains: O(files + added)
-      val added = addedPaths.map(normPath).toSet
-      val manifest = if (s.manifestFile.nonEmpty || s.files.nonEmpty) visible(fs, s) else Nil
-      if (manifest.nonEmpty) manifest.filter(f => added.contains(normPath(f.path)))
-      else addedPaths.map(p => FileStat(p, rows = -1L, bytes = 0L))
+      val added = addedPathsOf(fs, s).map(normPath).toSet
+      visible(fs, s).filter(f => added.contains(normPath(f.path)))
     }.sortBy(_.path)
   }
-
-  /** Replace unknown-row (-1, legacy) entries with real footer-derived
-    * stats — a one-time driver-side footer read per legacy file that also
-    * permanently heals the manifest on the next commit.
-    */
-  def ensureRows(conf: Configuration, files: Seq[FileStat]): Seq[FileStat] =
-    if (files.forall(_.rows >= 0)) files
-    else {
-      // heal all unknown-row (legacy) entries in one batch: collect()
-      // parallelizes — and distributes past the threshold — instead of
-      // footer-reading serially per file
-      val healed = collect(conf,
-        files.collect { case f if f.rows < 0 => f.path })
-        .map(st => st.path -> st).toMap
-      files.map(f => if (f.rows >= 0) f else healed(f.path))
-    }
 
   /** Expired-history guard for incremental reads: reading from `from`
     * requires `from` (or, when reading from 0, the whole prefix) to still

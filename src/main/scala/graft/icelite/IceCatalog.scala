@@ -65,7 +65,7 @@ class IceCatalog(spark: SparkSession, val warehouse: String) {
     IceCatalog.validateProperties(properties)
     createNamespace(ns)
     val meta = TableMeta(
-      formatVersion = 1, namespace = ns, name = table,
+      formatVersion = TableMeta.FormatVersion, namespace = ns, name = table,
       schemaDdl = schema.toDDL, partitionBy = partitionBy,
       currentSnapshotId = 0L, snapshots = Nil, version = 1,
       sortOrder = sortedBy, properties = properties)
@@ -79,6 +79,14 @@ class IceCatalog(spark: SparkSession, val warehouse: String) {
   def loadTable(ns: String, table: String): IceTable = {
     require(tableExists(ns, table), s"table $ns.$table does not exist")
     new IceTable(spark, this, ns, table)
+  }
+
+  /** Rewrite a format-1 table as format 2 in one commit
+    * ([[MetaIo.upgrade]]); false when it already is format 2.
+    */
+  def upgrade(ns: String, table: String): Boolean = {
+    require(tableExists(ns, table), s"table $ns.$table does not exist")
+    MetaIo.upgrade(fs, tablePath(ns, table))
   }
 
   /** Drop-if-exists + create: the writer's `replace` table preparation

@@ -54,10 +54,10 @@ class IceTable(
   private def qualify(p: String): String =
     fs.makeQualified(new Path(p)).toString
 
-  /** A snapshot's complete data-file manifest (external manifest file,
-    * inline pre-commit list, or legacy listing — see [[FileStats.visible]]).
-    * The public accessor: `SnapshotMeta.files` is empty on committed
-    * metadata now that manifests live outside the version log.
+  /** A committed snapshot's complete data-file manifest (its external
+    * manifest document — see [[FileStats.visible]]). The public accessor:
+    * `SnapshotMeta.files` is empty on committed metadata now that
+    * manifests live outside the version log.
     */
   def visibleFiles(snap: SnapshotMeta): Seq[FileStat] =
     FileStats.visible(fs, snap)
@@ -173,10 +173,9 @@ class IceTable(
       // changelog over an append/streaming-CDC tail must plan from the
       // WINDOW's manifests only, and most window snapshots never need the
       // parent's file list (only equality-delete resolution does —
-      // FileStats.isNonRewriting / newDeletesOf use the inline O(1) counts
-      // on current metadata)
+      // FileStats.isNonRewriting / newDeletesOf use the inline O(1) counts)
       lazy val pFiles = parent.map(visibleFiles).getOrElse(Nil)
-      require(FileStats.isNonRewriting(fs, parent, s),
+      require(FileStats.isNonRewriting(parent, s),
         s"changelog of $namespace.$name hit rewriting snapshot " +
           s"#${s.snapshotId} (${s.operation}) — changelogs are defined over " +
           "append/merge-on-read history only")
@@ -363,29 +362,7 @@ class IceTable(
     val m = base
     val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
     val addedRows = added.map(_.rows).sum
-    // legacy (pre-manifest) carried entries have unknown rows (-1); their
-    // total is only derivable when the carried set IS the previous
-    // snapshot's full visible file set (the append shape) — then the
-    // previous total is exact. A PARTIAL carry containing an unknown-row
-    // file (e.g. a metadata-only delete dropping one partition while a
-    // legacy file survives in another) would make totalRows a guess that
-    // still counts the dropped rows, so it is refused instead: VERIFIED,
-    // not assumed (advice r9).
-    val carriedRows =
-      if (carried.forall(_.rows >= 0)) carried.map(_.rows).sum
-      else {
-        // normalized spellings on BOTH sides (FileStats.normPath): a caller
-        // passing re-qualified paths (file:/x vs file:///x) must not trip a
-        // false partial-carry refusal on a legacy table
-        val prevPaths = m.currentSnapshot
-          .map(visibleFiles(_).map(f => FileStats.normPath(f.path)).toSet)
-          .getOrElse(Set.empty[String])
-        require(carried.map(f => FileStats.normPath(f.path)).toSet == prevPaths,
-          s"$operation on $namespace.$name would carry a PARTIAL file set " +
-            "containing legacy files with unknown row counts — totalRows " +
-            "accounting would be wrong; compact first")
-        m.currentSnapshot.map(_.totalRows).getOrElse(0L)
-      }
+    val carriedRows = carried.map(_.rows).sum
     // carried deletes subtract from the carried files' physical row sum
     val carriedDeleteRows = carriedDeletes.map(_.rows).sum
     val snap = SnapshotMeta(
@@ -393,7 +370,6 @@ class IceTable(
       operation = operation, dataDirs = dataDirs,
       addedFiles = added.map(_.path), addedRows = addedRows,
       totalRows = carriedRows + addedRows - carriedDeleteRows,
-      addedFileCount = added.length.toLong,
       schemaDdl = newSchemaDdl.getOrElse(m.schemaDdl),
       files = (carried ++ added).sortBy(_.path),
       deletes = carriedDeletes,
@@ -634,9 +610,8 @@ class IceTable(
     // (one file per affected partition); unpartitioned: explicit targetFiles
     val df = if (m.partitionBy.isEmpty) df0.repartition(targetFiles) else df0
     val (dir, added) = writeData(df, snapId, m.partitionBy)
-    if (small.forall(_.rows >= 0))
-      require(added.map(_.rows).sum == small.map(_.rows).sum,
-        s"binpack row-count drift: ${added.map(_.rows).sum} != ${small.map(_.rows).sum}")
+    require(added.map(_.rows).sum == small.map(_.rows).sum,
+      s"binpack row-count drift: ${added.map(_.rows).sum} != ${small.map(_.rows).sum}")
     commitSnapshot(m, "compact",
       FileStats.dataDirsOf(fs, current) :+ dir, added, carried = kept)
   }
@@ -808,10 +783,9 @@ class IceTable(
         s"no ref '$refName' on $namespace.$name — tag a snapshot first"))
     val parent0 = m0.snapshot(parentId0).getOrElse(
       throw new IllegalStateException(s"ref '$refName' points at expired snapshot $parentId0"))
-    def schemaAtRefOf(m: TableMeta, parent: SnapshotMeta): StructType =
-      StructType.fromDDL(
-        if (parent.schemaDdl.nonEmpty) parent.schemaDdl else m.schemaDdl)
-    val schemaAtRef = schemaAtRefOf(m0, parent0)
+    def schemaAtRefOf(parent: SnapshotMeta): StructType =
+      StructType.fromDDL(parent.schemaDdl)
+    val schemaAtRef = schemaAtRefOf(parent0)
     val conformed = conform(df, schemaAtRef)
     val snapId0 = m0.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
     val (dir, added) =
@@ -834,7 +808,7 @@ class IceTable(
       val parent = m.snapshot(parentId).getOrElse(
         throw new IllegalStateException(
           s"ref '$refName' points at expired snapshot $parentId"))
-      require(schemaAtRefOf(m, parent).toDDL == schemaAtRef.toDDL,
+      require(schemaAtRefOf(parent).toDDL == schemaAtRef.toDDL,
         s"appendToRef('$refName'): branch schema changed under the staged write — aborting")
       val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
       val carried = visibleFiles(parent)
@@ -845,7 +819,6 @@ class IceTable(
         dataDirs = FileStats.dataDirsOf(fs, parent) :+ dir,
         addedFiles = added.map(_.path), addedRows = addedRows,
         totalRows = parent.totalRows + addedRows,
-        addedFileCount = added.length.toLong,
         schemaDdl = schemaAtRef.toDDL,
         files = (carried ++ added).sortBy(_.path),
         deletes = FileStats.deletesOf(fs, parent),
@@ -916,7 +889,6 @@ class IceTable(
           parent.map(p => FileStats.dataDirsOf(fs, p)).getOrElse(Nil) :+ dir,
         addedFiles = added.map(_.path), addedRows = addedRows,
         totalRows = parent.map(_.totalRows).getOrElse(0L) + addedRows,
-        addedFileCount = added.length.toLong,
         schemaDdl = m.schemaDdl,
         files = (parent.map(visibleFiles).getOrElse(Nil) ++ added)
           .sortBy(_.path),
@@ -1028,9 +1000,7 @@ class IceTable(
         s"no snapshot $snapshotId in $namespace.$name"))
     if (m.currentSnapshotId == snapshotId) return this
     MetaIo.commit(fs, tableDir, m.copy(
-      // pre-upgrade snapshots carry no pinned schema ("readers fall back to
-      // the table schema") — restoring an empty DDL would blank the table
-      schemaDdl = if (target.schemaDdl.nonEmpty) target.schemaDdl else m.schemaDdl,
+      schemaDdl = target.schemaDdl,
       currentSnapshotId = snapshotId,
       version = m.version + 1))
     this
@@ -1082,9 +1052,10 @@ class IceTable(
     * for tables the per-file union refuses on: files imported via
     * `add_files`/`snapshot` (no sketches, partition values only in
     * directory names), writes under a narrowed `graft.ndv.columns` gate,
-    * or pre-upgrade history. The scan is PINNED to the snapshot the entry
-    * is stamped with, so a concurrent commit can never mislabel the
-    * sketches (the metadata CAS then fails the stamp loudly; re-run).
+    * or files written before per-file sketches. The scan is PINNED to the
+    * snapshot the entry is stamped with, so a concurrent commit can never
+    * mislabel the sketches (the metadata CAS then fails the stamp loudly;
+    * re-run).
     * Served by [[Ndv.tableStatsEstimate]] strictly while that snapshot is
     * current — one later commit and consumers refuse again (Iceberg's
     * snapshot-scoped Puffin staleness), which is why routine recompute
@@ -1178,23 +1149,13 @@ class IceTable(
         s"pure-insert snapshots (append, add_files) transplant onto a new " +
         s"head; '${target.operation}' encodes removals relative to its own " +
         "parent")
-    require(target.schemaDdl.isEmpty || target.schemaDdl == m0.schemaDdl,
+    require(target.schemaDdl == m0.schemaDdl,
       s"cherry-pick of snapshot $snapshotId ($namespace.$name): its schema " +
         "differs from the current table schema")
     val addedPaths = FileStats.addedPathsOf(fs, target)
       .map(FileStats.normPath).toSet
-    // a legacy (pre-manifest) snapshot records which files it ADDED
-    // nowhere — there is nothing to transplant from it (a vacuous empty
-    // pick here would "succeed" while picking nothing)
-    require(addedPaths.nonEmpty || FileStats.addedCount(target) == 0,
-      s"cherry-pick of snapshot $snapshotId ($namespace.$name): a legacy " +
-        "snapshot does not record its added files — nothing to transplant")
-    // heal unknown-row stats (legacy dir-listing fallback) with footer
-    // reads so the new snapshot's row accounting is exact, never -1
-    val pickedStats = FileStats.ensureRows(
-      spark.sparkContext.hadoopConfiguration,
-      FileStats.visible(fs, target)
-        .filter(f => addedPaths.contains(FileStats.normPath(f.path))))
+    val pickedStats = FileStats.visible(fs, target)
+      .filter(f => addedPaths.contains(FileStats.normPath(f.path)))
     require(pickedStats.length == addedPaths.size,
       s"cherry-pick of snapshot $snapshotId ($namespace.$name): its added " +
         "files are no longer resolvable from its manifest")
@@ -1333,13 +1294,7 @@ class IceTable(
     val tableSchema = StructType.fromDDL(m.schemaDdl)
     val src = conform(df, tableSchema)
     val current = m.currentSnapshot
-    // heal legacy (pre-manifest) entries up front — one parallel footer
-    // read per unknown-row file recovers rows + key stats, so the pruning
-    // below works on legacy tables too instead of degrading to a full
-    // rewrite, and this commit's manifest is permanently healed
-    val files = FileStats.ensureRows(
-      spark.sparkContext.hadoopConfiguration,
-      current.map(visibleFiles).getOrElse(Nil))
+    val files = current.map(visibleFiles).getOrElse(Nil)
 
     val (candidates, untouched) = keyCandidates(src, keys, files, m, tableSchema)
 
@@ -1383,15 +1338,13 @@ class IceTable(
     * counted twice and the new total stays exact. A condition that matches
     * nothing commits nothing.
     *
-    * Falls back to copy-on-write when the table has rename history, a
-    * legacy manifest, or a condition on an identity partition column.
+    * Falls back to copy-on-write when the table has rename history or a
+    * condition on an identity partition column.
     */
   def deleteWhereMor(filters: Seq[org.apache.spark.sql.sources.Filter]): IceTable = {
     val m = meta
     val current = m.currentSnapshot.getOrElse(return this)
-    val files = visibleFiles(current)
-    if (m.renames.nonEmpty || files.exists(_.rows < 0))
-      return deleteWhere(filters)
+    if (m.renames.nonEmpty) return deleteWhere(filters)
     // identity partition columns are stored in data by every current
     // writer, but a condition on one stays conservative: copy-on-write
     // reads them era-correctly via readFiles
@@ -1411,7 +1364,7 @@ class IceTable(
     val planned = graft.sources.v2.HasPlannedFiles.of(matches).toSet
     val delDir = newDeleteDir(m)
     val deletes = MorDelta.writePositions(matches, delDir, fs,
-      files.filter(f => planned(f.path)).map(_.bytes).sum)
+      visibleFiles(current).filter(f => planned(f.path)).map(_.bytes).sum)
     if (deletes.isEmpty) return this // condition matched nothing: no-op
     commitMorDelta(m, deletes, added = Nil, dirs = Seq(delDir.toString), "delete")
   }
@@ -1493,7 +1446,7 @@ class IceTable(
     * Unlike the delete, the match plan reads only the key screen's
     * candidate files directly, so outstanding deletes are subtracted here
     * (equality deletes by key and era, position deletes by anti-join).
-    * Falls back to copy-on-write on rename history / legacy manifests.
+    * Falls back to copy-on-write on rename history.
     */
   def upsertMor(df: DataFrame, keys: Seq[String]): IceTable = {
     require(keys.nonEmpty,
@@ -1505,9 +1458,8 @@ class IceTable(
       case Some(c) => c
       case None => return append(src) // empty table: plain insert
     }
+    if (m.renames.nonEmpty) return upsert(df, keys)
     val files = visibleFiles(current)
-    if (m.renames.nonEmpty || files.exists(_.rows < 0))
-      return upsert(df, keys)
     // keys on identity partition columns: same conservative fallback as
     // deleteWhereMor (the position scan has no directory binding)
     val idCols = (PartField.identityCols(m.partitionBy) ++
@@ -1578,7 +1530,7 @@ class IceTable(
     * a lost commit race retries against ANY concurrent append, upsert, or
     * rewrite — only a schema/spec change aborts.
     *
-    * Falls back to [[upsertMor]] on rename history, legacy manifests,
+    * Falls back to [[upsertMor]] on rename history,
     * identity-partition keys (old eras store those in directory names
     * only), or non-atomic key types.
     */
@@ -1590,15 +1542,10 @@ class IceTable(
     keys.foreach(k => require(tableSchema.fieldNames.contains(k),
       s"upsert key $k not in $namespace.$name schema"))
     val src = conform(df, tableSchema)
-    val current = m0.currentSnapshot match {
-      case Some(c) => c
-      case None => return append(src) // empty table: plain insert
-    }
-    val files = visibleFiles(current)
+    if (m0.currentSnapshot.isEmpty) return append(src) // empty table: plain insert
     val idCols = (PartField.identityCols(m0.partitionBy) ++
       m0.partitionSpecs.flatMap(sp => PartField.identityCols(sp.cols))).toSet
-    if (m0.renames.nonEmpty || files.exists(_.rows < 0) ||
-        keys.exists(idCols.contains) ||
+    if (m0.renames.nonEmpty || keys.exists(idCols.contains) ||
         !keys.forall(k => eqKeyType(tableSchema(k).dataType)))
       return upsertMor(df, keys)
     writeEqDelta(m0, src, keys, appendData = true, operation = "upsert")
@@ -1621,16 +1568,14 @@ class IceTable(
     val missing = keys.filterNot(keysDf.columns.contains)
     require(missing.isEmpty,
       s"deleteKeysEq input lacks key columns ${missing.mkString(", ")}")
-    val current = m0.currentSnapshot.getOrElse(return this)
-    val files = visibleFiles(current)
+    if (m0.currentSnapshot.isEmpty) return this
     val idCols = (PartField.identityCols(m0.partitionBy) ++
       m0.partitionSpecs.flatMap(sp => PartField.identityCols(sp.cols))).toSet
-    require(m0.renames.isEmpty && !files.exists(_.rows < 0) &&
-      !keys.exists(idCols.contains) &&
+    require(m0.renames.isEmpty && !keys.exists(idCols.contains) &&
       keys.forall(k => eqKeyType(tableSchema(k).dataType)),
       s"deleteKeysEq on $namespace.$name needs eq-compatible keys " +
-        "(no rename history / legacy manifest / identity-partition or " +
-        "non-atomic key) — use upsertMor or deleteWhere instead")
+        "(no rename history / identity-partition or non-atomic key) — use " +
+        "upsertMor or deleteWhere instead")
     val keyed = keysDf.select(
       keys.map(k => col(k).cast(tableSchema(k).dataType).as(k)): _*)
     writeEqDelta(m0, keyed, keys, appendData = false, operation = "delete")
@@ -1684,7 +1629,6 @@ class IceTable(
         // avoid: totals are an upper bound while equality debt is
         // outstanding (`.deletes` shows the debt; a fold restores exact)
         totalRows = current.map(_.totalRows).getOrElse(0L) + addedRows,
-        addedFileCount = added.length.toLong,
         schemaDdl = m.schemaDdl,
         files = (carried ++ added).sortBy(_.path),
         deletes = prior :+ stat,
@@ -1865,17 +1809,10 @@ class IceTable(
       case _ => throw new IllegalArgumentException(
         s"delete condition not translatable: ${filters.mkString(", ")}")
     }
-    // Legacy (pre-manifest) files have unknown row counts, and a partial
-    // carry containing one cannot produce an exact totalRows (commitSnapshot
-    // refuses that shape). HEAL them up front instead of degrading: one
-    // parallel footer read per legacy file (O(legacy), not O(table))
-    // recovers rows + column stats, the normal pruning below stays fully
-    // effective, and this commit's manifest is permanently healed. NB the
-    // whole-file death proof below REQUIRES candidates to be canMatch-
-    // screened first (exactOnPartitions inspects only the filter's shape),
-    // so no route may ever feed unscreened files into it.
-    val files = FileStats.ensureRows(
-      spark.sparkContext.hadoopConfiguration, visibleFiles(current))
+    // NB the whole-file death proof below REQUIRES candidates to be
+    // canMatch-screened first (exactOnPartitions inspects only the
+    // filter's shape), so no route may ever feed unscreened files into it.
+    val files = visibleFiles(current)
     val (candidates, untouched) = files.partition { f =>
       val spec = PartField.identityCols(m.specFor(f.eraOrPath))
       val raw = f.partRaw(spec)
@@ -1891,15 +1828,11 @@ class IceTable(
     // entirely dead and drops from the manifest with zero IO. Rows already
     // dead under MOR debt are a subset of the file's rows, so dropping
     // subsumes them. A pure partition-predicate DELETE then commits
-    // metadata only: no read, no write, at any table size. Legacy files
-    // with unknown row counts stay on the rewrite path (their totals
-    // cannot be adjusted blind).
+    // metadata only: no read, no write, at any table size.
     val (dead, partial) = candidates.partition { f =>
-      f.rows >= 0 && {
-        val idCols = PartField.identityCols(m.specFor(f.eraOrPath))
-        filters.forall(fl =>
-          FilePrune.exactOnPartitions(fl, tableSchema, idCols.contains))
-      }
+      val idCols = PartField.identityCols(m.specFor(f.eraOrPath))
+      filters.forall(fl =>
+        FilePrune.exactOnPartitions(fl, tableSchema, idCols.contains))
     }
     val currentDirs = FileStats.dataDirsOf(fs, current)
     val curDeletes = FileStats.deletesOf(fs, current)
@@ -1977,7 +1910,7 @@ class IceTable(
     // too. Reachable = the chain closure over every live snapshot; the same
     // age gate protects a manifest written by an in-flight commit that has
     // not claimed its version yet.
-    val liveManifests = m.snapshots.filter(_.manifestFile.nonEmpty)
+    val liveManifests = m.snapshots
       .flatMap(s => MetaIo.manifestChain(fs, s.manifestFile))
       .map(qualify).toSet
     val metaDir = MetaIo.metadataDir(tableDir)
@@ -2187,7 +2120,7 @@ class IceTable(
   def rewriteManifests(): Int = {
     val m = meta
     m.currentSnapshot match {
-      case Some(s) if s.manifestFile.nonEmpty =>
+      case Some(s) =>
         val doc = MetaIo.readManifestDoc(fs, s.manifestFile)
         if (doc.chainLen == 0) 0
         else {
@@ -2266,9 +2199,9 @@ class IceTable(
     // snapshots' delta-chain documents resolve through their predecessors'
     // manifests, and those predecessors are exactly what expiry drops.
     // Delete only what no kept snapshot's chain touches.
-    val reachable = keep.filter(_.manifestFile.nonEmpty)
+    val reachable = keep
       .flatMap(s => MetaIo.manifestChain(fs, s.manifestFile)).toSet
-    dropped.filter(s => s.manifestFile.nonEmpty && !reachable(s.manifestFile))
+    dropped.filter(s => !reachable(s.manifestFile))
       .foreach(s => fs.delete(new Path(s.manifestFile), false))
     this
   }

@@ -173,7 +173,6 @@ private[graft] object MorDelta {
         dataDirs = FileStats.dataDirsOf(fs, current) ++ dirs,
         addedFiles = added.map(_.path), addedRows = addedRows,
         totalRows = current.totalRows - deletedRows + addedRows,
-        addedFileCount = added.length.toLong,
         schemaDdl = m.schemaDdl,
         files = (visible ++ added).sortBy(_.path),
         deletes = prior ++ deletes,

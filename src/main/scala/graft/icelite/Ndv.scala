@@ -122,7 +122,9 @@ object Ndv {
         // from refusing over a file that contributes nothing
         case None if f.rows == 0L =>
           f.copy(ndv = eligible.map(_.name -> emptySketch).toMap + marker)
-        case None => f // unknown rows (legacy path): leave unstamped
+        // a path the read spelled differently (URL-encoded partition
+        // values): leave it unstamped, so the estimate refuses
+        case None => f
       }
     }
   }
@@ -224,10 +226,8 @@ object Ndv {
       val phys = Renames.physicalName(renames, col, era)
       val preAdd = addedColumns.exists(a =>
         a.cutoffSnapshotId >= era && (a.name == phys || a.name == col))
-      if (preAdd) {
-        if (f.rows < 0) return None
-        total += f.rows
-      } else f.nullCount(phys) match {
+      if (preAdd) total += f.rows
+      else f.nullCount(phys) match {
         case Some(n) => total += n
         case None => return None
       }

@@ -14,9 +14,9 @@ import java.nio.charset.StandardCharsets
   * pushed predicates and copy-on-write upserts that rewrite only files whose
   * key range intersects the source. Values are stored as strings keyed by
   * column name and re-parsed against the declared schema when compared, so
-  * the metadata JSON stays engine-portable. At 100 TB these entries would
-  * live in separate manifest files rather than inline JSON; the planning
-  * logic is unchanged.
+  * the metadata JSON stays engine-portable. Entries live in each
+  * snapshot's external manifest document ([[ManifestDoc]]), never inline
+  * in the version log. `rows` is always known (>= 0) in format 2.
   */
 final case class FileStat(
     path: String,
@@ -42,8 +42,9 @@ final case class FileStat(
     // pass (Ndv.sketchFiles), so maintenance rewrites keep coverage.
     // Sketches UNION losslessly across files, so a table-level
     // approx-distinct answers from manifests alone (zero data IO) at any
-    // table size; files that still lack one (pre-upgrade, or gate-scoped
-    // out) make the table-level estimate refuse rather than undercount.
+    // table size; files that still lack one (written before sketches, or
+    // gate-scoped out) make the table-level estimate refuse rather than
+    // undercount.
     ndv: Map[String, String] = Map.empty,
     // per-file Bloom filters (datasketches BloomFilter, base64) for OPT-IN
     // point-lookup columns (`write.bloom.columns` table property /
@@ -55,8 +56,7 @@ final case class FileStat(
     // manifest). False positives only cost an extra scanned file, never
     // correctness; an overfull filter degrades to never-prunes. Sized by
     // `write.bloom.capacity` (default 50k distinct @ 1% FPP ~ 60 KB) —
-    // like every stat here, at 100 TB these live in manifest FILES, not
-    // inline JSON.
+    // like every stat here, kept in the external manifest document.
     bloom: Map[String, String] = Map.empty,
     // The snapshot era this file joined the table at, recorded ONLY when
     // the path itself cannot carry it (add_files / snapshot imports:
@@ -66,8 +66,8 @@ final case class FileStat(
     // equality-delete application — without a recorded era, a post-import
     // spec change or rename would silently serve NULLs from imported
     // files, and a post-import MOR delete would never reach their rows.
-    // Additive (pre-upgrade manifests lack the field and default to -1,
-    // preserving their exact prior behavior).
+    // Additive (manifests written before the field lack it and default
+    // to -1, preserving their exact prior behavior).
     era: Long = -1L,
     // Raw hive partition values RECORDED on the entry at import time
     // (add_files), keyed by identity column, values in the directory
@@ -123,6 +123,13 @@ final case class FileStat(
   *
   * Snapshot ids are sequential per table (1, 2, ...) — deterministic across
   * runs, unlike the reference's random ids, which keeps golden tests stable.
+  *
+  * FORMAT 2 INVARIANT ([[TableMeta.FormatVersion]]): every COMMITTED
+  * snapshot has an object-form `manifestFile`, all four file counts >= 0,
+  * `parentId` >= 0, a non-empty `schemaDdl`, and every FileStat in its
+  * manifest has `rows` >= 0. [[MetaIo.commit]] writes only this shape and
+  * [[MetaIo.read]] refuses anything older, so readers trust it;
+  * [[MetaIo.upgrade]] is the one place that understands format 1.
   */
 final case class SnapshotMeta(
     snapshotId: Long,
@@ -133,20 +140,20 @@ final case class SnapshotMeta(
     // (dataDirs is cumulative across appends, addedFiles is O(files added)),
     // so MetaIo.commit moves them into the external manifest document and
     // blanks them here — the version log's per-snapshot entry stays O(1).
-    // Non-empty only in memory (pre-commit) or on pre-upgrade metadata;
-    // read through FileStats.dataDirsOf / FileStats.addedPathsOf.
+    // Non-empty only in memory (pre-commit); read committed snapshots
+    // through FileStats.dataDirsOf / FileStats.addedPathsOf.
     dataDirs: Seq[String],
     addedFiles: Seq[String],
     addedRows: Long,
     totalRows: Long,
     // O(1) inline count of files added by this snapshot (the `.snapshots`
     // view and streaming admission control need the COUNT without touching
-    // manifests); -1 on pre-upgrade metadata — fall back to addedFiles.
+    // manifests). The four counts are derived by MetaIo.commit from the
+    // in-memory lists (writers leave them at -1); >= 0 once committed.
     addedFileCount: Long = -1L,
     // O(1) inline byte total of the files added by this snapshot — byte-based
     // streaming admission control stays metadata-only per pending snapshot
     // instead of scanning each one's full visible manifest per trigger.
-    // -1 on pre-upgrade metadata: FileStats.addedBytes falls back there.
     addedByteCount: Long = -1L,
     // O(1) inline counts of the files / outstanding delete files VISIBLE at
     // this snapshot. Together with addedFileCount they make the changelog's
@@ -155,12 +162,12 @@ final case class SnapshotMeta(
     // is always a subset of the parent's visible set, so equal counts mean
     // equal sets), and — once non-rewriting is established, deletes only
     // ever accumulate — it committed NEW delete files iff deleteFileCount
-    // grew. -1 on pre-upgrade metadata: readers fall back to the manifest.
+    // grew.
     totalFileCount: Long = -1L,
     deleteFileCount: Long = -1L,
     // schema as of this snapshot — replace() may change it, and a
     // time-traveling scan must read old files with their own schema.
-    // Empty on pre-upgrade metadata: readers fall back to the table schema.
+    // Never empty once committed.
     schemaDdl: String = "",
     // complete manifest of data files visible at this snapshot (not just the
     // added ones) with their column stats. Scans plan from this list — never
@@ -169,12 +176,12 @@ final case class SnapshotMeta(
     // metadata: MetaIo.commit moves it to an external manifest file and
     // leaves `manifestFile` pointing at it, so the version log stays
     // O(snapshots), not O(snapshots x files). Non-empty only in memory
-    // (pre-commit) or on pre-upgrade metadata.
+    // (pre-commit).
     files: Seq[FileStat] = Nil,
-    // absolute path of the external manifest file holding this snapshot's
-    // complete FileStat list; written once at commit and immutable after
-    // (snapshots never change). "" on pre-upgrade metadata — readers then
-    // use the inline `files` or degrade to listing `dataDirs`.
+    // absolute path of the external manifest document holding this
+    // snapshot's complete FileStat list; written once at commit — for
+    // every snapshot, a zero-file one included — and immutable after
+    // (snapshots never change). "" only in memory (pre-commit).
     manifestFile: String = "",
     // outstanding position-delete files visible at this snapshot
     // (merge-on-read row-level deletes). TRANSIENT like `files`:
@@ -186,8 +193,7 @@ final case class SnapshotMeta(
     streamCommit: String = "",
     // the snapshot this one committed AGAINST (the table's current — or,
     // for branch appends, the ref head — at commit time). 0 = first
-    // snapshot; -1 = pre-upgrade metadata (readers fall back to
-    // previous-in-log). Rollbacks move the current POINTER without a new
+    // snapshot. Rollbacks move the current POINTER without a new
     // snapshot, so later writes branch: parentId is what makes the real
     // lineage (`.history`'s is_current_ancestor) reconstructible.
     parentId: Long = -1L,
@@ -265,10 +271,9 @@ final case class DeleteStat(
   * live inline in the version log — the paths ADDED by this snapshot, the
   * data directories visible at it, and the snapshot's outstanding
   * position-delete files. One immutable file per snapshot, written at
-  * commit; the version log itself stays O(snapshots). Pre-upgrade
-  * manifests are a bare JSON array of FileStat (files only, added/dirs
-  * still inline in the snapshot) — [[MetaIo.readManifestDoc]] sniffs the
-  * format.
+  * commit; the version log itself stays O(snapshots). (Format-1 tables
+  * may also hold bare JSON arrays of FileStat; only [[MetaIo.upgrade]]
+  * reads those.)
   *
   * DELTA CHAINS (round 14). A snapshot's visible file list is almost
   * always its predecessor's list plus a few added files — yet a full
@@ -396,6 +401,8 @@ object Renames {
 }
 
 /** Table metadata document, stored as `metadata/v{version}.json`.
+  * `formatVersion` is [[TableMeta.FormatVersion]] for every table this
+  * build writes (see the invariant on [[SnapshotMeta]]).
   *
   * The schema is kept as a Spark DDL string (`StructType.toDDL` /
   * `StructType.fromDDL`) — the Spark-native equivalent of the Iceberg schema
@@ -512,17 +519,6 @@ final case class TableMeta(
   def snapshot(id: Long): Option[SnapshotMeta] =
     snapshots.find(_.snapshotId == id)
 
-  /** The snapshot a commit was made against: the recorded parentId, or —
-    * for pre-upgrade metadata that never recorded one (-1) — the
-    * numerically previous snapshot in the log (ids are monotone, and
-    * before parentId existed no rollback-branching metadata could have
-    * been written, so previous-in-log IS the parent there). 0 = root.
-    */
-  def parentOf(s: SnapshotMeta): Long =
-    if (s.parentId >= 0) s.parentId
-    else snapshots.map(_.snapshotId).filter(_ < s.snapshotId)
-      .maxOption.getOrElse(0L)
-
   /** The ancestor chain of `id` (that snapshot first, root last), walking
     * parent pointers — NOT the whole snapshot log: after a rollback, later
     * "future" snapshots remain in the log but are NOT ancestors of the
@@ -538,7 +534,7 @@ final case class TableMeta(
     while (cur > 0 && byId.contains(cur) && !seen(cur)) {
       seen += cur
       b += byId(cur)
-      cur = parentOf(byId(cur))
+      cur = byId(cur).parentId
     }
     b.result()
   }
@@ -547,11 +543,26 @@ final case class TableMeta(
   def currentAncestors: Seq[SnapshotMeta] = ancestorsOf(currentSnapshotId)
 }
 
+object TableMeta {
+
+  /** The one metadata format this build reads and writes. Format 1 tables
+    * (snapshots without manifests, bare-array manifests, unknown counts,
+    * parents, schemas or row counts) load only after [[MetaIo.upgrade]].
+    */
+  val FormatVersion = 2
+}
+
 /** A commit lost the version CAS to a concurrent committer: the only
   * failure [[MetaIo.retryCommit]] retries. Every other commit failure
   * (rename failure, conflict validation, crash) stays a plain exception.
   */
 final class CommitConflict(msg: String) extends IllegalStateException(msg)
+
+/** A table's metadata is in a format this build does not read: format 1
+  * until [[MetaIo.upgrade]] rewrites it, or a newer format. A user error,
+  * not an engine fault.
+  */
+final class UnsupportedFormat(msg: String) extends IllegalStateException(msg)
 
 /** Metadata persistence + commit protocol.
   *
@@ -604,7 +615,25 @@ object MetaIo {
 
   def exists(fs: FileSystem, tableDir: Path): Boolean = fs.exists(hintFile(tableDir))
 
+  /** The table's current metadata. Refuses any format other than
+    * [[TableMeta.FormatVersion]], naming the upgrade step for format 1.
+    */
   def read(fs: FileSystem, tableDir: Path): TableMeta = {
+    val m = readHead(fs, tableDir)
+    val v = m.formatVersion
+    if (v != TableMeta.FormatVersion) throw new UnsupportedFormat(
+      if (v > TableMeta.FormatVersion)
+        s"${m.namespace}.${m.name} uses IceLite metadata format $v; this " +
+          s"build reads format ${TableMeta.FormatVersion} only"
+      else
+        s"${m.namespace}.${m.name} uses IceLite metadata format $v; run " +
+          s"CALL <catalog>.system.upgrade('${m.namespace}.${m.name}') (or " +
+          s"IceCatalog.upgrade) once to rewrite it as format " +
+          s"${TableMeta.FormatVersion}")
+    m
+  }
+
+  private def readHead(fs: FileSystem, tableDir: Path): TableMeta = {
     // the hint is swapped via rename (atomic on POSIX/HDFS), so a reader
     // sees the old or the new pointer, never a partial one; the retry below
     // only defends against non-atomic filesystems truncating in place
@@ -748,9 +777,6 @@ object MetaIo {
     * for chain walking (expiry reachability, rebase): bounded incremental
     * readers go through here precisely so that reading a window snapshot's
     * own facts never resolves its chain into pre-window history.
-    * Pre-upgrade manifests are a bare FileStat array (added/dirs were
-    * inline in the snapshot then) — the first non-whitespace byte
-    * disambiguates.
     */
   private[graft] def readManifestDocShallow(fs: FileSystem, path: String)
       : ManifestDoc = {
@@ -759,12 +785,7 @@ object MetaIo {
       val cached = rawCache.get(path)
       if (cached != null) return cached
     }
-    val json = readFile(fs, new Path(path))
-    val legacy = json.iterator.dropWhile(_.isWhitespace).nextOption().contains('[')
-    val parsed: ManifestDoc =
-      if (legacy) ManifestDoc(mapper.readValue(
-        json, new com.fasterxml.jackson.core.`type`.TypeReference[Seq[FileStat]] {}))
-      else mapper.readValue(json, classOf[ManifestDoc])
+    val parsed = mapper.readValue(readFile(fs, new Path(path)), classOf[ManifestDoc])
     rawCache.synchronized { rawCache.put(path, parsed) }
     parsed
   }
@@ -930,9 +951,9 @@ object MetaIo {
     val rmSet = removed.toSet
     val added = full.files.filter(f => !parentPaths(f.path) || rmSet(f.path))
     // worth-it: a delta carrying as many FileStats as the full list saves
-    // nothing and adds a chain hop
-    if (full.files.nonEmpty && added.lengthCompare(full.files.size) >= 0)
-      return None
+    // nothing and adds a chain hop (a zero-file snapshot is a full, empty
+    // document, not a delta removing every path)
+    if (added.lengthCompare(full.files.size) >= 0) return None
     val replay = parent.files.filterNot(f => rmSet(f.path)) ++ added
     if (replay != full.files) return None
     Some(full.copy(files = added, base = parentPath,
@@ -943,7 +964,10 @@ object MetaIo {
     * manifest, the added-path list, and the cumulative data-dir list — into
     * one external manifest document per snapshot (named with a UUID so a
     * losing concurrent committer can never clobber the winner's manifest)
-    * and leave a pointer plus O(1) counts. Called on every commit:
+    * and leave a pointer plus O(1) counts. A new snapshot is one without a
+    * pointer, zero-file snapshots included, and it must already carry its
+    * parent and schema: the format-2 invariant is checked here, once, so
+    * no reader ever re-checks it. Called on every commit:
     * previously committed snapshots already carry pointers, so the
     * incremental work is one manifest write for the new snapshot — and
     * since round 14 that write is usually a DELTA document
@@ -961,10 +985,14 @@ object MetaIo {
     // the last pointer seen walking the (append-ordered) snapshot list
     var prevManifest = ""
     val slim = meta.copy(snapshots = meta.snapshots.map { s =>
-      if (s.files.isEmpty || s.manifestFile.nonEmpty) {
-        if (s.manifestFile.nonEmpty) prevManifest = s.manifestFile
+      if (s.manifestFile.nonEmpty) {
+        prevManifest = s.manifestFile
         s
       } else {
+        require(s.parentId >= 0 && s.schemaDdl.nonEmpty && s.files.forall(_.rows >= 0),
+          s"snapshot ${s.snapshotId} of ${meta.namespace}.${meta.name} breaks the " +
+            s"format-${TableMeta.FormatVersion} invariant (needs a parent, a " +
+            "schema and known row counts)")
         val fullDoc = ManifestDoc(s.files, s.addedFiles, s.dataDirs, s.deletes)
         val doc =
           if (prevManifest.isEmpty || cap <= 0) fullDoc
@@ -975,21 +1003,15 @@ object MetaIo {
         writeFile(fs, mf, mapper.writeValueAsString(doc))
         written :+= mf
         prevManifest = mf.toString
+        // path spellings can differ between the added list and the
+        // FileStat list (file:/x vs file:///x) — normalize both through the
+        // ONE canonical spelling every other membership test uses
+        // (FileStats.normPath), so a change there cannot drift from here
+        val added = s.addedFiles.map(FileStats.normPath).toSet
         s.copy(files = Nil, addedFiles = Nil, dataDirs = Nil, deletes = Nil,
-          addedFileCount =
-            if (s.addedFileCount >= 0) s.addedFileCount else s.addedFiles.length.toLong,
+          addedFileCount = s.addedFiles.length.toLong,
           addedByteCount =
-            if (s.addedByteCount >= 0) s.addedByteCount
-            else {
-              // path spellings can differ between the added list and the
-              // FileStat list (file:/x vs file:///x) — normalize both
-              // through the ONE canonical spelling every other membership
-              // test uses (FileStats.normPath), so a change there cannot
-              // silently drift from this site
-              val added = s.addedFiles.map(FileStats.normPath).toSet
-              s.files.filter(f => added(FileStats.normPath(f.path)))
-                .map(_.bytes).sum
-            },
+            s.files.filter(f => added(FileStats.normPath(f.path))).map(_.bytes).sum,
           totalFileCount = s.files.length.toLong,
           deleteFileCount = s.deletes.length.toLong,
           manifestFile = mf.toString)
@@ -1022,6 +1044,9 @@ object MetaIo {
   }
 
   def commit(fs: FileSystem, tableDir: Path, meta0: TableMeta): Unit = {
+    require(meta0.formatVersion == TableMeta.FormatVersion,
+      s"${meta0.namespace}.${meta0.name}: refusing to write metadata format " +
+        s"${meta0.formatVersion} (this build writes ${TableMeta.FormatVersion})")
     val lock = commitLocks.computeIfAbsent(tableDir.toString, _ => new Object)
     lock.synchronized {
       val dir = metadataDir(tableDir)
@@ -1113,5 +1138,63 @@ object MetaIo {
           while (v >= 1 && fs.delete(new Path(dir, s"v$v.json"), false)) v -= 1
         }
     }
+  }
+
+  /** Rewrite a format-1 table as format 2 in ONE commit — the only code
+    * that understands format 1 (Iceberg's explicit format-version upgrade).
+    * Every snapshot is rebuilt from what format 1 recorded: its manifest
+    * (an object document, possibly a delta whose chain reaches a bare
+    * FileStat array; a bare array keeps added paths, dirs and deletes
+    * inline on the snapshot), else its inline `files`, else a listing of
+    * its `dataDirs`. Unknown row counts heal from the parquet footers in
+    * one batch ([[FileStats.collect]]), a missing parent becomes the
+    * previous snapshot in the log (before parentId existed no rollback
+    * could branch), a missing schema becomes the table schema, and the
+    * normal [[commit]] writes a manifest and the counts for each snapshot.
+    * Returns false, committing nothing, when the table is already format 2.
+    */
+  def upgrade(fs: FileSystem, tableDir: Path): Boolean = {
+    val m = readHead(fs, tableDir)
+    if (m.formatVersion >= TableMeta.FormatVersion) return false
+    def shallow(path: String): (ManifestDoc, Boolean) = {
+      val json = readFile(fs, new Path(path))
+      if (json.iterator.dropWhile(_.isWhitespace).nextOption().contains('['))
+        (ManifestDoc(mapper.readValue(json,
+          new com.fasterxml.jackson.core.`type`.TypeReference[Seq[FileStat]] {})), true)
+      else (mapper.readValue(json, classOf[ManifestDoc]), false)
+    }
+    def resolve(doc: ManifestDoc): Seq[FileStat] =
+      if (doc.base.isEmpty) doc.files
+      else {
+        val rm = doc.removedPaths.toSet
+        resolve(shallow(doc.base)._1).filterNot(f => rm(f.path)) ++ doc.files
+      }
+    def listed(dir: String): Seq[FileStat] = {
+      val it = fs.listFiles(new Path(dir), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .map(st => FileStat(st.getPath.toString, rows = -1L, bytes = st.getLen))
+        .toSeq
+    }
+    val rebuilt = m.snapshots.map { s =>
+      val (files, facts) =
+        if (s.manifestFile.nonEmpty) {
+          val (doc, bare) = shallow(s.manifestFile)
+          (resolve(doc), if (bare) s else s.copy(
+            addedFiles = doc.addedPaths, dataDirs = doc.dataDirs, deletes = doc.deletes))
+        } else if (s.files.nonEmpty || s.dataDirs.isEmpty) (s.files, s)
+        else (s.dataDirs.flatMap(listed).sortBy(_.path), s)
+      facts.copy(files = files, manifestFile = "",
+        parentId = if (s.parentId >= 0) s.parentId
+          else m.snapshots.map(_.snapshotId).filter(_ < s.snapshotId).maxOption.getOrElse(0L),
+        schemaDdl = if (s.schemaDdl.nonEmpty) s.schemaDdl else m.schemaDdl)
+    }
+    val unknown = rebuilt.flatMap(_.files).filter(_.rows < 0).map(_.path).distinct
+    val healed = FileStats.collect(fs.getConf, unknown).map(f => f.path -> f).toMap
+    commit(fs, tableDir, m.copy(formatVersion = TableMeta.FormatVersion,
+      snapshots = rebuilt.map(s =>
+        s.copy(files = s.files.map(f => healed.getOrElse(f.path, f)))),
+      version = m.version + 1))
+    true
   }
 }

@@ -250,7 +250,7 @@ object IceliteOps {
         tbl.upsert(source, keys = Seq("o_orderkey"))
         val snap = tbl.meta.currentSnapshot.get
         val snapFiles = tbl.visibleFiles(snap)
-        require(snapFiles.length > graft.icelite.FileStats.addedCount(snap),
+        require(snapFiles.length > snap.addedFileCount,
           s"copy-on-write expected carried files: all ${snapFiles.length} rewritten")
         tbl.toDF.select(orderCols.map(col): _*).orderBy("o_orderkey")
       }),
@@ -477,9 +477,9 @@ object IceliteOps {
         val snap = tbl.meta.currentSnapshot.get
         val snapFiles = tbl.visibleFiles(snap)
         require(snap.operation == "delete" &&
-          snapFiles.length > graft.icelite.FileStats.addedCount(snap),
+          snapFiles.length > snap.addedFileCount,
           s"delete must be copy-on-write: ${snapFiles.length} files, " +
-            s"${graft.icelite.FileStats.addedCount(snap)} rewritten")
+            s"${snap.addedFileCount} rewritten")
         tbl.toDF.select(orderCols.map(col): _*).orderBy("o_orderkey")
       }),
 
@@ -506,9 +506,9 @@ object IceliteOps {
         val snap = tbl.meta.currentSnapshot.get
         val snapFiles = tbl.visibleFiles(snap)
         require(snap.operation == "update" &&
-          snapFiles.length > graft.icelite.FileStats.addedCount(snap),
+          snapFiles.length > snap.addedFileCount,
           s"update must be copy-on-write: ${snapFiles.length} files, " +
-            s"${graft.icelite.FileStats.addedCount(snap)} rewritten")
+            s"${snap.addedFileCount} rewritten")
         tbl.toDF.select(orderCols.map(col): _*).orderBy("o_orderkey")
       }),
 
@@ -1191,7 +1191,7 @@ object IceliteOps {
         require(tbl.visibleFiles(head).map(_.path).toSet == v2,
           "cherry-pick must re-attach the picked snapshot's files by path " +
             "(metadata-only), not rewrite them")
-        require(graft.icelite.FileStats.addedCount(head) == (v2 -- v1).size,
+        require(head.addedFileCount == (v2 -- v1).size,
           "cherry-pick must add exactly the picked files")
         tbl.toDF.orderBy("event_id")
       }),
@@ -1444,7 +1444,7 @@ object IceliteOps {
           keys = Seq("o_orderkey"))
         val delSnap = tbl.meta.currentSnapshot.get
         require(delSnap.operation == "delete" &&
-          graft.icelite.FileStats.addedCount(delSnap) == 0,
+          delSnap.addedFileCount == 0,
           "deleteKeysEq must add no data files")
         // compaction folds ALL equality debt and restores exact totals
         tbl.compact(targetFiles = 2)
@@ -1566,7 +1566,7 @@ object IceliteOps {
           org.apache.spark.sql.sources.EqualTo("event_type", "click")))
         val snap = t2.meta.currentSnapshot.get
         require(snap.operation == "delete" &&
-          graft.icelite.FileStats.addedCount(snap) == 0,
+          snap.addedFileCount == 0,
           s"partition delete must be metadata-only (no files written): $snap")
         val after = t2.visibleFiles(snap).map(_.path).toSet
         require(after.subsetOf(before) && after.size < before.size,
@@ -1927,7 +1927,7 @@ object IceliteOps {
           org.apache.spark.sql.sources.EqualTo("o_orderkey", minKey)))
         val snap = tbl.meta.currentSnapshot.get
         require(snap.operation == "delete" &&
-          graft.icelite.FileStats.addedCount(snap) == 0,
+          snap.addedFileCount == 0,
           "MOR delete must add no data files")
         require(tbl.visibleFiles(snap).map(_.path) == beforePaths,
           "MOR delete must not rewrite any data file")

@@ -617,7 +617,7 @@ object SimilarityOps {
       val fs = cat.tablePath(tbl.namespace, tbl.name)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       require(snap.operation == "append" &&
-        graft.icelite.FileStats.isNonRewriting(fs, parent, snap) &&
+        graft.icelite.FileStats.isNonRewriting(parent, snap) &&
         snap.totalRows ==
           parent.map(_.totalRows).getOrElse(0L) + snap.addedRows,
         s"$who epoch maintenance must be a pure append of its own rows " +

@@ -82,15 +82,15 @@ private[v2] class IceLiteChangelogStream(
     * delete files therefore CLOSES its batch: at most one
     * delete-resolution per micro-batch, so the caps keep meaning "bounded
     * batches" while draining MOR history. Detection is O(1) via the
-    * inline delete-file counts (conservative when unknown). Both cap
-    * kinds (and their composite) flow through the same loop — a byte cap
-    * must never silently degrade to admit-everything here.
+    * inline delete-file counts. Both cap kinds (and their composite) flow
+    * through the same loop — a byte cap must never silently degrade to
+    * admit-everything here.
     */
   override def latestOffset(
       start: Offset,
       limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset = {
     val from = start.asInstanceOf[IceOffset].snapshotId
-    val (m, fsys) = currentMetaFs
+    val m = currentMeta
     val head = availableNowEnd.getOrElse(m.currentSnapshotId)
     val (maxF, maxB) = readCaps(limit)
     if (maxF.isEmpty && maxB.isEmpty) return IceOffset(head)
@@ -108,14 +108,12 @@ private[v2] class IceLiteChangelogStream(
     var open = true
     while (open && it.hasNext) {
       val s = it.next()
-      val n = FileStats.addedCount(s)
-      val b = if (maxB.isDefined) FileStats.addedBytes(fsys, s) else 0L
+      val n = s.addedFileCount
+      val b = if (maxB.isDefined) s.addedByteCount else 0L
       val fits = maxF.forall(usedF + n <= _) && maxB.forall(usedB + b <= _)
       if (admitted == 0 || fits) {
         to = s.snapshotId; usedF += n; usedB += b; admitted += 1
-        val newDeletes = s.deleteFileCount < 0 || prevDeleteCount < 0 ||
-          s.deleteFileCount != prevDeleteCount
-        if (newDeletes) open = false
+        if (s.deleteFileCount != prevDeleteCount) open = false
         prevDeleteCount = s.deleteFileCount
       } else open = false
     }
@@ -139,7 +137,7 @@ private[v2] class IceLiteChangelogStream(
     for (s <- range) {
       val parent = m.snapshots.filter(_.snapshotId < s.snapshotId)
         .maxByOption(_.snapshotId)
-      require(FileStats.isNonRewriting(fs, parent, s),
+      require(FileStats.isNonRewriting(parent, s),
         s"changelog stream of $ns.$tbl hit rewriting snapshot " +
           s"#${s.snapshotId} (${s.operation}) — changelog streams are " +
           "defined over append/merge-on-read history only (reset the " +

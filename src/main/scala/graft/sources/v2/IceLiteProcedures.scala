@@ -279,6 +279,16 @@ object IceLiteProcedures {
         val tbl = loadTable(cat, s(in, 0))
         out(s(in, 0), tbl.rewriteManifests())
       })),
+    // rewrite a format-1 table as format 2 in one commit (MetaIo.upgrade):
+    // the one step a table written by an older build needs before any
+    // read or write loads it. upgraded = false on a format-2 table.
+    "upgrade" -> (wh => new IceProc(wh, "upgrade",
+      Seq(p("table", StringType)),
+      StructType.fromDDL("table STRING, upgraded BOOLEAN"),
+      (cat, in) => {
+        val (ns, t) = ident(s(in, 0))
+        out(s(in, 0), cat.upgrade(ns, t))
+      })),
     // Iceberg's compute_table_stats (ANALYZE): one column-pruned scan of
     // the current snapshot's live rows -> table-level NDV sketches as a
     // pure-metadata commit, snapshot-scoped (see IceTable.computeTableStats
@@ -402,11 +412,16 @@ object IceLiteProcedures {
         out(view)
       })))
 
-  private def loadTable(cat: IceCatalog, ident: String): IceTable = {
-    val parts = ident.split("\\.", 2)
+  private def ident(name: String): (String, String) = {
+    val parts = name.split("\\.", 2)
     require(parts.length == 2,
-      s"procedure table argument must be '<namespace>.<table>', got '$ident'")
-    cat.loadTable(parts(0), parts(1))
+      s"procedure table argument must be '<namespace>.<table>', got '$name'")
+    (parts(0), parts(1))
+  }
+
+  private def loadTable(cat: IceCatalog, name: String): IceTable = {
+    val (ns, t) = ident(name)
+    cat.loadTable(ns, t)
   }
 }
 

@@ -178,11 +178,7 @@ private[v2] class IceLiteReplaceGroupsBatchWrite(
     val prev = m.currentSnapshot
     val visible = prev.map(p => FileStats.visible(fs, p)).getOrElse(Nil)
     val replaced = op.scannedPaths
-    // legacy carried entries (unknown rows) cannot fall back to the
-    // previous total here — the carried set EXCLUDES the replaced files,
-    // so derive real counts from footers (also heals the manifest)
-    val carried = FileStats.ensureRows(hadoopConf,
-      visible.filterNot(f => replaced.contains(f.path)))
+    val carried = visible.filterNot(f => replaced.contains(f.path))
     val carriedDirs = prev.map(p => FileStats.dataDirsOf(fs, p)).getOrElse(Nil)
       .filter(d =>
         carried.exists(f => fs.makeQualified(new Path(f.path)).toString
@@ -203,7 +199,6 @@ private[v2] class IceLiteReplaceGroupsBatchWrite(
       dataDirs = carriedDirs ++ delDirs :+ dataDir.toString,
       addedFiles = added.map(_.path), addedRows = addedRows,
       totalRows = carriedRows + addedRows - carriedDeletes.map(_.rows).sum,
-      addedFileCount = added.length.toLong,
       schemaDdl = m.schemaDdl,
       files = (carried ++ added).sortBy(_.path),
       deletes = carriedDeletes,

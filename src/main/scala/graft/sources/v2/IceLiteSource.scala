@@ -183,8 +183,7 @@ private[v2] object IceLiteV2 {
     */
   def schemaAt(meta: graft.icelite.TableMeta,
       snap: graft.icelite.SnapshotMeta): StructType =
-    StructType.fromDDL(
-      if (snap != null && snap.schemaDdl.nonEmpty) snap.schemaDdl else meta.schemaDdl)
+    StructType.fromDDL(if (snap != null) snap.schemaDdl else meta.schemaDdl)
 
   def buildTable(warehouse: String, meta: graft.icelite.TableMeta,
       fs: org.apache.hadoop.fs.FileSystem,
@@ -195,8 +194,7 @@ private[v2] object IceLiteV2 {
     val snap = pinnedSnapshot(meta, snapshotId)
     // plan strictly from the committed manifest — never from directory
     // listings, which could surface uncommitted output of failed or
-    // speculative write tasks. Legacy snapshots (no inline manifest) fall
-    // back to a listing with unknown stats.
+    // speculative write tasks.
     val files: Seq[FileStat] = fromSnapshotId match {
       // in changelog mode `fromSnapshotId` is the STREAM's start offset,
       // not a batch incremental scan (whose append-only contract a MOR
@@ -614,7 +612,7 @@ private[v2] class IceLiteScanBuilder(
   override def pushLimit(n: Int): Boolean = {
     limit = n
     exactLimit = mayClaimExact && deletes.isEmpty && aggResult.isEmpty &&
-      files.forall(_.rows >= 0) && exactOf(pushed).length == pushed.length
+      exactOf(pushed).length == pushed.length
     exactLimit
   }
 
@@ -930,7 +928,6 @@ private[v2] object ManifestAgg {
     // set (callers pre-prune `files` by partition-exact filters and pass
     // only the rest here)
     if (pushedFilters.nonEmpty) return None
-    if (files.exists(_.rows < 0)) return None // legacy manifest: unknown rows
 
     val grouping = agg.groupByExpressions().toSeq
     if (grouping.isEmpty)
@@ -1124,17 +1121,6 @@ private[v2] object IceLiteMeta {
   private def inline(schema: StructType, rows: Seq[Array[Any]]): View =
     (schema, Seq(InlineRows.of(rows)), None)
 
-  /** The snapshots that can contribute rows to `.all_files`/`.all_entries`.
-    * A snapshot without a manifest whose inline (or, on legacy metadata,
-    * listed) file set is empty holds no file — an empty `replace` writes no
-    * manifest and keeps only its empty data directory — so it neither
-    * serves a row nor forces the whole history inline.
-    */
-  private def withFiles(meta: graft.icelite.TableMeta,
-      fs: org.apache.hadoop.fs.FileSystem): Seq[graft.icelite.SnapshotMeta] =
-    meta.snapshots.filterNot(s =>
-      s.manifestFile.isEmpty && graft.icelite.FileStats.visible(fs, s).isEmpty)
-
   private def view(meta: graft.icelite.TableMeta,
       fs: org.apache.hadoop.fs.FileSystem, kind: String, tableDir: Path): View = kind match {
     case "entries" =>
@@ -1183,28 +1169,15 @@ private[v2] object IceLiteMeta {
       // (snapshot, status, data_file) where status is relative to that
       // snapshot's own manifest (1 = added by it, 0 = carried). Rows are
       // O(snapshots x files), so like .all_files this serves SNAPSHOT-
-      // PARALLEL when history is fully externalized: each task resolves
-      // its own snapshot's manifest and the status test (path in the
-      // doc's OWN addedPaths) is self-contained — zero driver data.
+      // PARALLEL: each task resolves its own snapshot's manifest and the
+      // status test (path in the doc's OWN addedPaths) is self-contained —
+      // zero driver data.
       val schema = StructType.fromDDL(
         "snapshot_id BIGINT, status INT, " +
           "data_file STRUCT<path: STRING, rows: BIGINT, bytes: BIGINT>")
-      val live = withFiles(meta, fs)
-      if (live.nonEmpty && live.forall(s =>
-          s.manifestFile.nonEmpty && s.addedFiles.isEmpty))
-        (schema, live.map(s => SnapshotEntries(s.snapshotId, s.manifestFile)),
-          Some("manifest-parallel"))
-      else {
-        // pre-manifest (in-memory/legacy) snapshots are metadata-sized
-        // by construction: inline rows
-        val rows = meta.snapshots.flatMap { s =>
-          val added = graft.icelite.FileStats.addedPathsOf(fs, s)
-            .map(graft.icelite.FileStats.normPath).toSet
-          graft.icelite.FileStats.visible(fs, s).map(f =>
-            SnapshotEntries.row(s.snapshotId, added, f))
-        }
-        (schema, Seq(InlineRows(rows)), None)
-      }
+      if (meta.snapshots.isEmpty) inline(schema, Nil)
+      else (schema, meta.snapshots.map(s => SnapshotEntries(s.snapshotId, s.manifestFile)),
+        Some("manifest-parallel"))
     case "all_manifests" =>
       // every manifest DOCUMENT reachable from any snapshot, with the
       // referencing snapshot and its depth in the delta chain (0 = the
@@ -1215,7 +1188,7 @@ private[v2] object IceLiteMeta {
       val schema = StructType.fromDDL(
         "snapshot_id BIGINT, path STRING, length_bytes BIGINT, " +
           "depth INT, is_delta BOOLEAN")
-      val rows = meta.snapshots.filter(_.manifestFile.nonEmpty).flatMap { s =>
+      val rows = meta.snapshots.flatMap { s =>
         val b = Seq.newBuilder[Array[Any]]
         var path = s.manifestFile
         var depth = 0
@@ -1304,12 +1277,12 @@ private[v2] object IceLiteMeta {
       val schema = StructType.fromDDL(
         "made_current_at BIGINT, snapshot_id BIGINT, parent_id BIGINT, " +
           "is_current_ancestor BOOLEAN")
-      // parent fallback + lineage walk live on TableMeta (parentOf /
-      // currentAncestors) — the ONE spelling `.entries`,
-      // `.all_delete_files`, rollback_to_timestamp, and ancestors_of share
+      // the lineage walk lives on TableMeta (currentAncestors) — the ONE
+      // spelling `.entries`, `.all_delete_files`, rollback_to_timestamp,
+      // and ancestors_of share
       val ancestors = meta.currentAncestors.map(_.snapshotId).toSet
       val rows = meta.snapshots.map(s => Array[Any](
-        s.timestampMs, s.snapshotId, meta.parentOf(s),
+        s.timestampMs, s.snapshotId, s.parentId,
         ancestors(s.snapshotId)))
       inline(schema, rows)
     case "manifests" =>
@@ -1320,13 +1293,13 @@ private[v2] object IceLiteMeta {
       val schema = StructType.fromDDL(
         "snapshot_id BIGINT, path STRING, length_bytes BIGINT, " +
           "added_files BIGINT, chain_len INT")
-      val rows = meta.snapshots.filter(_.manifestFile.nonEmpty).map { s =>
+      val rows = meta.snapshots.map { s =>
         val (len, chain) =
           try (fs.getFileStatus(new Path(s.manifestFile)).getLen,
             graft.icelite.MetaIo.readManifestDocShallow(fs, s.manifestFile).chainLen)
           catch { case _: java.io.FileNotFoundException => (-1L, -1) }
         Array[Any](s.snapshotId, s.manifestFile, len,
-          graft.icelite.FileStats.addedCount(s), chain)
+          s.addedFileCount, chain)
       }
       inline(schema, rows)
     case "partitions" =>
@@ -1337,11 +1310,9 @@ private[v2] object IceLiteMeta {
       val schema = StructType.fromDDL(
         "partition STRING, file_count BIGINT, row_count BIGINT, bytes BIGINT")
       meta.currentSnapshot match {
-        case Some(s) if s.manifestFile.nonEmpty =>
+        case Some(s) =>
           (schema, Seq(PartitionsManifest(s.manifestFile)), Some("manifest-parallel"))
-        case other =>
-          (schema, Seq(InlineRows(PartitionsManifest.rows(
-            other.map(s => graft.icelite.FileStats.visible(fs, s)).getOrElse(Nil)))), None)
+        case None => inline(schema, Nil)
       }
     case "stats" =>
       // per-column table statistics from the CURRENT snapshot's manifest —
@@ -1394,7 +1365,7 @@ private[v2] object IceLiteMeta {
           "is_current BOOLEAN")
       val rows = meta.snapshots.map(s => Array[Any](
         s.snapshotId, s.timestampMs, s.operation,
-        graft.icelite.FileStats.addedCount(s),
+        s.addedFileCount,
         s.addedRows, s.totalRows, s.snapshotId == meta.currentSnapshotId))
       inline(schema, rows)
     // `data_files` is Iceberg's name-split spelling of the same rows:
@@ -1403,16 +1374,11 @@ private[v2] object IceLiteMeta {
     case "files" | "data_files" =>
       val schema = StructType.fromDDL("path STRING, rows BIGINT, bytes BIGINT")
       meta.currentSnapshot match {
-        // committed snapshots: ship only the manifest PATH to the executor
-        // and parse there — the driver never materializes O(files) rows
-        // (both manifest formats parse executor-side)
-        case Some(s) if s.manifestFile.nonEmpty =>
+        // ship only the manifest PATH to the executor and parse there —
+        // the driver never materializes O(files) rows
+        case Some(s) =>
           (schema, Seq(FilesManifest(s.manifestFile)), Some("manifest-parallel"))
-        // in-memory / pre-upgrade metadata: inline rows (metadata-sized)
-        case other =>
-          val rows = other.map(s => graft.icelite.FileStats.visible(fs, s))
-            .getOrElse(Nil).map(f => Array[Any](f.path, f.rows, f.bytes))
-          inline(schema, rows)
+        case None => inline(schema, Nil)
       }
     case "delete_files" =>
       // the outstanding delete FILES of the current snapshot — Iceberg's
@@ -1471,26 +1437,12 @@ private[v2] object IceLiteMeta {
       // adding snapshot; files later rewritten away still appear under
       // the snapshot that introduced them). One input partition PER
       // SNAPSHOT, each parsing its own manifest executor-side — driver
-      // cost stays O(snapshots) however many files history holds. Tables
-      // with any pre-manifest (in-memory/legacy) snapshot serve inline:
-      // those snapshots are metadata-sized by construction.
+      // cost stays O(snapshots) however many files history holds.
       val schema = StructType.fromDDL(
         "snapshot_id BIGINT, path STRING, rows BIGINT, bytes BIGINT")
-      // parallel only when every snapshot holding files is fully
-      // externalized (legacy bare-array manifests keep addedFiles INLINE on
-      // the snapshot — the executor-parsed document would not see them)
-      val live = withFiles(meta, fs)
-      if (live.nonEmpty && live.forall(s =>
-          s.manifestFile.nonEmpty && s.addedFiles.isEmpty))
-        (schema, live.map(s => SnapshotAddedFiles(s.snapshotId, s.manifestFile)),
-          Some("manifest-parallel"))
-      else {
-        val rows = meta.snapshots.flatMap(s =>
-          SnapshotAddedFiles.rows(s.snapshotId,
-            graft.icelite.FileStats.addedPathsOf(fs, s),
-            graft.icelite.FileStats.visible(fs, s)))
-        (schema, Seq(InlineRows(rows)), None)
-      }
+      if (meta.snapshots.isEmpty) inline(schema, Nil)
+      else (schema, meta.snapshots.map(s => SnapshotAddedFiles(s.snapshotId, s.manifestFile)),
+        Some("manifest-parallel"))
     case other => throw new IllegalArgumentException(
       s"unknown icelite metadata table '$other' (have: ${names.mkString(", ")})")
   }
@@ -1616,56 +1568,32 @@ private[v2] object PartitionsManifest {
 }
 
 /** `.all_files`, one partition per snapshot: the task resolves that
-  * snapshot's manifest and emits its added entries.
+  * snapshot's manifest and emits its ADDED entries with their stats.
   */
 private[v2] case class SnapshotAddedFiles(snapshotId: Long, manifestPath: String)
     extends MetaPart {
   def open(conf: Configuration): (Iterator[InternalRow], () => Unit) = {
     val doc = MetaPart.manifest(conf, manifestPath)
-    (SnapshotAddedFiles.rows(snapshotId, doc.addedPaths, doc.files).iterator,
+    val added = doc.addedPaths.map(graft.icelite.FileStats.normPath).toSet
+    (doc.files.iterator.filter(f => added(graft.icelite.FileStats.normPath(f.path)))
+      .map(f => InternalRow(snapshotId, UTF8String.fromString(f.path), f.rows, f.bytes)),
       MetaPart.noRelease)
-  }
-}
-
-/** Row algebra of `.all_files`: a snapshot's ADDED entries with stats from
-  * its visible manifest; legacy snapshots whose manifest predates per-file
-  * stats degrade to unknown rows (-1) rather than vanishing.
-  */
-private[v2] object SnapshotAddedFiles {
-  def rows(snapshotId: Long, addedPaths: Seq[String],
-      visible: Seq[graft.icelite.FileStat]): Seq[InternalRow] = {
-    val added = addedPaths.map(graft.icelite.FileStats.normPath).toSet
-    val entries = visible.filter(f =>
-      added(graft.icelite.FileStats.normPath(f.path)))
-    if (entries.nonEmpty || addedPaths.isEmpty)
-      entries.map(f => InternalRow(snapshotId, UTF8String.fromString(f.path), f.rows, f.bytes))
-    else addedPaths.map(p => InternalRow(snapshotId, UTF8String.fromString(p), -1L, 0L))
   }
 }
 
 /** `.all_entries`, one partition per snapshot: the task resolves that
   * snapshot's manifest (delta chains included) and emits every visible
-  * entry with its status.
+  * entry with its status (1 = added by the snapshot, 0 = carried).
   */
 private[v2] case class SnapshotEntries(snapshotId: Long, manifestPath: String)
     extends MetaPart {
   def open(conf: Configuration): (Iterator[InternalRow], () => Unit) = {
     val doc = MetaPart.manifest(conf, manifestPath)
     val added = doc.addedPaths.map(graft.icelite.FileStats.normPath).toSet
-    (doc.files.iterator.map(SnapshotEntries.row(snapshotId, added, _)), MetaPart.noRelease)
+    (doc.files.iterator.map(f => InternalRow(snapshotId,
+      if (added(graft.icelite.FileStats.normPath(f.path))) 1 else 0,
+      InternalRow(UTF8String.fromString(f.path), f.rows, f.bytes))), MetaPart.noRelease)
   }
-}
-
-/** Row algebra of `.all_entries`: one row per (snapshot, visible file),
-  * status from the snapshot's own add list — shared by the snapshot-
-  * parallel partition and the legacy inline path.
-  */
-private[v2] object SnapshotEntries {
-  def row(snapshotId: Long, addedNorm: Set[String],
-      f: graft.icelite.FileStat): InternalRow = InternalRow(
-    snapshotId,
-    if (addedNorm(graft.icelite.FileStats.normPath(f.path))) 1 else 0,
-    InternalRow(UTF8String.fromString(f.path), f.rows, f.bytes))
 }
 
 /** `.position_deletes`, one partition per outstanding position-delete
@@ -2208,8 +2136,7 @@ private[v2] class IceLiteScan(
     override def sizeInBytes(): OptionalLong =
       OptionalLong.of(planned.map(_._1.bytes).sum)
     override def numRows(): OptionalLong =
-      if (planned.exists(_._1.rows < 0)) OptionalLong.empty()
-      else if (exactLimit) OptionalLong.of(math.min(limit.toLong, planned.map(_._1.rows).sum))
+      if (exactLimit) OptionalLong.of(math.min(limit.toLong, planned.map(_._1.rows).sum))
       else OptionalLong.of(planned.map(_._1.rows).sum)
     override def columnStats()
         : java.util.Map[org.apache.spark.sql.connector.expressions.NamedReference,
@@ -2346,13 +2273,6 @@ private[v2] class IceLiteMicroBatchStream(
       case _ => ReadLimit.allAvailable()
     }
 
-  /** One metadata load serving both the snapshot log and the FileSystem
-    * handle — latestOffset runs per trigger, so loading twice doubles
-    * version-hint + v*.json reads on the streaming hot path.
-    */
-  protected def currentMetaFs: (graft.icelite.TableMeta,
-      org.apache.hadoop.fs.FileSystem) = IceLiteV2.loadMeta(warehouse, ns, tbl)
-
   /** The (file, byte) caps a ReadLimit carries, composite-flattened. The
     * ONE decoder both this stream and the changelog subclass use — a new
     * limit kind handled here reaches both, so they cannot diverge again
@@ -2372,7 +2292,7 @@ private[v2] class IceLiteMicroBatchStream(
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[IceOffset].snapshotId
-    val (m, fsys) = currentMetaFs
+    val m = currentMeta
     val head = availableNowEnd.getOrElse(m.currentSnapshotId)
     val (maxF, maxB) = readCaps(limit)
     if (maxF.isEmpty && maxB.isEmpty) return IceOffset(head)
@@ -2387,13 +2307,12 @@ private[v2] class IceLiteMicroBatchStream(
     var open = true
     while (open && it.hasNext) {
       val s = it.next()
-      val n = graft.icelite.FileStats.addedCount(s)
-      // Under a byte cap: O(1) from the commit-time inline byte count on
-      // current metadata (only pre-upgrade snapshots fall back to their
-      // cached manifest), and the loop breaks at the first non-fitting
+      val n = s.addedFileCount
+      // Under a byte cap: O(1) from the commit-time inline byte count,
+      // and the loop breaks at the first non-fitting
       // snapshot — so per-trigger cost tracks the admitted window, not
       // the pending backlog.
-      val b = if (maxB.isDefined) graft.icelite.FileStats.addedBytes(fsys, s) else 0L
+      val b = if (maxB.isDefined) s.addedByteCount else 0L
       val fits = maxF.forall(usedF + n <= _) && maxB.forall(usedB + b <= _)
       if (admitted == 0 || fits) {
         to = s.snapshotId; usedF += n; usedB += b; admitted += 1
@@ -2655,7 +2574,7 @@ private[v2] class IceLiteColumnarReader(
       /* useOffHeap = */ false, /* capacity = */ 4096)
     // Spark's reader base downcasts to the mapred flavor of FileSplit (which
     // extends the mapreduce one), so that is the class to hand it.
-    // A zero/unknown length (legacy manifest entries) must not become an
+    // A zero length (no byte count recorded) must not become an
     // empty split — stat the file instead.
     val p = new Path(file)
     val len = if (length > 0) length else p.getFileSystem(c).getFileStatus(p).getLen

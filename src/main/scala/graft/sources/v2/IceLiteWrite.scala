@@ -490,10 +490,6 @@ private[v2] class IceLiteBatchWrite(
                 s"falls outside the overwrite condition ${fls.mkString(", ")}"))
             visibleNow.filterNot(satisfies)
         }
-      if (isOverwrite)
-        require(carried.forall(_.rows >= 0),
-          s"overwrite of $ns.$table: carried legacy files have unknown row " +
-            "counts — compact first")
       val prevDeletes = prev.map(p => FileStats.deletesOf(fs, p)).getOrElse(Nil)
       def qualify(p: String) = fs.makeQualified(new Path(p)).toString
       // opt-in serializable overwrite: any file this commit would DROP
@@ -534,7 +530,6 @@ private[v2] class IceLiteBatchWrite(
         dataDirs = dataDirs,
         addedFiles = added.map(_.path), addedRows = rows,
         totalRows = totalRows,
-        addedFileCount = added.length.toLong,
         schemaDdl = m.schemaDdl,
         files = (carried ++ added).sortBy(_.path),
         // appends never touch existing files: outstanding position
@@ -664,7 +659,6 @@ private[v2] class IceLiteStreamingWrite(
         // upper bound while equality debt is outstanding (matched-row
         // counts are unknown by design); a fold restores exact totals
         totalRows = prev.map(_.totalRows).getOrElse(0L) + rows,
-        addedFileCount = added.length.toLong,
         schemaDdl = m.schemaDdl,
         files = (carried ++ added).sortBy(_.path),
         deletes = prev.map(p => FileStats.deletesOf(fs, p)).getOrElse(Nil) ++
@@ -1495,10 +1489,10 @@ private[v2] class IceLiteStagedTable(
           snapshotId = 1L, timestampMs = System.currentTimeMillis(),
           operation = "replace", dataDirs = dataDirs,
           addedFiles = added.map(_.path), addedRows = rows, totalRows = rows,
-          addedFileCount = added.length.toLong, schemaDdl = schema0.toDDL,
+          schemaDdl = schema0.toDDL,
           files = added.sortBy(_.path), parentId = 0L))
       MetaIo.commit(fs, tableDir, graft.icelite.TableMeta(
-        formatVersion = 1, namespace = ns, name = tbl,
+        formatVersion = graft.icelite.TableMeta.FormatVersion, namespace = ns, name = tbl,
         schemaDdl = schema0.toDDL, partitionBy = partitionBy,
         currentSnapshotId = if (snaps.isEmpty) 0L else 1L,
         snapshots = snaps, version = 1,

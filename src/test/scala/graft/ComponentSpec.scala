@@ -292,6 +292,40 @@ class ComponentSpec extends SparkSpec {
     assert(upsertWith("r_regionkey", "")._1 == 0)
   }
 
+  test("a format-1 table exits 1 with the upgrade step in the GELF error") {
+    import spark.implicits._
+    val d = dataDir("fmt1")
+    val wh = scratch("component-fmt1-wh")
+    val t = new IceCatalog(spark, wh).createTable("lake", "old_t", Seq(1L).toDF("id").schema)
+    t.append(Seq(1L, 2L).toDF("id"))
+    // the same metadata labeled format 1: what an older build left behind
+    val head = Paths.get(wh, "lake", "old_t", "metadata", s"v${t.meta.version}.json")
+    Files.writeString(head, Files.readString(head)
+      .replace("\"formatVersion\" : 2", "\"formatVersion\" : 1"))
+    Files.delete(head.resolveSibling(s".${head.getFileName}.crc")) // now stale
+    writeConfig(d,
+      s"""{"action": "run", "parameters": {
+         |  "catalog": {"warehouse": "$wh"},
+         |  "source": {"namespace": "lake", "table_name": "old_t"}}}""".stripMargin)
+    val sock = new java.net.DatagramSocket()
+    try {
+      sock.setSoTimeout(5000)
+      val code = ComponentMain.execute(spark, d, env = Map(
+        "KBC_LOGGER_ADDR" -> "127.0.0.1",
+        "KBC_LOGGER_PORT" -> sock.getLocalPort.toString,
+        "KBC_LOGGER_TYPE" -> "udp"))
+      assert(code == 1, "a format-1 table is a user error, not UNEXPECTED")
+      // lifecycle info first, then the error
+      val frames = (1 to 2).map { _ =>
+        val pkt = new java.net.DatagramPacket(new Array[Byte](8192), 8192)
+        sock.receive(pkt)
+        new String(pkt.getData, 0, pkt.getLength, java.nio.charset.StandardCharsets.UTF_8)
+      }
+      assert(frames(1).contains("\"level\":3") &&
+        frames(1).contains("system.upgrade('lake.old_t')"), frames(1))
+    } finally sock.close()
+  }
+
   test("storage api client retries then succeeds") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)

@@ -818,17 +818,18 @@ class DsV2Spec extends SparkSpec {
       s"expected one batch per snapshot at cap=1 file, got ${batches.get()}")
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     // Inline byte accounting: every commit records addedByteCount, and it
-    // equals the manifest-derived fallback — so byte-capped latestOffset
-    // stays O(1) per pending snapshot instead of scanning manifests
+    // equals the bytes of the snapshot's added files in its manifest — so
+    // byte-capped latestOffset stays O(1) per pending snapshot instead of
+    // scanning manifests
     val tblN = new graft.icelite.IceCatalog(spark, wh).loadTable("lake", "n")
-    val fsN = new org.apache.hadoop.fs.Path(wh)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     tblN.snapshots.foreach { sn =>
+      val added = tblN.addedFilesOf(sn).map(graft.icelite.FileStats.normPath).toSet
+      val manifestBytes = tblN.visibleFiles(sn)
+        .filter(f => added(graft.icelite.FileStats.normPath(f.path))).map(_.bytes).sum
       assert(sn.addedByteCount > 0,
         s"snapshot ${sn.snapshotId} lacks an inline added-byte count")
-      assert(sn.addedByteCount ==
-        graft.icelite.FileStats.addedBytes(fsN, sn.copy(addedByteCount = -1L)),
-        s"inline byte count diverges from manifest fallback at ${sn.snapshotId}")
+      assert(sn.addedByteCount == manifestBytes,
+        s"inline byte count diverges from the manifest at ${sn.snapshotId}")
     }
     // BYTE-based admission: a 1-byte cap still admits one snapshot per
     // batch (progress guarantee) — the robust cap when file sizes skew

@@ -445,51 +445,6 @@ class IceliteSpec extends SparkSpec {
     assert(tbl.meta.version == v, "rollback to current must not commit")
   }
 
-  test("deleteWhere heals legacy stats and never death-proofs foreign partitions") {
-    import spark.implicits._
-    val cat = new IceCatalog(spark, scratch("legacy-delete"))
-    val df = (1L to 30L).map(i => (i, Seq("a", "b", "c")(i.toInt % 3), s"v$i"))
-      .toDF("k", "g", "v")
-    val tbl = cat.createTable("ns", "t", df.schema, partitionBy = Seq("g"))
-    tbl.append(df)
-    // doctor the committed manifest: the g=c file loses its row count and
-    // stats (the pre-manifest legacy shape); counts/dirs stay inline so
-    // externalize re-writes a fresh manifest with the doctored entries
-    val tableDir = cat.tablePath("ns", "t")
-    val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = tbl.meta
-    val cur = m.currentSnapshot.get
-    val doctored = tbl.visibleFiles(cur).map(f =>
-      if (f.path.contains("g=c"))
-        f.copy(rows = -1L, min = Map.empty, max = Map.empty, nulls = Map.empty)
-      else f)
-    graft.icelite.MetaIo.commit(fs, tableDir, m.copy(
-      snapshots = m.snapshots.dropRight(1) :+ cur.copy(
-        files = doctored,
-        addedFiles = graft.icelite.FileStats.addedPathsOf(fs, cur),
-        dataDirs = graft.icelite.FileStats.dataDirsOf(fs, cur),
-        manifestFile = ""),
-      version = m.version + 1))
-    val t2 = cat.loadTable("ns", "t")
-    assert(t2.visibleFiles(t2.meta.currentSnapshot.get).exists(_.rows < 0),
-      "fixture must start with a legacy unknown-row file")
-    // the partition-exact DELETE must drop ONLY g=a — the round-10
-    // regression classified canMatch-unscreened files as whole-file dead,
-    // silently dropping foreign partitions whenever a legacy file existed
-    t2.deleteWhere(Seq(org.apache.spark.sql.sources.EqualTo("g", "a")))
-    val left = t2.toDF
-    assert(left.filter(col("g") === "a").count() == 0)
-    assert(left.filter(col("g") === "b").count() == 10,
-      "foreign partition g=b must survive a DELETE WHERE g='a'")
-    assert(left.filter(col("g") === "c").count() == 10,
-      "the legacy-stats partition g=c must survive too")
-    val snap = t2.meta.currentSnapshot.get
-    assert(snap.totalRows == 20, s"row accounting must stay exact: $snap")
-    // and the commit healed the manifest: no unknown-row entries remain
-    assert(t2.visibleFiles(snap).forall(_.rows >= 0),
-      "deleteWhere must heal legacy entries via footer reads")
-  }
-
   test("cherry-pick re-applies an orphaned append; refusals are loud") {
     val cat = new IceCatalog(spark, scratch("cherrypick"))
     val tbl = cat.createTable("ns", "t", nation.schema)
@@ -1092,7 +1047,7 @@ class IceliteSpec extends SparkSpec {
     val t2 = tbl.deleteWhere(Seq(EqualTo("g", "a")))
     val snap = t2.meta.currentSnapshot.get
     assert(snap.operation == "delete" &&
-      graft.icelite.FileStats.addedCount(snap) == 0,
+      snap.addedFileCount == 0,
       s"whole-partition delete must write nothing: $snap")
     val after = t2.visibleFiles(snap).map(_.path).toSet
     assert(after.subsetOf(before) && after.nonEmpty,
@@ -1397,7 +1352,7 @@ class IceliteSpec extends SparkSpec {
     def mk(i: Int): String = {
       val f = new java.io.File(dir, s"manifest-lru-$i.json")
       java.nio.file.Files.writeString(f.toPath,
-        s"""[{"path":"f$i.parquet","rows":$i,"bytes":1}]""")
+        s"""{"files":[{"path":"f$i.parquet","rows":$i,"bytes":1}]}""")
       f.toString
     }
     // flood with cap+5 fresh manifests: the 5 eldest (plus anything other

@@ -16,7 +16,7 @@ class RetryCommitSpec extends AnyFunSuite {
   private lazy val tableDir: Path = {
     val dir = fs.makeQualified(new Path("target/test-scratch/retry-commit"))
     fs.delete(dir, true)
-    MetaIo.commit(fs, dir, TableMeta(formatVersion = 1, namespace = "ns",
+    MetaIo.commit(fs, dir, TableMeta(formatVersion = TableMeta.FormatVersion, namespace = "ns",
       name = "t", schemaDdl = "id BIGINT", partitionBy = Nil,
       currentSnapshotId = 0L, snapshots = Nil, version = 1))
     dir

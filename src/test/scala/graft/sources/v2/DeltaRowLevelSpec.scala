@@ -42,7 +42,7 @@ class DeltaRowLevelSpec extends SparkSpec {
       "MOR UPDATE must not rewrite any pre-existing data file")
     val dels = tbl.deletesOf(snap).filterNot(_.isEquality)
     assert(dels.map(_.rows).sum == 1, s"exactly one position deleted: $dels")
-    assert(graft.icelite.FileStats.addedCount(snap) == 1,
+    assert(snap.addedFileCount == 1,
       "exactly one reinsert file added")
     assert(spark.sql(s"SELECT v FROM $ident WHERE k = 42").collect()
       .map(_.getString(0)).toSeq == Seq("UP"))

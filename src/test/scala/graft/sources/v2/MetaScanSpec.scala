@@ -15,9 +15,10 @@ import graft.icelite.IceCatalog
   *    position delete and an equality delete (manifest-parallel and
   *    delete-file-parallel serving);
   *  - `zero`: an append, then a replace with an empty frame — the current
-  *    snapshot has zero files and no manifest, so `.files` and
-  *    `.partitions` serve inline rows, while `.all_files` and
-  *    `.all_entries` skip the fileless snapshot and stay snapshot-parallel.
+  *    snapshot has zero files and, like every committed snapshot, its own
+  *    manifest, so `.files` and `.partitions` serve manifest-parallel,
+  *    `.manifests`/`.all_manifests` list it, and `.all_files` and
+  *    `.all_entries` give it its own (empty) partition.
   * Volatile parts are normalized: the warehouse prefix, UUIDs in file
   * names, the writer's task id in data-file and position-delete file
   * names, commit timestamps and manifest byte lengths (those embed the
@@ -329,7 +330,7 @@ class MetaScanSpec extends SparkSpec {
     "zero.all_data_files" ->
       """snapshot_id BIGINT,path STRING,rows BIGINT,bytes BIGINT
         |icelite metadata lake.zero.all_data_files (manifest-parallel)
-        |partitions=1
+        |partitions=2
         |1|<wh>/lake/zero/data/snap-00001-<id>/part-00000-<task>-000.parquet|1|635
         |1|<wh>/lake/zero/data/snap-00001-<id>/part-00001-<task>-000.parquet|1|636
         |1|<wh>/lake/zero/data/snap-00001-<id>/part-00002-<task>-000.parquet|1|636
@@ -341,7 +342,7 @@ class MetaScanSpec extends SparkSpec {
     "zero.all_entries" ->
       """snapshot_id BIGINT,status INT,data_file STRUCT<path: STRING, rows: BIGINT, bytes: BIGINT>
         |icelite metadata lake.zero.all_entries (manifest-parallel)
-        |partitions=1
+        |partitions=2
         |1|1|[<wh>/lake/zero/data/snap-00001-<id>/part-00000-<task>-000.parquet,1,635]
         |1|1|[<wh>/lake/zero/data/snap-00001-<id>/part-00001-<task>-000.parquet,1,636]
         |1|1|[<wh>/lake/zero/data/snap-00001-<id>/part-00002-<task>-000.parquet,1,636]
@@ -349,7 +350,7 @@ class MetaScanSpec extends SparkSpec {
     "zero.all_files" ->
       """snapshot_id BIGINT,path STRING,rows BIGINT,bytes BIGINT
         |icelite metadata lake.zero.all_files (manifest-parallel)
-        |partitions=1
+        |partitions=2
         |1|<wh>/lake/zero/data/snap-00001-<id>/part-00000-<task>-000.parquet|1|635
         |1|<wh>/lake/zero/data/snap-00001-<id>/part-00001-<task>-000.parquet|1|636
         |1|<wh>/lake/zero/data/snap-00001-<id>/part-00002-<task>-000.parquet|1|636
@@ -358,10 +359,11 @@ class MetaScanSpec extends SparkSpec {
       """snapshot_id BIGINT,path STRING,length_bytes BIGINT,depth INT,is_delta BOOLEAN
         |icelite metadata lake.zero.all_manifests
         |partitions=1
-        |1|<wh>/lake/zero/metadata/manifest-00001-<uuid>.json|<len>|0|false""",
+        |1|<wh>/lake/zero/metadata/manifest-00001-<uuid>.json|<len>|0|false
+        |2|<wh>/lake/zero/metadata/manifest-00002-<uuid>.json|<len>|0|false""",
     "zero.data_files" ->
       """path STRING,rows BIGINT,bytes BIGINT
-        |icelite metadata lake.zero.data_files
+        |icelite metadata lake.zero.data_files (manifest-parallel)
         |partitions=1""",
     "zero.delete_files" ->
       """path STRING,kind STRING,rows BIGINT,key_columns STRING
@@ -377,7 +379,7 @@ class MetaScanSpec extends SparkSpec {
         |partitions=1""",
     "zero.files" ->
       """path STRING,rows BIGINT,bytes BIGINT
-        |icelite metadata lake.zero.files
+        |icelite metadata lake.zero.files (manifest-parallel)
         |partitions=1""",
     "zero.history" ->
       """made_current_at BIGINT,snapshot_id BIGINT,parent_id BIGINT,is_current_ancestor BOOLEAN
@@ -389,7 +391,8 @@ class MetaScanSpec extends SparkSpec {
       """snapshot_id BIGINT,path STRING,length_bytes BIGINT,added_files BIGINT,chain_len INT
         |icelite metadata lake.zero.manifests
         |partitions=1
-        |1|<wh>/lake/zero/metadata/manifest-00001-<uuid>.json|<len>|4|0""",
+        |1|<wh>/lake/zero/metadata/manifest-00001-<uuid>.json|<len>|4|0
+        |2|<wh>/lake/zero/metadata/manifest-00002-<uuid>.json|<len>|0|0""",
     "zero.metadata_log_entries" ->
       """version INT,file STRING,latest_snapshot_id BIGINT,snapshot_count INT
         |icelite metadata lake.zero.metadata_log_entries
@@ -399,7 +402,7 @@ class MetaScanSpec extends SparkSpec {
         |3|<wh>/lake/zero/metadata/v3.json|2|2""",
     "zero.partitions" ->
       """partition STRING,file_count BIGINT,row_count BIGINT,bytes BIGINT
-        |icelite metadata lake.zero.partitions
+        |icelite metadata lake.zero.partitions (manifest-parallel)
         |partitions=1""",
     "zero.position_deletes" ->
       """file_path STRING,pos BIGINT,delete_file STRING
