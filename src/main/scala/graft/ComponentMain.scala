@@ -5,8 +5,11 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.json.{JacksonGenerator, JSONOptions}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 import graft.icelite.IceCatalog
 import graft.model._
@@ -138,9 +141,15 @@ object ComponentMain {
             throw new UserException(
               s"query_preview accepts read-only SELECT queries only (got ${n.nodeName})")
           }
+          // the Limit is the collected root, so Spark plans CollectLimit
+          // (or TakeOrderedAndProject under an ORDER BY) and reads only the
+          // partitions the cap needs; the rows become JSON on the driver
           val preview =
-            try spark.sql(sql).limit(PreviewRows).toJSON.collect()
-            catch { case NonFatal(e) =>
+            try {
+              val df = spark.sql(sql).limit(PreviewRows)
+              previewJson(df.schema, df.collect(),
+                spark.sessionState.conf.sessionLocalTimeZone)
+            } catch { case NonFatal(e) =>
               throw new UserException(s"query failed: ${e.getMessage}")
             }
           println(preview.mkString("[", ", ", "]"))
@@ -165,6 +174,22 @@ object ComponentMain {
     * stays small and collect-safe regardless of the query.
     */
   private val PreviewRows = 100
+
+  /** `rows` as `Dataset.toJSON` prints them: one JSON object per row, the
+    * same generator and options, formatted on the driver.
+    */
+  private def previewJson(schema: StructType, rows: Array[Row], timeZone: String): Seq[String] = {
+    val toInternal = ExpressionEncoder(schema).createSerializer()
+    val out = new java.io.CharArrayWriter()
+    val gen = new JacksonGenerator(schema, out, new JSONOptions(Map.empty[String, String], timeZone))
+    try rows.toSeq.map { r =>
+      gen.write(toInternal(r))
+      gen.flush()
+      val json = out.toString
+      out.reset()
+      json
+    } finally gen.close()
+  }
 
   private def warehouseOf(cfg: ComponentConfig): String = {
     val wh = cfg.parameters.catalog.warehouse

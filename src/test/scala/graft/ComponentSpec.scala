@@ -166,14 +166,23 @@ class ComponentSpec extends SparkSpec {
          |    "query": "SELECT n_name, n_regionkey FROM nation_t WHERE n_regionkey = 1 ORDER BY n_name"}
          |}}""".stripMargin)
     val buf = new ByteArrayOutputStream()
-    val code = Console.withOut(new PrintStream(buf)) {
-      ComponentMain.execute(spark, d)
+    var code = -1
+    val plans = plansDuring {
+      code = Console.withOut(new PrintStream(buf)) {
+        ComponentMain.execute(spark, d)
+      }
     }
     assert(code == 0)
     val out = buf.toString.trim
     assert(out.startsWith("[") && out.endsWith("]"), s"not a JSON array: $out")
     assert(out.contains("\"n_regionkey\":1"), out)
     assert(!out.contains("\"n_regionkey\":2"), "WHERE clause ignored")
+    // the preview is the top-k of the ORDER BY, printed as Dataset.toJSON
+    // prints it
+    assert(plans.exists(_.contains("TakeOrderedAndProject")), plans)
+    def toJson(q: String) = spark.sql(q).limit(100).toJSON.collect().mkString("[", ", ", "]")
+    assert(out == toJson(
+      "SELECT n_name, n_regionkey FROM nation_t WHERE n_regionkey = 1 ORDER BY n_name"))
 
     // empty query previews the table, capped at 100 rows
     writeConfig(d,
@@ -181,10 +190,14 @@ class ComponentSpec extends SparkSpec {
          |  "catalog": {"warehouse": "$wh"},
          |  "source": {"namespace": "lake", "table_name": "nation_t"}}}""".stripMargin)
     val buf2 = new ByteArrayOutputStream()
-    assert(Console.withOut(new PrintStream(buf2)) {
-      ComponentMain.execute(spark, d)
-    } == 0)
+    val jobs = jobsDuring {
+      assert(Console.withOut(new PrintStream(buf2)) {
+        ComponentMain.execute(spark, d)
+      } == 0)
+    }
     assert(buf2.toString.trim.split("\\},\\s*\\{").length == 25)
+    assert(buf2.toString.trim == toJson("SELECT * FROM nation_t"))
+    assert(jobs.length == 1, s"a plain preview must run one Spark job: $jobs")
 
     // statements are refused as a user error, not executed
     writeConfig(d,
@@ -226,6 +239,9 @@ class ComponentSpec extends SparkSpec {
       ComponentMain.execute(spark, d)
     }
     assert(code == 0)
+    assert(buf.toString.trim == spark.sql(
+      s"SELECT * FROM icelite_changes('$wh', 'lake.nation_t', $first)")
+      .limit(100).toJSON.collect().mkString("[", ", ", "]"))
     val rows = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(buf.toString.trim).elements().asScala.toSeq
     // the second snapshot appended nation keys 12..24, nothing else changed

@@ -49,4 +49,22 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(l)
     descs.toArray.toSeq.map(_.toString).filterNot(_ == sentinel)
   }
+
+  /** The executed plan of every query that completes while `f` runs,
+    * writes and other commands included. Query-execution listeners share
+    * the job listeners' queue, so [[jobsDuring]]'s sentinel drains both.
+    */
+  def plansDuring(f: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try jobsDuring(f) finally spark.listenerManager.unregister(l)
+    plans.toArray.toSeq.map(_.toString)
+  }
 }

@@ -4,9 +4,9 @@
 Runs `perfbench/run.py` untraced in two checkouts, one pair per seed, the
 same seed on both sides, alternating which side goes first (even pairs:
 parent first). For every end-to-end metric of BENCHMARK.json it prints the
-parent and change medians, the parent's spread (IQR / median), the change
-in %, how many pairs the change wins and a verdict, plus failed/attempted
-ops per side. Verdicts, first match wins:
+median and quartiles (Q1, Q3) of each side, the parent's spread (IQR /
+median), the change in %, how many pairs the change wins and a verdict,
+plus failed/attempted ops per side. Verdicts, first match wins:
 
   worse       the change median is worse than the parent median by more
               than the metric's `bound` in BENCHMARK.json;
@@ -19,11 +19,11 @@ ops per side. Verdicts, first match wins:
 Exits 1 if any metric is `worse` or the change failed more ops than the
 parent.
 
-With `--kinds`, it also prints each operation kind's median time per side,
-over every timed op of that kind in all runs of the side. The times come
-from the `[perfbench] cycle <c> <kind> <ms> ms` lines of the run's
-`perfbench/work/<workload>/jvm-stderr.log`, read right after the run, so
-the table shows which kinds of operation moved.
+With `--kinds`, it also prints each operation kind's median and quartile
+times per side, over every timed op of that kind in all runs of the side.
+The times come from the `[perfbench] cycle <c> <kind> <ms> ms` lines of
+the run's `perfbench/work/<workload>/jvm-stderr.log`, read right after the
+run, so the table shows which kinds of operation moved.
 
 Usage:
   python3 tools/bench_pairs.py <parent-checkout> <change-checkout> \\
@@ -53,6 +53,13 @@ def quartiles(xs):
         hi = min(lo + 1, len(s) - 1)
         return s[lo] + (s[hi] - s[lo]) * (pos - lo)
     return q(0.25), q(0.75)
+
+
+def spread(xs):
+    """Median, Q1 and Q3 of `xs`; NaN for each when `xs` is empty."""
+    if not xs:
+        return (float("nan"),) * 3
+    return (statistics.median(xs), *quartiles(xs))
 
 
 def verdict(pv, cv, higher, bound):
@@ -138,28 +145,32 @@ def main():
 
     n = len(results["parent"])
     print(f"{a.workload}: {n} alternated pairs, seeds {a.seeds}")
-    print(f"{'metric':<16}{'parent':>12}{'change':>12}{'delta':>9}"
+    print(f"{'metric':<16}{'parent':>10}{'p Q1':>10}{'p Q3':>10}"
+          f"{'change':>10}{'c Q1':>10}{'c Q3':>10}{'delta':>9}"
           f"{'parent IQR/med':>16}{'wins':>8}  verdict")
     worse = False
     for m in metrics:
         name, higher = m["name"], m["better"] == "higher"
         pv = [r["metrics"][name]["value"] for r in results["parent"]]
         cv = [r["metrics"][name]["value"] for r in results["change"]]
-        pm, cm = statistics.median(pv), statistics.median(cv)
-        q1, q3 = quartiles(pv)
+        pm, q1, q3 = spread(pv)
+        cm, cq1, cq3 = spread(cv)
         wins = sum((c > p) if higher else (c < p) for p, c in zip(pv, cv))
         v = verdict(pv, cv, higher, m["bound"])
         worse |= v == "worse"
-        print(f"{name:<16}{pm:>12.4g}{cm:>12.4g}{100 * (cm / pm - 1):>+8.1f}%"
+        print(f"{name:<16}{pm:>10.4g}{q1:>10.4g}{q3:>10.4g}"
+              f"{cm:>10.4g}{cq1:>10.4g}{cq3:>10.4g}{100 * (cm / pm - 1):>+8.1f}%"
               f"{(q3 - q1) / pm:>16.3f}{wins:>5}/{n}  {v}")
     if a.kinds:
-        print(f"{'kind':<22}{'parent ms':>12}{'change ms':>12}{'delta':>9}{'n':>10}")
+        print(f"{'kind':<22}{'parent ms':>10}{'p Q1':>9}{'p Q3':>9}"
+              f"{'change ms':>10}{'c Q1':>9}{'c Q3':>9}{'delta':>9}{'n':>10}")
         for k in sorted(set(kinds["parent"]) | set(kinds["change"])):
             pk, ck = kinds["parent"].get(k, []), kinds["change"].get(k, [])
-            pm = statistics.median(pk) if pk else float("nan")
-            cm = statistics.median(ck) if ck else float("nan")
+            pm, q1, q3 = spread(pk)
+            cm, cq1, cq3 = spread(ck)
             delta = f"{100 * (cm / pm - 1):>+8.1f}%" if pk and ck else f"{'':>9}"
-            print(f"{k:<22}{pm:>12.1f}{cm:>12.1f}{delta}{len(pk):>5}/{len(ck)}")
+            print(f"{k:<22}{pm:>10.1f}{q1:>9.1f}{q3:>9.1f}"
+                  f"{cm:>10.1f}{cq1:>9.1f}{cq3:>9.1f}{delta}{len(pk):>5}/{len(ck)}")
     failed = {}
     for side in ("parent", "change"):
         att = sum(r["attempted"] for r in results[side])
